@@ -98,93 +98,9 @@ object Bench {
     errors = (errors1 ++ errors2).distinct
     // a query that failed ALL attempts of a pass is an error, not flaky
     flaky = flaky.diff(errors.toSet)
-    // per-query values at 1 ms resolution: full doubles would triple the
-    // line length for digits that are pure scheduler noise
-    def fmtQ(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmtQ(v) }
-      .mkString("{", ",", "}")
-    val errs = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // the compact stdout line must stay bounded even in a mass-failure
-    // round (123 quoted names would regrow it past a tail capture —
-    // exactly the failure the compact line exists to avoid): cap the
-    // inline list and carry the full one in the durable artifact
-    val errsCompact = {
-      val names = errors.sorted
-      (names.take(5).map("\"" + _ + "\"") ++
-        (if (names.size > 5) Seq(s"\"...${names.size - 5}_more\"")
-         else Nil)).mkString("[", ",", "]")
-    }
-    // a broken query's fail-fast must never inflate the headline into a
-    // bogus "speedup": the total is only comparable when every query ran,
-    // so a run with errors reports value:null (comparators treat it as a
-    // failed run) — the per-query map still carries the successful timings
-    val total =
-      if (errors.nonEmpty) "null"
-      else "%.3f".formatLocal(java.util.Locale.ROOT, results.values.sum)
-    val total2 =
-      if (errors.nonEmpty) "null"
-      else "%.3f".formatLocal(java.util.Locale.ROOT, results2.values.sum)
-    // value_min = sum over queries of min(pass1, pass2) — best-of-4+
-    // per query. Three consecutive rounds violated the <10% two-pass
-    // rule on identical-or-exonerated code because ambient host
-    // contention lands on ONE pass's scattered queries; the cross-pass
-    // per-query minimum is resistant to that (contention would have to
-    // hit the SAME query in BOTH passes to survive into the sum). This
-    // is the round-over-round comparator from r17 on; value/value2 stay
-    // raw as the run-level determinism diagnostic.
-    val totalMin =
-      if (errors.nonEmpty) "null"
-      else "%.3f".formatLocal(java.util.Locale.ROOT,
-        results.map { case (k, v) =>
-          math.min(v, results2.getOrElse(k, v))
-        }.sum)
-    val flakyJson = flaky.toSeq.sorted.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val flakyCompact = {
-      val names = flaky.toSeq.sorted
-      (names.take(5).map("\"" + _ + "\"") ++
-        (if (names.size > 5) Seq(s"\"...${names.size - 5}_more\"")
-         else Nil)).mkString("[", ",", "]")
-    }
-    // the full per-query map goes to the durable target/bench.json only;
-    // stdout gets a COMPACT line (<300 chars even at 200 queries) because
-    // the driver tail-captures a bounded window of output — a 3.5k-char
-    // line gets its head truncated and fails to parse
     val filtered = only.isDefined
-    val filteredField = if (filtered) "\"filtered\":true," else ""
-    val qs2 = results2.map { case (k, v) => s"\"" + k + "\":" + fmtQ(v) }
-      .mkString("{", ",", "}")
-    val full =
-      s"""{"metric":"total","value":$total,"value2":$total2,"value_min":$totalMin,"unit":"sec",$filteredField"queries":$qs,"queries2":$qs2,"errors":$errs,"flaky":$flakyJson,"sf":"$sfDir"}"""
-    // Round-17 verdict #2: the driver's per-query comparison parses the
-    // tail-captured stdout line, not target/bench.json, and was blind
-    // for two rounds. But the capture window is EXACTLY 2000 chars
-    // (every BENCH_r*.json tail is len 2000, and rounds 1-8 — when this
-    // line carried the full 3.5 kB map — all have parsed=None because
-    // the line's HEAD was cut off). 266 named timings cannot fit in
-    // 2000 chars, so the line carries the head of the map: per-query
-    // best-of-both-passes (same basis as value_min), sorted descending,
-    // as many entries as keep the line under ~1900 chars (~60-70
-    // entries — every query over the ~0.3 s fixed-action floor, i.e.
-    // everything with signal; the flat tail is pure per-action overhead
-    // and indistinguishable query-to-query anyway). "queries_partial"
-    // flags the truncation; the FULL pass-1/pass-2 maps are in
-    // target/bench.json, unchanged.
-    val qMin: Map[String, Double] = results.map { case (k, v) =>
-      k -> math.min(v, results2.getOrElse(k, v))
-    }
-    val headBudget = 1900
-    val headline =
-      s"""{"metric":"total","value":$total,"value2":$total2,"value_min":$totalMin,"unit":"sec",$filteredField"n":${results.size},"queries_partial":true,"queries":{},"errors":$errsCompact,"flaky":$flakyCompact,"sf":"$sfDir"}"""
-    var room = headBudget - headline.length
-    val topEntries = qMin.toSeq.sortBy { case (k, v) => (-v, k) }
-      .iterator.map { case (k, v) => s"\"$k\":${fmtQ(v)}" }
-      .takeWhile { e => val ok = room - (e.length + 1) >= 0
-        if (ok) room -= e.length + 1; ok }
-      .toSeq
-    val qsTop = topEntries.mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":$total,"value2":$total2,"value_min":$totalMin,"unit":"sec",$filteredField"n":${results.size},"queries_partial":true,"queries":$qsTop,"errors":$errsCompact,"flaky":$flakyCompact,"sf":"$sfDir"}"""
+    val (full, compact) =
+      report(results, results2, errors, flaky.toSeq, filtered, sfDir)
     // a SPARK_GRAFT_ONLY subset must NEVER overwrite the durable
     // full-run artifact: a round-over-round comparator reading
     // target/bench.json would mistake a one-query triage run for a
@@ -200,5 +116,83 @@ object Bench {
     System.out.flush()
     // hard-exit: no shutdown-hook chatter after the JSON line
     System.exit(0)
+  }
+
+  /** The durable `target/bench.json` line and the compact stdout line.
+    * The artifact keeps full doubles, so `value == Σ queries` holds
+    * exactly; only the compact line rounds to 1 ms.
+    */
+  private[graft] def report(results: Map[String, Double],
+      results2: Map[String, Double], errors: Seq[String],
+      flaky: Seq[String], filtered: Boolean,
+      sfDir: String): (String, String) = {
+    // per-query values at 1 ms resolution on stdout: full doubles would
+    // triple the line length for digits that are pure scheduler noise
+    def fmtQ(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    def quoted(names: Seq[String]) =
+      names.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // the compact stdout line must stay bounded even in a mass-failure
+    // round (123 quoted names would regrow it past a tail capture —
+    // exactly the failure the compact line exists to avoid): cap the
+    // inline list and carry the full one in the durable artifact
+    def capped(names: Seq[String]) = {
+      val sorted = names.sorted
+      (sorted.take(5).map("\"" + _ + "\"") ++
+        (if (sorted.size > 5) Seq(s"\"...${sorted.size - 5}_more\"")
+         else Nil)).mkString("[", ",", "]")
+    }
+    // value_min = sum over queries of min(pass1, pass2) — best-of-4+
+    // per query. Three consecutive rounds violated the <10% two-pass
+    // rule on identical-or-exonerated code because ambient host
+    // contention lands on ONE pass's scattered queries; the cross-pass
+    // per-query minimum is resistant to that (contention would have to
+    // hit the SAME query in BOTH passes to survive into the sum). This
+    // is the round-over-round comparator from r17 on; value/value2 stay
+    // raw as the run-level determinism diagnostic.
+    val qMin: Map[String, Double] = results.map { case (k, v) =>
+      k -> math.min(v, results2.getOrElse(k, v))
+    }
+    // a broken query's fail-fast must never inflate the headline into a
+    // bogus "speedup": the total is only comparable when every query ran,
+    // so a run with errors reports value:null (comparators treat it as a
+    // failed run) — the per-query map still carries the successful timings
+    def totalsJson(fmt: Double => String) = {
+      def t(m: Map[String, Double]) =
+        if (errors.nonEmpty) "null" else fmt(m.values.sum)
+      s""""value":${t(results)},"value2":${t(results2)},"value_min":${t(qMin)}"""
+    }
+    val filteredField = if (filtered) "\"filtered\":true," else ""
+    // the full per-query map goes to the durable target/bench.json only;
+    // stdout gets a COMPACT line (<2000 chars at any query count) because
+    // the driver tail-captures a bounded window of output — a 3.5k-char
+    // line gets its head truncated and fails to parse
+    def fullMap(m: Map[String, Double]) =
+      m.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val full =
+      s"""{"metric":"total",${totalsJson(_.toString)},"unit":"sec",$filteredField"queries":${fullMap(results)},"queries2":${fullMap(results2)},"errors":${quoted(errors)},"flaky":${quoted(flaky)},"sf":"$sfDir"}"""
+    // Round-17 verdict #2: the driver's per-query comparison parses the
+    // tail-captured stdout line, not target/bench.json, and was blind
+    // for two rounds. But the capture window is EXACTLY 2000 chars
+    // (every BENCH_r*.json tail is len 2000, and rounds 1-8 — when this
+    // line carried the full 3.5 kB map — all have parsed=None because
+    // the line's HEAD was cut off). 266 named timings cannot fit in
+    // 2000 chars, so the line carries the head of the map: per-query
+    // best-of-both-passes (same basis as value_min), sorted descending,
+    // as many entries as keep the line under ~1900 chars (~60-70
+    // entries — every query over the ~0.3 s fixed-action floor, i.e.
+    // everything with signal; the flat tail is pure per-action overhead
+    // and indistinguishable query-to-query anyway). "queries_partial"
+    // appears only when the map was cut; the FULL pass-1/pass-2 maps
+    // are in target/bench.json.
+    def compactLine(partial: Boolean, queries: String) =
+      s"""{"metric":"total",${totalsJson(fmtQ)},"unit":"sec",$filteredField"n":${results.size},${if (partial) "\"queries_partial\":true," else ""}"queries":$queries,"errors":${capped(errors)},"flaky":${capped(flaky)},"sf":"$sfDir"}"""
+    var room = 1900 - compactLine(partial = true, "{}").length
+    val topEntries = qMin.toSeq.sortBy { case (k, v) => (-v, k) }
+      .iterator.map { case (k, v) => s"\"$k\":${fmtQ(v)}" }
+      .takeWhile { e => val ok = room - (e.length + 1) >= 0
+        if (ok) room -= e.length + 1; ok }
+      .toSeq
+    (full, compactLine(topEntries.size < qMin.size,
+      topEntries.mkString("{", ",", "}")))
   }
 }

@@ -1,5 +1,6 @@
 package graft.expr.catalyst
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -59,29 +60,29 @@ case class DotProduct(left: Expression, right: Expression)
   * public API in Spark 4; the registry + call_function route is).
   */
 object GraftFunctions {
+  /** Idempotent: a name already in the session's registry is skipped
+    * (check before inject), so per-query callers do not replace the
+    * same builders again and again.
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mongo_cmp", exprs => MongoCmp(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mongo_sort_key", exprs => MongoSortKey(exprs(0)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    def add(name: String)(builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    add("dot_product")(exprs => DotProduct(exprs(0), exprs(1)))
+    add("mongo_cmp")(exprs => MongoCmp(exprs(0), exprs(1)))
+    add("mongo_sort_key")(exprs => MongoSortKey(exprs(0)))
     // aggregate: the analyzer wraps a bare AggregateFunction in an
     // AggregateExpression, so the builder returns the function itself
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_min", exprs => TopKMin(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hashed_margin",
-      exprs => HashedMarginInt(exprs(0), exprs(1)), "built-in")
+    add("top_k_min")(exprs => TopKMin(exprs(0), exprs(1)))
+    add("hashed_margin")(exprs => HashedMarginInt(exprs(0), exprs(1)))
     // Spark's own codegen'd Bloom probe (BloomFilterMightContain) is
     // registered only in the INTERNAL registry (it backs runtime join
     // filters); surface it for Dedup.dedupAgainst's reference-corpus
     // pre-filter. The filter argument must be foldable (a lit of the
     // sketch bytes) or a scalar subquery — the expression type-checks
     // that itself.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
+    add("bloom_might_contain")(exprs => org.apache.spark.sql.catalyst
+      .expressions.BloomFilterMightContain(exprs(0), exprs(1)))
   }
 }

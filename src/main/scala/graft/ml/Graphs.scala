@@ -96,18 +96,20 @@ object Graphs {
           expr("pr_rank div deg").as("c"))
         .join(e, "src")
         .groupBy(col("dst").as("node")).agg(sum(col("c")).as("s"))
-      val next = nodes.join(sums, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"),
-          (lit(base) +
-            expr("(85 * (coalesce(s, 0L) + ds)) div 100"))
-            .as("pr_rank"))
-        .localCheckpoint(true)
+      // pinned on creation: an iteration that throws leaves every
+      // earlier iterate registered for releaseAll
+      val next = CacheLifecycle.pinCheckpointed(
+        nodes.join(sums, Seq("node"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(col("node"),
+            (lit(base) +
+              expr("(85 * (coalesce(s, 0L) + ds)) div 100"))
+              .as("pr_rank"))
+          .localCheckpoint(true))
       // drop the previous round's checkpointed blocks immediately
       CacheLifecycle.releaseCheckpoint(ranks)
       ranks = next
     }
-    CacheLifecycle.pinCheckpointed(ranks)
     ranks
   }
 

@@ -349,6 +349,10 @@ object Recipes {
       record: (String, DataFrame) => DataFrame,
       df: DataFrame, idCol: String, htmlCol: String, urlCol: String,
       blocklist: DataFrame, badWords: Seq[String]): DataFrame = {
+    val reserved = Seq("blocked", "blocked_by", "text_clean",
+      "__kept_text", "__host").filter(df.columns.contains)
+    require(reserved.isEmpty, "recipe input must not carry the front " +
+      s"stage's working columns: ${reserved.mkString(", ")}")
     val inCols = df.columns.map(col).toSeq
     val sc = df.sparkSession.sparkContext
     sc.setJobDescription("recipe front: input+html_to_text+blocklist")

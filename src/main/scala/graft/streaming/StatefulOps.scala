@@ -94,7 +94,9 @@ object StatefulOps {
   }
 
   /** Streaming `$deduplicate`: first row per key passes, the rest drop
-    * while the key's state entry lives. Schema-preserving: rows ride
+    * while the key's state entry lives. "First" is by arrival: the
+    * transport `__ord` when the frame carries one (copies sharing an
+    * `__ord` keep any one of them). Schema-preserving: rows ride
     * through a JSON pack/unpack around the stateful shuffle.
     */
   def deduplicate(df: DataFrame, key: Column,
@@ -103,10 +105,14 @@ object StatefulOps {
     ensureRocksDb(spark)
     import spark.implicits._
     val schema = df.schema
+    val ord =
+      if (df.columns.contains("__ord"))
+        coalesce(col("__ord").cast("long"), lit(0L))
+      else lit(0L)
     val out = df
-      .select(key.cast("string").as("__k"),
+      .select(key.cast("string").as("__k"), ord.as("__o"),
         to_json(struct(df.columns.map(col): _*)).as("__row"))
-      .as[(String, String)]
+      .as[(String, Long, String)]
       .groupByKey(_._1)
       .transformWithState(new DedupProcessor(cacheWindowMs),
         // TTL state is wall-clock based and needs ProcessingTime mode
@@ -522,7 +528,7 @@ object StatefulOps {
   * WITHOUT refreshing it, like a cache entry's fixed lifetime).
   */
 final class DedupProcessor(ttlMs: Option[Long])
-    extends StatefulProcessor[String, (String, String), String] {
+    extends StatefulProcessor[String, (String, Long, String), String] {
   @transient private var seen: ValueState[Boolean] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
@@ -531,12 +537,13 @@ final class DedupProcessor(ttlMs: Option[Long])
     seen = getHandle.getValueState("seen", Encoders.scalaBoolean, ttl)
   }
 
-  override def handleInputRows(key: String, rows: Iterator[(String, String)],
+  override def handleInputRows(key: String,
+      rows: Iterator[(String, Long, String)],
       tv: TimerValues): Iterator[String] =
     if (seen.exists()) Iterator.empty
     else {
       seen.update(true)
-      rows.take(1).map(_._2)
+      Iterator(rows.minBy(_._2)._3)
     }
 }
 

@@ -184,6 +184,12 @@ object KafkaIo {
 /** Test Io over file streams + memory sinks: the golden-folder convention
   * (docs/testing.md:12) — feed messages as JSON files per topic dir,
   * observe outputs in named in-memory tables.
+  *
+  * Each micro-batch re-lists the files it reads, and above 32 paths that
+  * listing is a Spark job with one task per file by default, so `source`
+  * caps its parallelism at the session's core count (unless the user set
+  * it): a catch-up batch of hundreds of files then schedules one listing
+  * task per core, not per file, and still lists in parallel at scale.
   */
 final class FileStreamIo(root: String, schemas: Map[String, StructType],
     /** appended to memory-table names: lets several harness runs (and
@@ -202,6 +208,7 @@ final class FileStreamIo(root: String, schemas: Map[String, StructType],
 
   def source(spark: SparkSession, kind: String, name: String,
       options: Map[String, String] = Map.empty): DataFrame = {
+    capListingParallelism(spark)
     // $throttle admission in the file harness: files stand in for
     // messages, so the per-second cap maps to maxFilesPerTrigger
     val filesPerTrigger = options.get("maxPerSecond")
@@ -231,6 +238,20 @@ final class FileStreamIo(root: String, schemas: Map[String, StructType],
             get_json_object(col("value"), "$._id").as("key"),
             col("value"), ord)
     }
+  }
+
+  /** `FileStreamSource.getBatch` re-lists with `min(files, parallelism)`
+    * tasks past the 32-path threshold (default parallelism 10000). Set
+    * before each query starts, so the query's cloned session copies it;
+    * a user's value is kept, as `StatefulOps.ensureRocksDb` keeps an
+    * explicit state store.
+    */
+  private def capListingParallelism(spark: SparkSession): Unit = {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    // getAll holds the explicitly set entries only; get(key, "") would
+    // throw a type mismatch on this int entry
+    if (!spark.conf.getAll.contains(key))
+      spark.conf.set(key, spark.sparkContext.defaultParallelism.toLong)
   }
 
   def sink(kind: String, name: String, df: DataFrame,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ml.{CacheLifecycle, Dedup}
+import graft.ml.{CacheLifecycle, Dedup, Graphs}
 
 /** The ml operators pin internal caches their returned plans depend on
   * (band tables, signatures, codebooks, the components label
@@ -56,6 +56,38 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert((persistedIds & pinned).isEmpty,
       "the checkpointed label blocks must be reclaimable after the " +
         "clusters are consumed")
+  }
+
+  test("a pageRank iteration that throws leaves nothing pinned") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.execution.LogicalRDD
+    import spark.implicits._
+    CacheLifecycle.releaseAll()
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("s", "d")
+    final class Injected extends RuntimeException("injected failure")
+    // the first plan that reads a checkpointed iterate (a LogicalRDD
+    // carrying pr_rank) is iteration 2's: fail it before it runs
+    object FailSecondIteration extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.exists {
+            case r: LogicalRDD => r.output.exists(_.name == "pr_rank")
+            case _ => false
+          }) throw new Injected
+        plan
+      }
+    }
+    val before = persistedIds
+    val saved = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = saved :+ FailSecondIteration
+    val e =
+      try intercept[Exception](Graphs.pageRank(edges, "s", "d", iters = 3))
+      finally spark.experimental.extraOptimizations = saved
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[Injected]), e.toString)
+    CacheLifecycle.releaseAll()
+    assert((persistedIds -- before).isEmpty,
+      "iteration 1's checkpoint must be released with the other pins")
   }
 
   test("releaseAll is empty-safe and returns the pin count") {

@@ -177,6 +177,20 @@ class MongoOrderSparkSpec extends AnyFunSuite {
     assert(rows.forall(_.getString(1).nonEmpty))
   }
 
+  test("GraftFunctions.register skips a name already registered") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    // a fresh session: its own registry, so the shared one stays intact
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    val own: Seq[Expression] => Expression = exprs => exprs.head
+    registry.createOrReplaceTempFunction("mongo_cmp", own, "scala_udf")
+    graft.expr.catalyst.GraftFunctions.register(session)
+    assert(registry.lookupFunctionBuilder(FunctionIdentifier("mongo_cmp"))
+      .get eq own)
+    assert(registry.functionExists(FunctionIdentifier("dot_product")))
+  }
+
   test("schemaless $min/$max pick by Mongo cross-type order") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

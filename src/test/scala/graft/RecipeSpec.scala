@@ -76,6 +76,15 @@ class RecipeSpec extends AnyFunSuite {
     graft.ml.CacheLifecycle.releaseAll()
   }
 
+  test("an input column named like a front-stage working column is refused") {
+    val bl = Seq("bad.com").toDF("entry")
+    val e = intercept[IllegalArgumentException] {
+      Recipes.curate(corpus.withColumn("blocked", lit(false)), "id",
+        "html", "url", bl, seed, "y")
+    }
+    assert(e.getMessage.contains("blocked"))
+  }
+
   test("curateFunnelByDomain: per-domain docs sum to the funnel per " +
     "stage, and losses attribute to the right domains") {
     val bl = Seq("bad.com").toDF("entry")

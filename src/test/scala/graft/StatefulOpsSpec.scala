@@ -73,6 +73,28 @@ class StatefulOpsSpec extends AnyFunSuite {
     io.stopAll()
   }
 
+  test("$deduplicate keeps the first copy by arrival within one micro-batch") {
+    val dir = Files.createTempDirectory("graft-ddord").toString
+    Files.createDirectories(Paths.get(s"$dir/ordin"))
+    // the later copy is the larger file: the file source packs larger
+    // files first, so an arbitrary pick would tend to keep it
+    Files.writeString(Paths.get(s"$dir/ordin/m0002.json"),
+      """{"_id":"b","corr":"c1","note":"the later copy, padded"}""")
+    Files.writeString(Paths.get(s"$dir/ordin/m0001.json"),
+      """{"_id":"a","corr":"c1"}""")
+    val io = new FileStreamIo(dir, Map.empty, maxFilesPerTrigger = 10)
+    new AppRunner(spark, io, Env(spark)).run(
+      """{"application":"ddord","version":"1.0","parts":[
+           {"type":"stream","name":"s","fromTopic":"ordin",
+            "toTopic":"out_ddord",
+            "pipeline":[{"$deduplicate":{"expression":"$corr"}}]}]}""")
+    io.processAll()
+    val ids = spark.table("out_ddord").collect()
+      .map(r => graft.json.Js.parse(r.getString(1)).get("_id").asText())
+    io.stopAll()
+    assert(ids.toSeq == Seq("a"))
+  }
+
   test("event-time $delay delivers on watermark advance, not wall clock") {
     // deliverAt comes from the DATA: a row is delivered when the
     // WATERMARK (max deliverAt seen − lateness) passes its deliverAt.
