@@ -102,12 +102,6 @@ object Fns {
   def dot(a: Column, b: Column): Column =
     call_function("dot_product", a, b)
 
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
-  /** Cosine rounded to 6 decimals: rank-stable across engines. */
-  def cosine6(a: Column, b: Column): Column = round(cosine(a, b), 6)
-
   /** Project (id, nv) where nv is the L2-normalized f64 embedding. Norms
     * are computed ONCE per row (materialized column between selects), so
     * pairwise similarity downstream is a plain dot product — at 100 TB the

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Fns._
@@ -11,10 +11,11 @@ import Fns._
   *    `top_k_min` partial aggregate per query. Fine when |queries| is
   *    small; the corpus side stays partitioned and the exchange carries at
   *    most k rows per query.
-  *  - `ivfTopK` is the scale path: a deterministic IVF — centroids are a
-  *    fixed id-prefix sample (a stand-in for k-means; the assignment and
-  *    search plumbing is identical), vectors are assigned to their nearest
-  *    centroid cell, queries probe only the best `nprobe` cells. Search
+  *  - `IvfIndex` is the scale path, one index built once and queried:
+  *    `build` assigns vectors to their nearest centroid cell (codebook =
+  *    a deterministic id-prefix sample, a trained `kmeansCentroids`, or
+  *    an explicit one), `search` probes only the best `nprobe` cells per
+  *    query, `save`/`load` keep it on disk between sessions. Search
   *    cost drops by ~nlist/nprobe; everything stays an equi-join on
   *    cell id (shuffle by cell), never an all-pairs product.
   */
@@ -25,7 +26,7 @@ object Similarity {
     *
     * GUARDED exact baseline: |queries| × |corpus| above `maxExactWork`
     * fails fast (two metadata-cheap counts) instead of launching a
-    * nested-loop job that can't finish at scale — `ivfTopK` is the scale
+    * nested-loop job that can't finish at scale — `IvfIndex` is the scale
     * path. Raise the cap explicitly only for a bounded evaluation set
     * (e.g. measuring IVF recall on a sample, see MlQueries.q_knn_recall).
     */
@@ -37,7 +38,7 @@ object Similarity {
       graft.ml.Fns.atMost(corpus, maxExactWork))
     require(nq * nc <= maxExactWork,
       s"bruteForceTopK is the EXACT baseline: ~$nq queries x ~$nc corpus " +
-        "rows of dot products exceed maxExactWork. Use ivfTopK at this " +
+        "rows of dot products exceed maxExactWork. Use IvfIndex at this " +
         "size, or raise maxExactWork for a bounded evaluation set.")
     val c = normalized(corpus, embCol, idCol, "vc")
       .withColumnRenamed(idCol, "nb_id")
@@ -106,9 +107,8 @@ object Similarity {
     * filter-then-refine layout. `candidates > k` buys back the JL
     * distortion (recall → 1 as candidates grows; `SimilaritySpec`
     * measures it). Candidate generation here is the guarded exact pass
-    * (query × corpus, bounded by `maxExactWork`); at corpus scale run
-    * the same projection through `ivfTopKWith` for the candidate stage
-    * instead.
+    * (query × corpus, bounded by `maxExactWork`); at corpus scale search
+    * an `IvfIndex` built with the same `Projection` instead.
     */
   def projectedTopK(corpus: DataFrame, queries: DataFrame, embCol: String,
       idCol: String, k: Int, inDim: Int, outDim: Int, candidates: Int,
@@ -119,8 +119,8 @@ object Similarity {
       graft.ml.Fns.atMost(corpus, maxExactWork))
     require(nq * nc <= maxExactWork,
       s"projectedTopK's candidate stage is exact over ~$nq x ~$nc " +
-        "projected rows, exceeding maxExactWork. Feed the projection " +
-        "through ivfTopKWith for candidate generation at this size.")
+        "projected rows, exceeding maxExactWork. Search an IvfIndex " +
+        "built with this Projection at this size.")
     val pc = normalized(
       randomProjection(corpus, embCol, idCol, inDim, outDim, seed),
       "proj", idCol, "pv").withColumnRenamed(idCol, "nb_id")
@@ -131,28 +131,6 @@ object Similarity {
       .withColumn("cos", ndot6(col("qv"), col("pv")))
       .select(col("query_id"), col("nb_id"), col("cos"))
       .transform(searchTopKDesc(candidates))
-    rerankFullDim(cand, corpus, queries, embCol, idCol, k)
-  }
-
-  /** IVF-accelerated variant of `projectedTopK` — the corpus-scale
-    * composition: candidate generation runs `ivfTopK` IN THE PROJECTED
-    * space (cell assignment, probing and candidate ranking all touch
-    * only the `outDim`-narrow vectors — at 64→16 the dominant
-    * corpus-side shuffle carries 1/4 of the bytes), then the
-    * `candidates` survivors re-rank by full-dimension cosine. Recall
-    * compounds the IVF probe miss and the JL distortion; widen
-    * `nprobe` and `candidates` to buy it back (`SimilaritySpec`
-    * measures the composition on clustered data).
-    */
-  def projectedIvfTopK(corpus: DataFrame, queries: DataFrame,
-      embCol: String, idCol: String, k: Int, inDim: Int, outDim: Int,
-      candidates: Int, nlist: Int, nprobe: Int,
-      seed: String = "proj"): DataFrame = {
-    require(candidates >= k,
-      s"projectedIvfTopK: candidates ($candidates) must be >= k ($k)")
-    val pc = randomProjection(corpus, embCol, idCol, inDim, outDim, seed)
-    val pq = randomProjection(queries, embCol, idCol, inDim, outDim, seed)
-    val cand = ivfTopK(pc, pq, "proj", idCol, candidates, nlist, nprobe)
     rerankFullDim(cand, corpus, queries, embCol, idCol, k)
   }
 
@@ -379,12 +357,12 @@ object Similarity {
     * cell (posexplode → partial-agg mean per (cell, pos) → re-assemble)
     * and re-normalizes. Every step is a narrow pass or a partial
     * aggregation — no all-pairs anything, 100 TB-shaped. Returns a
-    * (idCol = cell id, embCol = centroid) frame for `ivfTopKWith`.
+    * (idCol = cell id, embCol = centroid) frame for `IvfIndex.build`.
     */
   def kmeansCentroids(corpus: DataFrame, embCol: String, idCol: String,
       nlist: Int, iters: Int = 2,
       init: Option[DataFrame] = None): DataFrame = {
-    var centroids = init.getOrElse(corpus.orderBy(col(idCol)).limit(nlist))
+    var centroids = init.getOrElse(idPrefixCodebook(corpus, idCol, nlist))
       .select(col(idCol), col(embCol))
     (0 until iters).foreach { _ =>
       val assigned = assignCells(corpus, centroids, embCol, idCol)
@@ -406,24 +384,9 @@ object Similarity {
     }
     // the codebook is read by every downstream assignment pass; pinned so
     // CacheLifecycle.releaseAll() (or an owning caller's unpersist, e.g.
-    // buildIvfIndex) can reclaim it once the consumer is done
+    // IvfIndex.save) can reclaim it once the consumer is done
     CacheLifecycle.pin(centroids)
   }
-
-  /** IVF ANN with an explicit codebook (e.g. from `kmeansCentroids`). */
-  def ivfTopKWith(corpus: DataFrame, queries: DataFrame,
-      centroids: DataFrame, embCol: String, idCol: String, k: Int,
-      nprobe: Int): DataFrame =
-    ivfSearch(corpus, queries, centroids, embCol, idCol, k, nprobe)
-
-  /** IVF ANN: probe the best `nprobe` cells per query, exact search within.
-    * Centroids = the `nlist` lowest-id vectors (deterministic codebook —
-    * the oracle replays it; `kmeansCentroids` is the trained variant).
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, embCol: String,
-      idCol: String, k: Int, nlist: Int, nprobe: Int): DataFrame =
-    ivfSearch(corpus, queries, corpus.orderBy(col(idCol)).limit(nlist),
-      embCol, idCol, k, nprobe)
 
   // -- product quantization ------------------------------------------------
   // PQ compresses each vector to m sub-codes (u8-scale codebooks): memory
@@ -539,14 +502,9 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
       coarseCentroids: DataFrame, codebook: DataFrame, embCol: String,
       idCol: String, k: Int, m: Int, dim: Int, nprobe: Int): DataFrame = {
-    val cells = assignCells(corpus, coarseCentroids, embCol, idCol)
-      .select(col(idCol).as("nb_id"), col("cell"))
-    // query-side probing is the same partial-aggregate assignment
-    val candidates =
-      assignCellsMulti(queries, coarseCentroids, embCol, idCol, nprobe)
-      .select(col(idCol).as("query_id"), col("cell"))
-      .join(cells, "cell")
-      .where(col("query_id") =!= col("nb_id"))
+    val candidates = IvfIndex
+      .build(corpus, embCol, idCol, centroids = Some(coarseCentroids))
+      .probe(queries, nprobe)
       .select(col("query_id"), col("nb_id"))
     val enc = pqEncode(corpus, codebook, embCol, idCol, m, dim)
       .withColumnRenamed(idCol, "nb_id")
@@ -582,12 +540,6 @@ object Similarity {
       .select(col("query_id"), (col("pos") + 1).as("rank"),
         col("col.nb_id").as("nb_id"), col("col.dist").as("dist"))
 
-  /** As `searchTopKAsc` but ranking cosine DESCENDING (ties to the lowest
-    * id): the sort key negates the cosine (`0.0 -` so a rounded `-0.0`
-    * normalizes, see `probeKey`) and the original cosine rides along as a
-    * trailing struct field — (dist, nb_id) is already a total order, so
-    * the extra field never affects ranking.
-    */
   /** Semantic decontamination — the embedding-space complement of
     * [[Curation.decontaminate]]'s n-gram overlap: drop corpus documents
     * whose embedding lands within cosine `threshold` of ANY benchmark
@@ -617,6 +569,12 @@ object Similarity {
       .withColumn("keep", col("max_bench_cos") < threshold)
   }
 
+  /** As `searchTopKAsc` but ranking cosine DESCENDING (ties to the lowest
+    * id): the sort key negates the cosine (`0.0 -` so a rounded `-0.0`
+    * normalizes, see `probeKey`) and the original cosine rides along as a
+    * trailing struct field — (dist, nb_id) is already a total order, so
+    * the extra field never affects ranking.
+    */
   private def searchTopKDesc(k: Int)(scored: DataFrame): DataFrame =
     scored
       .groupBy(col("query_id"))
@@ -642,7 +600,7 @@ object Similarity {
     require(nq * nc <= maxExactWork,
       s"crossTopK is the EXACT baseline: ~$nq queries x ~$nc corpus " +
         "rows of dot products exceed maxExactWork. Feed marginMineFrom " +
-        "from ivfTopKWith at this size, or raise maxExactWork for a " +
+        "from IvfIndex.search at this size, or raise maxExactWork for a " +
         "bounded evaluation set.")
     val c = normalized(corpus, embCol, idCol, "vc")
       .withColumnRenamed(idCol, "nb_id")
@@ -665,9 +623,9 @@ object Similarity {
     * `threshold`.
     *
     * `ab`/`ba` are the two directions' candidate lists in the
-    * (query_id, nb_id, cos) shape that [[crossTopK]], [[ivfTopK]] and
-    * [[ivfTopKWith]] all emit — brute-force for bounded sides, IVF at
-    * corpus scale; the miner itself never touches the vectors again.
+    * (query_id, nb_id, cos) shape that [[crossTopK]] and
+    * [[IvfIndex.search]] both emit — brute-force for bounded sides, IVF
+    * at corpus scale; the miner itself never touches the vectors again.
     * Neighborhood means use the 1e-6 fixed-point integer-sum form
     * (partition-order-independent, bit-replayable by the oracle — the
     * `kmeansCentroids` discipline); the per-side argmaxes are
@@ -738,10 +696,10 @@ object Similarity {
     * caller joins its positives back on query_id.
     *
     * `cand` is a (query_id, nb_id, cos) candidate list from
-    * [[crossTopK]] / [[ivfTopK]] / [[ivfTopKWith]] — mine from IVF
-    * candidates at corpus scale. The anti-join is equi-keyed, the
-    * ceiling is a narrow filter, and the final top-n is the same
-    * bounded partial aggregate as the searchers — at most n rows per
+    * [[crossTopK]] / [[IvfIndex.search]] — mine from IVF candidates at
+    * corpus scale. The anti-join is equi-keyed, the ceiling is a narrow
+    * filter, and the final top-n is the same bounded partial aggregate
+    * as the searchers — at most n rows per
     * query cross the exchange, never a window.
     */
   def hardNegatives(cand: DataFrame, positives: DataFrame,
@@ -772,7 +730,8 @@ object Similarity {
       positives, queryCol, posCol, n, maxCos)
 
   /** The outcome of `tuneIvf`: parameters a caller can feed straight into
-    * `ivfTopK`/`ivfTopKWith`, plus the sampled recall that justified them.
+    * `IvfIndex.build`/`search`, plus the sampled recall that justified
+    * them.
     */
   final case class IvfTuning(nlist: Int, nprobe: Int, recall: Double)
 
@@ -799,9 +758,6 @@ object Similarity {
     require(n > 1, "tuneIvf needs a non-trivial corpus")
     val nlist = math.min(65536L,
       math.max(8L, math.round(math.sqrt(n.toDouble)))).toInt
-    val cents = centroids.getOrElse(
-      corpus.orderBy(col(idCol)).limit(nlist)
-        .select(col(idCol), col(embCol)))
     // md5-derived hash order (not xxhash64): the SAME deterministic
     // sample replays in any engine — the gate oracle re-derives it
     val sample = corpus
@@ -814,9 +770,9 @@ object Similarity {
     // ONCE and persist for the trial loop — re-running it per doubling
     // would repeat up to log2(nlist) full corpus scans for identical
     // results (only the tiny query-side probing varies between trials)
-    val cells = assignCells(corpus, cents, embCol, idCol)
-      .withColumnRenamed(idCol, "nb_id")
-      .persist()
+    val index = IvfIndex.build(corpus, embCol, idCol, nlist,
+      centroids = centroids)
+    index.cells.persist()
     try {
       val exact = bruteForceTopK(corpus, sample, embCol, idCol, k,
           maxExactWork = 2L * sampleQueries * n)
@@ -826,15 +782,7 @@ object Similarity {
       var recall = 0.0
       var done = false
       while (!done) {
-        val probed =
-          assignCellsMulti(sample, cents, embCol, idCol, nprobe)
-            .select(col(idCol).as("query_id"), col("v").as("vq"),
-              col("cell"))
-        val got = probed.join(cells, "cell")
-          .where(col("query_id") =!= col("nb_id"))
-          .withColumn("cos", ndot6(col("vq"), col("v")))
-          .select(col("query_id"), col("nb_id"), col("cos"))
-          .transform(searchTopKDesc(k))
+        val got = index.search(sample, k, nprobe)
           .select("query_id", "nb_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         recall =
@@ -845,133 +793,161 @@ object Similarity {
       }
       IvfTuning(nlist, nprobe, recall)
     } finally {
-      cells.unpersist()
+      index.cells.unpersist()
       sample.unpersist()
     }
   }
 
-  // -- persisted index -----------------------------------------------------
+  // -- IVF index -----------------------------------------------------------
 
-  /** Build a reusable IVF index on disk: `dir/centroids` holds the
-    * codebook (idCol, embCol) and `dir/cells` the corpus assignment
-    * (nb_id, cell, v — v the normalized f64 vector the search ranks
-    * with). The build is the expensive corpus pass; persisting it splits
-    * index-build from query-serve, the standard layout at corpus scale —
-    * repeated searches (`searchIvfIndex`) read two parquet frames instead
-    * of re-running codebook training and the corpus×centroids assignment.
-    * `kmeansIters > 0` trains the codebook (`kmeansCentroids`); 0 keeps
-    * the deterministic id-prefix codebook. The cells frame stays flat
-    * parquet (the search joins it by cell hash anyway); at very large
-    * nlist, `partitionBy("cell")` would enable probe-side partition
-    * pruning at the price of one file per cell — a layout knob, not a
-    * semantics change.
+  /** The JL projection a projected [[IvfIndex]] searches through:
+    * `randomProjection`'s `inDim` → `outDim` sign matrix from `seed`.
     */
-  def buildIvfIndex(corpus: DataFrame, embCol: String, idCol: String,
-      dir: String, nlist: Int, kmeansIters: Int = 0,
-      /** lay the cells out one directory per cell: the probe-side join
-        * then PRUNES unprobed cells at the scan (nprobe/nlist of the
-        * index read per query batch) at the price of nlist directories —
-        * worth it once the index dwarfs a batch's probed slice
-        */
-      partitionByCell: Boolean = false): Unit = {
-    val cents =
-      if (kmeansIters > 0)
-        kmeansCentroids(corpus, embCol, idCol, nlist, kmeansIters)
-      else corpus.orderBy(col(idCol)).limit(nlist)
-        .select(col(idCol), col(embCol))
-    try {
-      cents.select(col(idCol), col(embCol))
-        .write.mode("overwrite").parquet(s"$dir/centroids")
-      val cells = assignCells(corpus, cents, embCol, idCol)
-        .select(col(idCol).as("nb_id"), col("cell"), col("v"))
-      val w = cells.write.mode("overwrite")
-      (if (partitionByCell) w.partitionBy("cell") else w)
-        .parquet(s"$dir/cells")
-    } finally
-      // kmeansCentroids hands back a persist()-ed codebook; both consumers
-      // (the centroids and cells writes) are parquet-materialized above,
-      // so release it here instead of pinning executor memory per build
-      if (kmeansIters > 0) cents.unpersist()
+  final case class Projection(inDim: Int, outDim: Int, seed: String = "proj")
+
+  /** The `nlist` lowest-id vectors: the deterministic IVF codebook the
+    * oracles replay, and the init `kmeansCentroids` trains from.
+    */
+  private def idPrefixCodebook(corpus: DataFrame, idCol: String,
+      nlist: Int): DataFrame =
+    corpus.orderBy(col(idCol)).limit(nlist)
+
+  /** An IVF index over an embedding column: a codebook `centroids`
+    * (idCol = cell id, centroid vector) and the corpus cell assignment
+    * `cells` (nb_id, cell, v — v the normalized f64 vector the search
+    * ranks with). `search` probes the best `nprobe` cells per query and
+    * ranks exactly within them, so search cost drops by ~nlist/nprobe and
+    * everything stays an equi-join on cell id (shuffle by cell), never an
+    * all-pairs product.
+    *
+    * A `projection` index holds the JL-projected corpus, `outDim/inDim`
+    * of the bytes in memory, on disk and through every probe-side shuffle
+    * (a quarter at 64→16). Its search projects the queries with the same
+    * sign matrix, takes `candidates` per query from the narrow probe, and
+    * re-ranks them by FULL-dimension cosine against the caller's corpus —
+    * the filter-then-refine layout. Recall compounds the probe miss and
+    * the JL distortion; widen `nprobe` and `candidates` to buy it back
+    * (`SimilaritySpec` measures it on clustered data).
+    *
+    * `embCol`/`idCol` name the caller's columns: the queries carry them,
+    * and so does the re-rank corpus of a projected index.
+    */
+  final class IvfIndex private (val centroids: DataFrame,
+      val cells: DataFrame, embCol: String, idCol: String,
+      val projection: Option[Projection], trainedCodebook: Boolean) {
+
+    /** the vector column of `centroids`, and of the probing queries */
+    private def vecCol = if (projection.isDefined) "proj" else embCol
+
+    /** Top-k neighbors per query row (excluding self), ranked by rounded
+      * cosine desc then id asc: (query_id, rank, nb_id, cos). Only a
+      * projected index reads `corpus` (the full-dimension frame it was
+      * built from) and `candidates` (>= k).
+      */
+    def search(queries: DataFrame, k: Int, nprobe: Int,
+        corpus: Option[DataFrame] = None, candidates: Int = 0): DataFrame =
+      projection match {
+        case None => nearest(queries, k, nprobe)
+        case Some(p) =>
+          require(corpus.isDefined, "IvfIndex.search: a projected index " +
+            "re-ranks against the full-dimension corpus; pass corpus")
+          require(candidates >= k,
+            s"IvfIndex.search: candidates ($candidates) must be >= k ($k)")
+          val pq = randomProjection(queries, embCol, idCol, p.inDim,
+            p.outDim, p.seed)
+          rerankFullDim(nearest(pq, candidates, nprobe), corpus.get,
+            queries, embCol, idCol, k)
+      }
+
+    private def nearest(queries: DataFrame, k: Int,
+        nprobe: Int): DataFrame =
+      probe(queries, nprobe)
+        .withColumn("cos", ndot6(col("vq"), col("v")))
+        .select(col("query_id"), col("nb_id"), col("cos"))
+        .transform(searchTopKDesc(k))
+
+    /** Query-side probing — the same partial-aggregate assignment as the
+      * corpus side, whose "v" IS the normalized query vector — then the
+      * cell equi-join: (cell, query_id, vq, nb_id, v), self excluded.
+      */
+    private[Similarity] def probe(queries: DataFrame,
+        nprobe: Int): DataFrame =
+      assignCellsMulti(queries, centroids, vecCol, idCol, nprobe)
+        .select(col(idCol).as("query_id"), col("v").as("vq"), col("cell"))
+        .join(cells, "cell")
+        .where(col("query_id") =!= col("nb_id"))
+
+    /** Write the index to `dir`: `centroids`, `cells` and, for a
+      * projected index, `meta` (in_dim, out_dim, seed, emb_col — a later
+      * session must project its queries with the identical sign matrix,
+      * or it silently probes garbage cells). The build is the expensive
+      * corpus pass; saving it splits index-build from query-serve, so
+      * repeated searches of the `load`-ed index read two parquet frames
+      * instead of re-running codebook training and the corpus×centroids
+      * assignment. `partitionByCell` lays the cells out one directory per
+      * cell: the probe-side join then PRUNES unprobed cells at the scan
+      * (nprobe/nlist of the index read per query batch) at the price of
+      * nlist directories — worth it once the index dwarfs a batch's
+      * probed slice. A trained codebook's persist is released once both
+      * writes have materialized it.
+      */
+    def save(dir: String, partitionByCell: Boolean = false): Unit =
+      try {
+        centroids.select(col(idCol), col(vecCol))
+          .write.mode("overwrite").parquet(s"$dir/centroids")
+        val w = cells.write.mode("overwrite")
+        (if (partitionByCell) w.partitionBy("cell") else w)
+          .parquet(s"$dir/cells")
+        projection.foreach { p =>
+          cells.sparkSession.range(1)
+            .select(lit(p.inDim).as("in_dim"), lit(p.outDim).as("out_dim"),
+              lit(p.seed).as("seed"), lit(embCol).as("emb_col"))
+            .write.mode("overwrite").parquet(s"$dir/meta")
+        }
+      } finally if (trainedCodebook) centroids.unpersist()
   }
 
-  /** Search a `buildIvfIndex` directory: probe the saved codebook, join
-    * the saved cells — identical results to `ivfTopKWith` over the same
-    * corpus/codebook, with the training and corpus-assignment passes
-    * amortized away. Same shuffle shape as the in-memory search: the
-    * cell equi-join and the bounded `top_k_min` per query.
-    */
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, embCol: String, idCol: String, k: Int,
-      nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val cells = spark.read.parquet(s"$dir/cells")
-    val probed = assignCellsMulti(queries, cents, embCol, idCol, nprobe)
-      .select(col(idCol).as("query_id"), col("v").as("vq"), col("cell"))
-    probed.join(cells, "cell")
-      .where(col("query_id") =!= col("nb_id"))
-      .withColumn("cos", ndot6(col("vq"), col("v")))
-      .select(col("query_id"), col("nb_id"), col("cos"))
-      .transform(searchTopKDesc(k))
-  }
+  object IvfIndex {
 
-  /** Disk-resident analog of `projectedIvfTopK`: build the IVF index
-    * over the PROJECTED corpus, so the persisted index is `outDim/inDim`
-    * the size of a full-dimension one (at 64→16, a quarter of the bytes
-    * on disk AND through every probe-side shuffle), and searches re-rank
-    * the narrow candidates against the original corpus at full width.
-    * The projection parameters ride in `dir/meta` so a later session
-    * searches with the identical sign matrix — a seed mismatch would
-    * silently probe garbage cells.
-    */
-  def buildProjectedIvfIndex(corpus: DataFrame, embCol: String,
-      idCol: String, dir: String, inDim: Int, outDim: Int, nlist: Int,
-      kmeansIters: Int = 0, partitionByCell: Boolean = false,
-      seed: String = "proj"): Unit = {
-    val pc = randomProjection(corpus, embCol, idCol, inDim, outDim, seed)
-    buildIvfIndex(pc, "proj", idCol, dir, nlist, kmeansIters,
-      partitionByCell)
-    corpus.sparkSession.range(1)
-      .select(lit(inDim).as("in_dim"), lit(outDim).as("out_dim"),
-        lit(seed).as("seed"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
+    /** Build an index over `corpus`, lazily (no write, action or cache
+      * beyond a trained codebook's own persist). The codebook is
+      * `centroids` when given, else the `nlist` lowest ids (deterministic
+      * — the oracles replay it); `kmeansIters > 0` trains it from that
+      * init (`kmeansCentroids`). With a `projection`, codebook and cells
+      * live in the projected space.
+      */
+    def build(corpus: DataFrame, embCol: String, idCol: String,
+        nlist: Int = 0, kmeansIters: Int = 0,
+        centroids: Option[DataFrame] = None,
+        projection: Option[Projection] = None): IvfIndex = {
+      require(nlist > 0 || centroids.isDefined,
+        "IvfIndex.build: needs nlist > 0 or an explicit codebook")
+      val (src, vecCol) = projection.fold((corpus, embCol)) { p =>
+        (randomProjection(corpus, embCol, idCol, p.inDim, p.outDim,
+          p.seed), "proj")
+      }
+      val cents =
+        if (kmeansIters > 0)
+          kmeansCentroids(src, vecCol, idCol, nlist, kmeansIters, centroids)
+        else centroids.getOrElse(idPrefixCodebook(src, idCol, nlist))
+      val cells = assignCells(src, cents, vecCol, idCol)
+        .withColumnRenamed(idCol, "nb_id")
+      new IvfIndex(cents, cells, embCol, idCol, projection, kmeansIters > 0)
+    }
 
-  /** Search a `buildProjectedIvfIndex` directory: project the queries
-    * with the saved parameters, run the narrow persisted-index search for
-    * `candidates` per query, then re-rank the survivors by FULL-dimension
-    * cosine against the caller's original corpus frame (the index never
-    * stored the wide vectors — the re-rank join touches only
-    * ~candidates-per-query of them). Identical results to
-    * `projectedIvfTopK` with the same parameters.
-    */
-  def searchProjectedIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, corpus: DataFrame, queries: DataFrame, embCol: String,
-      idCol: String, k: Int, candidates: Int, nprobe: Int): DataFrame = {
-    require(candidates >= k,
-      s"searchProjectedIvfIndex: candidates ($candidates) must be >= k ($k)")
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val pq = randomProjection(queries, embCol, idCol,
-      m.getAs[Int]("in_dim"), m.getAs[Int]("out_dim"),
-      m.getAs[String]("seed"))
-    val cand = searchIvfIndex(spark, dir, pq, "proj", idCol, candidates,
-      nprobe)
-    rerankFullDim(cand, corpus, queries, embCol, idCol, k)
-  }
-
-  private def ivfSearch(corpus: DataFrame, queries: DataFrame,
-      centroidsDf: DataFrame, embCol: String, idCol: String, k: Int,
-      nprobe: Int): DataFrame = {
-    val centroids = centroidsDf
-    val cells = assignCells(corpus, centroids, embCol, idCol)
-      .withColumnRenamed(idCol, "nb_id")
-    // query-side probing is the same partial-aggregate assignment; the
-    // returned "v" IS the normalized query vector
-    val probed = assignCellsMulti(queries, centroids, embCol, idCol, nprobe)
-      .select(col(idCol).as("query_id"), col("v").as("vq"), col("cell"))
-    probed.join(cells, "cell")
-      .where(col("query_id") =!= col("nb_id"))
-      .withColumn("cos", ndot6(col("vq"), col("v")))
-      .select(col("query_id"), col("nb_id"), col("cos"))
-      .transform(searchTopKDesc(k))
+    /** Read an index `save`d to `dir`. */
+    def load(spark: SparkSession, dir: String): IvfIndex = {
+      val centroids = spark.read.parquet(s"$dir/centroids")
+      val Array(idCol, vecCol) = centroids.columns
+      val metaDir = new org.apache.hadoop.fs.Path(s"$dir/meta")
+      val meta = Option.when(metaDir.getFileSystem(
+          spark.sparkContext.hadoopConfiguration).exists(metaDir))(
+        spark.read.parquet(s"$dir/meta").collect()(0))
+      new IvfIndex(centroids, spark.read.parquet(s"$dir/cells"),
+        meta.fold(vecCol)(_.getAs[String]("emb_col")), idCol,
+        meta.map(m => Projection(m.getAs[Int]("in_dim"),
+          m.getAs[Int]("out_dim"), m.getAs[String]("seed"))),
+        trainedCodebook = false)
+    }
   }
 }

@@ -69,7 +69,7 @@ object Sketches {
     conv(substring(md5(c), 9, 8), 16, 10).cast(LongType)
 
   /** Pin the sketch parameters to a standing state directory — the
-    * [[Similarity.buildProjectedIvfIndex]] meta discipline: the first
+    * [[Similarity.IvfIndex.save]] meta discipline: the first
     * append writes `dir/meta`, every later append AND every read
     * validates against it, because a parameter mismatch (different p,
     * k, d or w) does not ERROR — it silently yields garbage estimates

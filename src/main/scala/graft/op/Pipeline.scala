@@ -32,7 +32,4 @@ object Pipeline {
 
   def run(df: DataFrame, json: String, env: Env): DataFrame =
     compile(Js.parse(json), env)(df)
-
-  def runYaml(df: DataFrame, yaml: String, env: Env): DataFrame =
-    compile(Js.parseYaml(yaml), env)(df)
 }

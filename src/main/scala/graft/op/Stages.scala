@@ -110,17 +110,20 @@ object Stages {
         df
       }
     case "$http"    => df => Http(df, spec, env)
-    // $jq (docs/aggregation_stages.md:245-260): whole-message transform.
-    // Schemaless output → (key, value-as-JSON-string); an extension object
-    // form {script, schema} keeps the result typed for downstream stages.
-    case "$jq" => df => {
+    // $jq (docs/aggregation_stages.md:245-260) and $jslt (:262-277):
+    // whole-message transform in either language. Schemaless output →
+    // (key, value-as-JSON-string); an extension object form
+    // {script, schema} keeps the result typed for downstream stages.
+    case "$jq" | "$jslt" => df => {
       val (text, schema) =
         if (spec.isTextual) (spec.asText(), None)
         else (spec.get("script").asText(),
           Option(spec.get("schema")).map(_.asText()))
       // base = the script file itself, so its relative imports resolve
       val (script, base) = Scripts.resolve(text, env.scripts)
-      val program = graft.jq.MiniJq.compile(script, env.scripts, base)
+      val program =
+        if (name == "$jq") graft.jq.MiniJq.compile(script, env.scripts, base)
+        else graft.jq.MiniJslt.compile(script, env.scripts, base)
       val apply = udf((json: String) =>
         graft.json.Js.render(program(graft.json.Js.parse(json))))
       val keyCol =
@@ -135,35 +138,6 @@ object Stages {
             .select(from_json(col("value"), StructType.fromDDL(ddl)).as("v"))
             .select("v.*")
         case None => // changed _id re-keys the message (docs:248)
-          transformed.select(
-            coalesce(get_json_object(col("value"), "$._id"),
-              col("__oldkey")).as("_key"),
-            col("value"))
-      }
-    }
-    // $jslt stage (docs/aggregation_stages.md:262-277): same shape as $jq
-    // with the JSLT language
-    case "$jslt" => df => {
-      val (text, schema) =
-        if (spec.isTextual) (spec.asText(), None)
-        else (spec.get("script").asText(),
-          Option(spec.get("schema")).map(_.asText()))
-      val (script, base) = Scripts.resolve(text, env.scripts)
-      val program = graft.jq.MiniJslt.compile(script, env.scripts, base)
-      val apply = udf((json: String) =>
-        graft.json.Js.render(program(graft.json.Js.parse(json))))
-      val keyCol =
-        if (df.columns.contains("_id")) col("_id").cast(StringType)
-        else lit(null).cast(StringType)
-      val transformed = df.select(keyCol.as("__oldkey"),
-        apply(to_json(struct(df.columns
-          .filterNot(Set("__ord", "__raw")).map(col): _*))).as("value"))
-      schema match {
-        case Some(ddl) =>
-          transformed
-            .select(from_json(col("value"), StructType.fromDDL(ddl)).as("v"))
-            .select("v.*")
-        case None =>
           transformed.select(
             coalesce(get_json_object(col("value"), "$._id"),
               col("__oldkey")).as("_key"),

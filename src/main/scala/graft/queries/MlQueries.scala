@@ -299,8 +299,8 @@ object MlQueries {
           SELECT query_id, CAST(rank AS INT) AS rank, nb_id, cos
           FROM ranked WHERE rank <= 3""") { (spark, sf) =>
       val emb = Tables.load(spark, sf, "embeddings")
-      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 5),
-        "embedding", "vec_id", k = 3, nlist = 8, nprobe = 2)
+      Similarity.IvfIndex.build(emb, "embedding", "vec_id", nlist = 8)
+        .search(emb.where(col("vec_id") < 5), k = 3, nprobe = 2)
     },
 
     // -- IVF ANN over the TRAINED codebook (farthest-first seeds + one
@@ -323,9 +323,10 @@ object MlQueries {
           SELECT query_id, CAST(rank AS INT) AS rank, nb_id, cos
           FROM ranked WHERE rank <= 3""") { (spark, sf) =>
       val (corpus, cents) = trainedCodebook(spark, sf)
-      Similarity.ivfTopKWith(corpus,
-        Tables.load(spark, sf, "embeddings").where(col("vec_id") < 5),
-        cents, "embedding", "vec_id", k = 3, nprobe = 2)
+      Similarity.IvfIndex.build(corpus, "embedding", "vec_id",
+          centroids = Some(cents))
+        .search(Tables.load(spark, sf, "embeddings").where(col("vec_id") < 5),
+          k = 3, nprobe = 2)
     },
 
     // -- celled near-dup pairs over the trained codebook
@@ -393,8 +394,9 @@ object MlQueries {
       val (corpus, cents) = trainedCodebook(spark, sf)
       val queries = Tables.load(spark, sf, "embeddings")
         .where(col("vec_id") < 5)
-      val ivf = Similarity.ivfTopKWith(corpus, queries, cents,
-        "embedding", "vec_id", k = 3, nprobe = 2)
+      val ivf = Similarity.IvfIndex.build(corpus, "embedding", "vec_id",
+          centroids = Some(cents))
+        .search(queries, k = 3, nprobe = 2)
       val exact = Similarity.bruteForceTopK(corpus, queries,
         "embedding", "vec_id", k = 3)
       val hits = exact.select("query_id", "nb_id")

@@ -42,6 +42,20 @@ object Q {
       },
       Option(oracle).filter(_.nonEmpty))
 
+  /** A fresh temp directory under `prefix`, deleted (recursively) when
+    * the JVM exits — for gate-built indexes and state a gate keeps
+    * between its own executions.
+    */
+  private[queries] def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook {
+      import java.nio.file.{Files => F}
+      import scala.jdk.CollectionConverters._
+      F.walk(d).iterator.asScala.toSeq.reverse.foreach(F.deleteIfExists)
+    }
+    d
+  }
+
   def fn(name: String, oracle: String)(
       f: (SparkSession, String) => DataFrame): Q =
     Q(name, (spark, sfDir) => { session(spark); f(spark, sfDir) },

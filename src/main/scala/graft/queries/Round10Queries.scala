@@ -133,11 +133,12 @@ object Round10Queries {
        FROM rr WHERE rn <= 3"""
   }
 
-  /** projectedIvfTopK replayed: id-prefix codebook IN THE PROJECTED
-    * space (8 cells), nearest-cell assignment and 2-cell probing by
-    * rounded projected cosine (ties to the lowest cell), candidate
-    * top-10 within the probed cells, then full-dimension re-rank to
-    * top-3 — every stage mirroring ivfSearch + rerankFullDim.
+  /** A projected `IvfIndex` search replayed: id-prefix codebook IN THE
+    * PROJECTED space (8 cells), nearest-cell assignment and 2-cell
+    * probing by rounded projected cosine (ties to the lowest cell),
+    * candidate top-10 within the probed cells, then full-dimension
+    * re-rank to top-3 — every stage mirroring `IvfIndex.search` +
+    * rerankFullDim.
     */
   private val projectedIvfOracle = {
     import MlQueries.normSql
@@ -817,16 +818,9 @@ object Round10Queries {
       // probe of the saved bands, not a corpus pass
       val d = Tables.load(spark, sf, "documents").select("doc_id", "text")
       val dir = bandIndexDirs.computeIfAbsent(sf, { _ =>
-        val idx = java.nio.file.Files
-          .createTempDirectory("graft-band-index")
-        Dedup.buildBandIndex(d, "text", "doc_id", idx.toString)
-        sys.addShutdownHook {
-          import java.nio.file.{Files => F}
-          import scala.jdk.CollectionConverters._
-          F.walk(idx).iterator.asScala.toSeq.reverse
-            .foreach(F.deleteIfExists)
-        }
-        idx.toString
+        val idx = Q.tempDir("graft-band-index").toString
+        Dedup.buildBandIndex(d, "text", "doc_id", idx)
+        idx
       })
       val twins = d.where(col("doc_id") < 30).select(
         (col("doc_id") + 500000L).as("doc_id"),
@@ -852,26 +846,20 @@ object Round10Queries {
     },
     Q.fn("q_knn_projected_ivf_persisted", projectedIvfOracle) {
       (spark, sf) =>
-        import graft.ml.Similarity
-        // the disk-resident projectedIvfTopK: the narrow (16-dim) index
+        import graft.ml.Similarity.{IvfIndex, Projection}
+        // the disk-resident q_knn_projected_ivf: the narrow (16-dim) index
         // persists once per source dir; searches must answer byte-for-byte
         // what the in-memory composition answers — same oracle
         val emb = Tables.load(spark, sf, "embeddings")
         val dir = projIndexDirs.computeIfAbsent(sf, { _ =>
-          val d = java.nio.file.Files
-            .createTempDirectory("graft-proj-ivf-index")
-          Similarity.buildProjectedIvfIndex(emb, "embedding", "vec_id",
-            d.toString, inDim = 64, outDim = 16, nlist = 8)
-          sys.addShutdownHook {
-            import java.nio.file.{Files => F}
-            import scala.jdk.CollectionConverters._
-            F.walk(d).iterator.asScala.toSeq.reverse.foreach(F.deleteIfExists)
-          }
-          d.toString
+          val d = Q.tempDir("graft-proj-ivf-index").toString
+          IvfIndex.build(emb, "embedding", "vec_id", nlist = 8,
+            projection = Some(Projection(inDim = 64, outDim = 16)))
+            .save(d)
+          d
         })
-        Similarity.searchProjectedIvfIndex(spark, dir, emb,
-          emb.where(col("vec_id") < 5), "embedding", "vec_id",
-          k = 3, candidates = 10, nprobe = 2)
+        IvfIndex.load(spark, dir).search(emb.where(col("vec_id") < 5),
+          k = 3, nprobe = 2, corpus = Some(emb), candidates = 10)
     },
     Q.fn("q_chunk_keeplist", chunkKeeplistOracle) { (spark, sf) =>
       val d = Tables.load(spark, sf, "documents").select("doc_id", "text")
@@ -912,11 +900,12 @@ object Round10Queries {
         .select(col("vec_id"), posexplode(col("proj")).as(Seq("j", "y")))
     },
     Q.fn("q_knn_projected_ivf", projectedIvfOracle) { (spark, sf) =>
-      import graft.ml.Similarity
+      import graft.ml.Similarity.{IvfIndex, Projection}
       val emb = Tables.load(spark, sf, "embeddings")
-      Similarity.projectedIvfTopK(emb, emb.where(col("vec_id") < 5),
-        "embedding", "vec_id", k = 3, inDim = 64, outDim = 16,
-        candidates = 10, nlist = 8, nprobe = 2)
+      IvfIndex.build(emb, "embedding", "vec_id", nlist = 8,
+          projection = Some(Projection(inDim = 64, outDim = 16)))
+        .search(emb.where(col("vec_id") < 5), k = 3, nprobe = 2,
+          corpus = Some(emb), candidates = 10)
     },
     Q.fn("q_knn_projected", projectedKnnOracle) { (spark, sf) =>
       import graft.ml.Similarity

@@ -1051,16 +1051,6 @@ object Round12Queries {
         SELECT doc_id, text FROM b2src
         WHERE doc_id NOT IN (SELECT nid FROM g2drop)"""
 
-  private[queries] def tempIndexDir(prefix: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      import java.nio.file.{Files => F}
-      import scala.jdk.CollectionConverters._
-      F.walk(d).iterator.asScala.toSeq.reverse.foreach(F.deleteIfExists)
-    }
-    d
-  }
-
   /** The Round10 md5-cell PPM image: cell c's gray value is the first
     * digest byte of `{key}-{c}` (with `-n-` for the fresh family), cell
     * 0 bumped by +16 for the twin.
@@ -1092,7 +1082,7 @@ object Round12Queries {
     Q.fn("q_url_dedup_incremental", urlIncrOracle) { (spark, sf) =>
       val docs = withUrl(Tables.load(spark, sf, "documents"))
       val dir = urlIndexDirs.computeIfAbsent(sf, { _ =>
-        val d = tempIndexDir("graft-url-index")
+        val d = Q.tempDir("graft-url-index")
         Curation.buildUrlIndex(docs.where(col("doc_id") < 250),
           "url", "doc_id", d.toString)
         d.toString
@@ -1115,7 +1105,7 @@ object Round12Queries {
         .where(col("doc_id") < 1000)
         .select(col("doc_id")).as[Long]
       val dir = ahashIndexDirs.computeIfAbsent(sf, { _ =>
-        val d = tempIndexDir("graft-ahash-index")
+        val d = Q.tempDir("graft-ahash-index")
         val ref = ids.map(id => (id, ppm(s"$id", bump = false)))
           .toDF("doc_id", "img")
         Multimodal.buildAHashIndex(packedImages(spark, ref), "doc_id",
@@ -1134,7 +1124,7 @@ object Round12Queries {
     Q.fn("q_url_index_loop", urlLoopOracle) { (spark, sf) =>
       val docs = withUrl(Tables.load(spark, sf, "documents"))
       val dir = urlLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = tempIndexDir("graft-url-loop")
+        val d = Q.tempDir("graft-url-loop")
         Curation.buildUrlIndex(docs.where(col("doc_id") < 200),
           "url", "doc_id", d.toString)
         Curation.updateUrlIndex(spark, d.toString,
@@ -1165,7 +1155,7 @@ object Round12Queries {
         .where(col("event_id") < 300)
         .select(col("event_id")).as[Long]
       val dir = audioIndexDirs.computeIfAbsent(sf, { _ =>
-        val d = tempIndexDir("graft-audio-index")
+        val d = Q.tempDir("graft-audio-index")
         val ref = ids.map(id => (id, clip(s"$id", bumpFirst4 = false)))
           .toDF("event_id", "payload")
         Multimodal.buildAudioIndex(packed(ref), "event_id", d.toString)
@@ -1185,7 +1175,7 @@ object Round12Queries {
         .where(col("doc_id") < 1000)
         .select(col("doc_id")).as[Long]
       val dir = ahashLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = tempIndexDir("graft-ahash-loop")
+        val d = Q.tempDir("graft-ahash-loop")
         val ref = ids.map(id => (id, ppm(s"$id", bump = false)))
           .toDF("doc_id", "img")
         Multimodal.buildAHashIndex(packedImages(spark, ref), "doc_id",
@@ -1220,7 +1210,7 @@ object Round12Queries {
           .as("text"))
       val batch1 = twins1.unionByName(novel1)
       val dir = nearLoopDirs.computeIfAbsent(sf, { _ =>
-        val idx = tempIndexDir("graft-band-loop")
+        val idx = Q.tempDir("graft-band-loop")
         Dedup.buildBandIndex(d, "text", "doc_id", idx.toString)
         val kept1 = Dedup.dedupAgainstNearIndexed(spark, idx.toString,
           batch1, d, "text", "doc_id", minJaccard = 0.5)

@@ -875,7 +875,7 @@ object Round14Queries {
       docs: DataFrame, blocklist: DataFrame): IncrState =
     incrStates.computeIfAbsent(sf, { _ =>
       import graft.ml.{Classifier, Dedup, Recipes}
-      val d = Round12Queries.tempIndexDir("graft-incr-recipe").toString
+      val d = Q.tempDir("graft-incr-recipe").toString
       val pages = Round13Queries.withFunnelPage(docs)
       val input = Round11Queries.withUrl(pages
         .select(col("doc_id"), col("page").as("text"))
@@ -1268,7 +1268,7 @@ object Round14Queries {
     Q.fn("q_unigram_persisted", unigramEncodeOracle) { (spark, sf) =>
       val corp = unigramCorpus(Tables.load(spark, sf, "documents"))
       val dir = unigramVocabDirs.computeIfAbsent(sf, { _ =>
-        val d = Round12Queries.tempIndexDir("graft-unigram-vocab")
+        val d = Q.tempDir("graft-unigram-vocab")
           .toString
         graft.ml.Unigram.saveVocab(spark,
           graft.ml.Unigram.unigramTrain(corp, "text", UniMaxPieceLen,

@@ -463,8 +463,7 @@ object Round16Queries {
       import graft.ml.Sketches
       val src = centeredMicros(spark, sf)
       val dir = histSignedLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-hist-signed-state").toString
+        val d = Q.tempDir("graft-hist-signed-state").toString
         (0L to 2L).foreach { r =>
           Sketches.appendHistStateSigned(
             src.where(pmod(col("event_id"), lit(3L)) === r),
@@ -484,8 +483,7 @@ object Round16Queries {
         (spark, sf) =>
       import spark.implicits._
       val dir = bpeMergeDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-bpe-merges").toString
+        val d = Q.tempDir("graft-bpe-merges").toString
         graft.ml.Bpe.saveMerges(
           Round13Queries.largeMerges.zipWithIndex
             .map { case ((l, r), i) => (i + 1, l, r) }

@@ -436,8 +436,7 @@ object Round17Queries {
   private[graft] def cardStateFor(spark: SparkSession,
       sf: String): String =
     cardStateDirs.computeIfAbsent(sf, { _ =>
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-card-state").toString
+      val d = Q.tempDir("graft-card-state").toString
       val docs = Tables.load(spark, sf, "documents")
       (0L to 2L).foreach { r =>
         graft.ml.Sketches.appendCorpusCardState(
@@ -526,8 +525,7 @@ object Round17Queries {
     Q.fn("q_lm_backoff_loop", lmBackoffOracle) { (spark, sf) =>
       val d = Tables.load(spark, sf, "documents")
       val dir = lmStateDirs.computeIfAbsent(sf, { _ =>
-        val dd = java.nio.file.Files
-          .createTempDirectory("graft-ngram-state").toString
+        val dd = Q.tempDir("graft-ngram-state").toString
         (0L to 2L).foreach { r =>
           graft.ml.TextAnalysis.appendNgramState(
             d.where(col("doc_id") < 250 &&
@@ -620,17 +618,18 @@ object Round17Queries {
     // ... and the CORPUS-SCALE candidate path: the same miner fed from
     // IVF searches in both directions (marginMineFrom is
     // candidate-agnostic — this gate proves the composition, not a new
-    // miner). Disjoint side id ranges make ivfTopK's self-id exclusion
-    // a no-op here
+    // miner). Disjoint side id ranges make the IVF search's self-id
+    // exclusion a no-op here
     Q.fn("q_margin_mine_ivf", marginIvfOracle) { (spark, sf) =>
       val emb = Tables.load(spark, sf, "embeddings")
       val a = emb.where(col("vec_id") < 250)
       val b = emb.where(col("vec_id") >= 250)
-      graft.ml.Similarity.marginMineFrom(
-        graft.ml.Similarity.ivfTopK(b, a, "embedding", "vec_id",
-          k = MarginK, nlist = 8, nprobe = 2),
-        graft.ml.Similarity.ivfTopK(a, b, "embedding", "vec_id",
-          k = MarginK, nlist = 8, nprobe = 2),
+      import graft.ml.Similarity.{IvfIndex, marginMineFrom}
+      marginMineFrom(
+        IvfIndex.build(b, "embedding", "vec_id", nlist = 8)
+          .search(a, k = MarginK, nprobe = 2),
+        IvfIndex.build(a, "embedding", "vec_id", nlist = 8)
+          .search(b, k = MarginK, nprobe = 2),
         threshold = MarginThreshold)
     },
 
@@ -683,7 +682,7 @@ object Round17Queries {
     Q.fn("q_corpus_diff_loop", corpusDiffLoopOracle) { (spark, sf) =>
       val docs = Tables.load(spark, sf, "documents")
       val dir = fpLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Round12Queries.tempIndexDir("graft-fp-loop").toString
+        val d = Q.tempDir("graft-fp-loop").toString
         graft.ml.Curation.buildFpIndex(
           docs.where(col("doc_id") < 400), "doc_id", "text", d)
         graft.ml.Curation.updateFpIndex(spark, d, diffNext(docs),

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -35,7 +34,7 @@ object Round4Queries {
                 CASE WHEN o_orderkey <= 1000 THEN 'X'
                      ELSE o_orderstatus END AS status
          FROM orders WHERE o_orderkey <= 3000""") { (spark, sf) =>
-      val root = Files.createTempDirectory("graft-q-coll").toString
+      val root = Q.tempDir("graft-q-coll").toString
       val io = new ParquetCollectionIo(spark, root, NoIo)
       val orders = Tables.load(spark, sf, "orders")
         .where(col("o_orderkey") <= 3000)
@@ -55,7 +54,7 @@ object Round4Queries {
     Q.fn("q_collection_delete",
       """SELECT n_nationkey AS _id, n_name AS name
          FROM nation WHERE n_regionkey <> 1""") { (spark, sf) =>
-      val root = Files.createTempDirectory("graft-q-del").toString
+      val root = Q.tempDir("graft-q-del").toString
       val io = new ParquetCollectionIo(spark, root, NoIo)
       val nation = Tables.load(spark, sf, "nation")
       io.upsert("n",

@@ -228,8 +228,7 @@ object Round5Queries {
                 CASE WHEN o_orderkey <= 1000 THEN 'X'
                      ELSE o_orderstatus END AS status
          FROM orders WHERE o_orderkey <= 2000""") { (spark, sf) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-q-modes").toString
+      val root = Q.tempDir("graft-q-modes").toString
       val io = new graft.streaming.ParquetCollectionIo(spark, root,
         Round4Queries.NoIo)
       val orders = Tables.load(spark, sf, "orders")

@@ -664,8 +664,7 @@ object SketchQueries {
     Q.fn("q_sketch_hll_loop", hllLoopOracle) { (spark, sf) =>
       val ev = Tables.load(spark, sf, "events")
       val dir = hllLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-hll-state").toString
+        val d = Q.tempDir("graft-hll-state").toString
         (0L to 2L).foreach { r =>
           Sketches.appendHllState(
             ev.where(pmod(col("event_id"), lit(3L)) === r),
@@ -738,8 +737,7 @@ object SketchQueries {
     Q.fn("q_sketch_quantile_loop", histLoopOracle) { (spark, sf) =>
       val docs = Tables.load(spark, sf, "documents")
       val dir = histLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-hist-state").toString
+        val d = Q.tempDir("graft-hist-state").toString
         (0L to 2L).foreach { r =>
           Sketches.appendHistState(
             docs.where(pmod(col("doc_id"), lit(3L)) === r),
@@ -781,8 +779,7 @@ object SketchQueries {
           explode(filter(Fns.tokens(col("text")), t => t =!= ""))
             .as("tok"))
       val dir = overlapLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-ovl-state").toString
+        val d = Q.tempDir("graft-ovl-state").toString
         (0L to 2L).foreach { r =>
           Seq(0, 1).foreach { p =>
             Sketches.appendKmvState(
@@ -803,8 +800,7 @@ object SketchQueries {
     Q.fn("q_sketch_kmv_loop", kmvLoopOracle) { (spark, sf) =>
       val ev = Tables.load(spark, sf, "events")
       val dir = kmvLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-kmv-state").toString
+        val d = Q.tempDir("graft-kmv-state").toString
         (0L to 2L).foreach { r =>
           Sketches.appendKmvState(
             ev.where(pmod(col("event_id"), lit(3L)) === r),
@@ -825,8 +821,7 @@ object SketchQueries {
           explode(filter(Fns.tokens(col("text")), t => t =!= ""))
             .as("tok"))
       val dir = cmsLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-cms-state").toString
+        val d = Q.tempDir("graft-cms-state").toString
         (0L to 2L).foreach { r =>
           Sketches.appendCmsState(
             toks.where(pmod(col("doc_id"), lit(3L)) === r),

@@ -291,8 +291,7 @@ object WordPieceQueries {
     Q.fn("q_wordpiece_persisted", wordpieceEncodeOracle) { (spark, sf) =>
       val docs = Tables.load(spark, sf, "documents")
       val dir = vocabDirs.computeIfAbsent(sf, { _ =>
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-wp-vocab").toString
+        val d = Q.tempDir("graft-wp-vocab").toString
         val merges = WordPiece.wordpieceTrain(docs, "text", WpMerges)
         WordPiece.saveVocab(spark,
           WordPiece.wordpieceVocabulary(docs, "text", merges), d)

@@ -674,11 +674,11 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
         .drop("__jts_right")
         .dropDuplicatesWithinWatermark("__jv")
         .select(col("__key_left").as("_id"), col("left"), col("right"))
-    else if (joined.isStreaming)
-      joined.select(col("__key_left").as("_id"), col("left"), col("right"))
-    else
-      joined.select(col("__key_left").as("_id"), col("left"), col("right"))
-        .dropDuplicates()
+    else {
+      val out =
+        joined.select(col("__key_left").as("_id"), col("left"), col("right"))
+      if (joined.isStreaming) out else out.dropDuplicates()
+    }
   }
 
   /** Command reducers (docs/state.md:62): a JQ script (inline or file), a

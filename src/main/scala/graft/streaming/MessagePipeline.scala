@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.json.Js
 import graft.expr.{Ctx, ExprCompiler, QueryCompiler, VariantDoc}
-import graft.op.{Env, Stages}
+import graft.op.{Env, Scripts, Stages}
 
 /** Pipeline compiler for SCHEMALESS message streams — `(key string,
   * value string-JSON)` columns, the reference's native model. Fields are
@@ -55,38 +55,16 @@ object MessagePipeline {
     case "$send" =>
       df => df.withColumn("_topic",
         ExprCompiler.compile(spec.get("topic"), ctxOf(df)).cast(StringType))
-    case "$jq" => // schema-free whole-message transform
+    case "$jq" | "$jslt" => // schema-free whole-message transform
       df => {
         val text =
           if (spec.isTextual) spec.asText() else spec.get("script").asText()
-        // single-line scripts can start with anything (del(...), if, [):
-        // treat the text as a registered script NAME only when the loader
-        // actually resolves it; otherwise it is an inline program (a
-        // typo'd name then surfaces as a visible parse error)
-        val loaded =
-          if (text.contains("\n")) None
-          else scala.util.Try(env.scripts(text)).toOption
-        val script = loaded.getOrElse(text)
-        val base = if (loaded.isDefined) text else ""
-        val program = graft.jq.MiniJq.compile(script, env.scripts, base)
+        val (script, base) = Scripts.resolve(text, env.scripts)
+        val program =
+          if (name == "$jq") graft.jq.MiniJq.compile(script, env.scripts, base)
+          else graft.jq.MiniJslt.compile(script, env.scripts, base)
         // null-safe: a Kafka tombstone (null value) passes through — a
         // thrown parse would be a poison pill the checkpoint replays
-        val apply = udf((json: String) =>
-          if (json == null) null else Js.render(program(Js.parse(json))))
-        df.withColumn("value", apply(col("value")))
-          .withColumn("key",
-            coalesce(get_json_object(col("value"), "$._id"), col("key")))
-      }
-    case "$jslt" => // schema-free whole-message transform (JSLT dialect)
-      df => {
-        val text =
-          if (spec.isTextual) spec.asText() else spec.get("script").asText()
-        val loaded = // see $jq: loader-resolved name, else inline
-          if (text.contains("\n")) None
-          else scala.util.Try(env.scripts(text)).toOption
-        val script = loaded.getOrElse(text)
-        val base = if (loaded.isDefined) text else ""
-        val program = graft.jq.MiniJslt.compile(script, env.scripts, base)
         val apply = udf((json: String) =>
           if (json == null) null else Js.render(program(Js.parse(json))))
         df.withColumn("value", apply(col("value")))

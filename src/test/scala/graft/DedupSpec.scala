@@ -638,7 +638,7 @@ class DedupSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       graft.ml.Similarity.bruteForceTopK(big, big, "emb", "doc_id", 3,
         maxExactWork = 100))
-    assert(e2.getMessage.contains("ivfTopK"))
+    assert(e2.getMessage.contains("IvfIndex"))
   }
 
   test("gopherRules: words are whitespace words — newlines split, " +

@@ -56,8 +56,9 @@ class MultimodalSpec extends AnyFunSuite {
       nlist = 8, iters = 2)
     assert(centroids.count() == 8)
     val queries = emb.where(col("vec_id") < 5)
-    val got = Similarity.ivfTopKWith(emb, queries, centroids,
-      "embedding", "vec_id", k = 3, nprobe = 2)
+    val got = Similarity.IvfIndex.build(emb, "embedding", "vec_id",
+        centroids = Some(centroids))
+      .search(queries, k = 3, nprobe = 2)
       .collect()
     assert(got.length == 15) // 5 queries x top-3
     // sanity: every reported cosine is within [-1, 1] and ranks are 1..3

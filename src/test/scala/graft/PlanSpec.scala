@@ -158,7 +158,8 @@ class PlanSpec extends AnyFunSuite {
     // query. pqTrain's tiny seed window (over a limit(ksub) frame) is the
     // one window allowed: assert no window is KEYED on query_id.
     for (name <- Seq("q_knn_ivf", "q_knn_ivf_kmeans", "q_knn_pq",
-        "q_knn_ivfpq")) {
+        "q_knn_ivfpq", "q_knn_ivf_persisted", "q_knn_projected_ivf",
+        "q_knn_projected_ivf_persisted", "q_margin_mine_ivf")) {
       val p = plan(q(name))
       assert(!"windowspecdefinition\\(query_id".r.findFirstIn(p).isDefined,
         s"$name ranks candidates with a query-keyed window:\n" +

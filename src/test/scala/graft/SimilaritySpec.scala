@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ml.Similarity
+import graft.ml.Similarity.{IvfIndex, Projection}
 
 /** ANN quality guard for the trained IVF codebook (farthest-first seeding +
   * Lloyd iterations, Similarity.scala). Two data regimes:
@@ -30,8 +31,9 @@ class SimilaritySpec extends AnyFunSuite {
       .bruteForceTopK(corpus, queries, "embedding", "vec_id", K)
       .select("query_id", "nb_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Similarity
-      .ivfTopKWith(corpus, queries, cents, "embedding", "vec_id", K, Nprobe)
+    val got = IvfIndex
+      .build(corpus, "embedding", "vec_id", centroids = Some(cents))
+      .search(queries, K, Nprobe)
       .select("query_id", "nb_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     got.intersect(exact).size.toDouble / exact.size
@@ -94,8 +96,8 @@ class SimilaritySpec extends AnyFunSuite {
       .bruteForceTopK(corpus, sample, "embedding", "vec_id", K)
       .select("query_id", "nb_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Similarity
-      .ivfTopK(corpus, sample, "embedding", "vec_id", K, t.nlist, t.nprobe)
+    val got = IvfIndex.build(corpus, "embedding", "vec_id", t.nlist)
+      .search(sample, K, t.nprobe)
       .select("query_id", "nb_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = got.intersect(exact).size.toDouble / exact.size
@@ -209,35 +211,27 @@ class SimilaritySpec extends AnyFunSuite {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSet
+    def search(ix: IvfIndex) = rows(ix.search(queries, k = 3, nprobe = 2))
+    def reloaded(ix: IvfIndex, partitionByCell: Boolean = false) = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-ivf-idx").toString
+      ix.save(dir, partitionByCell)
+      (dir, IvfIndex.load(spark, dir))
+    }
     // id-prefix codebook
-    val dir1 = java.nio.file.Files
-      .createTempDirectory("graft-ivf-idx1").toString
-    Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir1, nlist = 8)
-    assert(rows(Similarity.searchIvfIndex(spark, dir1, queries,
-      "embedding", "vec_id", k = 3, nprobe = 2)) ==
-      rows(Similarity.ivfTopK(emb, queries, "embedding", "vec_id",
-        k = 3, nlist = 8, nprobe = 2)))
-    // trained codebook: build with kmeansIters > 0, compare against the
-    // same trained centroids through the in-memory path
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-ivf-idx2").toString
-    Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir2, nlist = 8,
-      kmeansIters = 1)
+    val idPrefix = IvfIndex.build(emb, "embedding", "vec_id", nlist = 8)
+    assert(search(reloaded(idPrefix)._2) == search(idPrefix))
+    // trained codebook: save a kmeansIters > 0 build, compare against the
+    // same trained centroids searched in memory
     val cents = Similarity.kmeansCentroids(emb, "embedding", "vec_id",
       nlist = 8, iters = 1)
-    assert(rows(Similarity.searchIvfIndex(spark, dir2, queries,
-      "embedding", "vec_id", k = 3, nprobe = 2)) ==
-      rows(Similarity.ivfTopKWith(emb, queries, cents,
-        "embedding", "vec_id", k = 3, nprobe = 2)))
+    assert(search(reloaded(IvfIndex.build(emb, "embedding", "vec_id",
+        nlist = 8, kmeansIters = 1))._2) ==
+      search(IvfIndex.build(emb, "embedding", "vec_id",
+        centroids = Some(cents))))
     // cell-partitioned layout: same answers, prunable directories
-    val dir3 = java.nio.file.Files
-      .createTempDirectory("graft-ivf-idx3").toString
-    Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir3, nlist = 8,
-      partitionByCell = true)
-    assert(rows(Similarity.searchIvfIndex(spark, dir3, queries,
-      "embedding", "vec_id", k = 3, nprobe = 2)) ==
-      rows(Similarity.ivfTopK(emb, queries, "embedding", "vec_id",
-        k = 3, nlist = 8, nprobe = 2)))
+    val (dir3, byCell) = reloaded(idPrefix, partitionByCell = true)
+    assert(search(byCell) == search(idPrefix))
     assert(new java.io.File(s"$dir3/cells").listFiles()
       .exists(_.getName.startsWith("cell=")),
       "cells must be laid out one directory per cell")
@@ -251,14 +245,13 @@ class SimilaritySpec extends AnyFunSuite {
       .toSet
     val dir = java.nio.file.Files
       .createTempDirectory("graft-proj-ivf-idx").toString
-    Similarity.buildProjectedIvfIndex(emb, "embedding", "vec_id", dir,
-      inDim = 64, outDim = 16, nlist = 8)
+    val index = IvfIndex.build(emb, "embedding", "vec_id", nlist = 8,
+      projection = Some(Projection(inDim = 64, outDim = 16)))
+    index.save(dir)
+    def search(ix: IvfIndex) = rows(ix.search(queries, k = 3, nprobe = 2,
+      corpus = Some(emb), candidates = 10))
     // byte-identical to the in-memory filter-then-refine composition
-    assert(rows(Similarity.searchProjectedIvfIndex(spark, dir, emb,
-      queries, "embedding", "vec_id", k = 3, candidates = 10, nprobe = 2))
-      == rows(Similarity.projectedIvfTopK(emb, queries, "embedding",
-        "vec_id", k = 3, inDim = 64, outDim = 16, candidates = 10,
-        nlist = 8, nprobe = 2)))
+    assert(search(IvfIndex.load(spark, dir)) == search(index))
     // the point of the composition: the index stores PROJECTED vectors —
     // 16 doubles per row in the cells frame, not the full 64
     val cellVec = spark.read.parquet(s"$dir/cells")
@@ -345,9 +338,10 @@ class SimilaritySpec extends AnyFunSuite {
     // projected space compounds probe miss with JL distortion — with a
     // generous probe it must stay within reach of the exact-candidate
     // variant on the same data
-    val ivfGot = Similarity.projectedIvfTopK(corpus, queries, "embedding",
-      "vec_id", k = K, inDim = 64, outDim = 16, candidates = 4 * K,
-      nlist = 8, nprobe = 4)
+    val ivfGot = IvfIndex.build(corpus, "embedding", "vec_id", nlist = 8,
+        projection = Some(Projection(inDim = 64, outDim = 16)))
+      .search(queries, k = K, nprobe = 4, corpus = Some(corpus),
+        candidates = 4 * K)
       .select("query_id", "nb_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivfRecall = ivfGot.intersect(exact).size.toDouble / exact.size
@@ -361,11 +355,10 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ivf-dpp").toString
-    Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir, nlist = 8,
-      partitionByCell = true)
-    val out = Similarity.searchIvfIndex(spark, dir,
-      emb.where(col("vec_id") < 3), "embedding", "vec_id",
-      k = 3, nprobe = 2)
+    IvfIndex.build(emb, "embedding", "vec_id", nlist = 8)
+      .save(dir, partitionByCell = true)
+    val out = IvfIndex.load(spark, dir)
+      .search(emb.where(col("vec_id") < 3), k = 3, nprobe = 2)
     out.collect()
     val p = out.queryExecution.executedPlan.toString
     // Spark's dynamic partition pruning must reach the cells scan: the
@@ -376,7 +369,7 @@ class SimilaritySpec extends AnyFunSuite {
       "no dynamic partition pruning on the cells scan:\n" + p.take(1500))
   }
 
-  test("buildIvfIndex releases the trained codebook cache") {
+  test("IvfIndex.save releases the trained codebook cache") {
     // a corpus plan no other test caches: Spark's CacheManager dedups
     // persist() by plan, so an identical corpus would share (and this
     // test's unpersist would drop) another test's cached codebook
@@ -385,8 +378,8 @@ class SimilaritySpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.size
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ivf-unpersist").toString
-    Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir, nlist = 8,
-      kmeansIters = 1)
+    IvfIndex.build(emb, "embedding", "vec_id", nlist = 8, kmeansIters = 1)
+      .save(dir)
     assert(spark.sparkContext.getPersistentRDDs.size == before,
       "the kmeansCentroids codebook persist must be released once the " +
         "centroids and cells parquet writes have materialized it")
