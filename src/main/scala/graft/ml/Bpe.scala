@@ -315,10 +315,9 @@ object Bpe {
     */
   def loadMerges(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String)] = {
-    val rows = spark.read.parquet(s"$dir/merges")
-      .orderBy("rank").limit((1 << 22) + 1).collect()
-    require(rows.length <= (1 << 22),
-      s"loadMerges: merge table too large (${rows.length})")
+    val rows = collectAtMost(
+      spark.read.parquet(s"$dir/merges").orderBy("rank"), 1 << 22)(
+      s"loadMerges: merge table too large (${(1 << 22) + 1})")
     // ranks must be EXACTLY 1..N: the encoders re-derive ranks
     // positionally from this sequence, and a hand-authored artifact
     // with gapped or duplicated ranks (1,3,5) would silently produce

@@ -213,9 +213,8 @@ object Curation {
     // local relation — a distributed distinct per class would cost a
     // (tiny but needless) shuffle each, and a build side with
     // duplicate keys would duplicate corpus rows through the outer join
-    val rows = suffixes.select(col("suffix").cast(StringType))
-      .limit(maxSuffixRows + 1).collect()
-    require(rows.length <= maxSuffixRows,
+    val rows = collectAtMost(
+      suffixes.select(col("suffix").cast(StringType)), maxSuffixRows)(
       s"more than $maxSuffixRows suffix rows — that is not a public " +
         "suffix list (the table is driver-resident by design)")
     val bySize: Map[Int, Seq[String]] = rows.iterator
@@ -318,10 +317,9 @@ object Curation {
       rules: DataFrame, maxSuffixLabels: Int = 8,
       maxSuffixRows: Int = 1000000): DataFrame = {
     import df.sparkSession.implicits._
-    val rows = rules
-      .select(col("suffix").cast(StringType), col("kind").cast(StringType))
-      .limit(maxSuffixRows + 1).collect()
-    require(rows.length <= maxSuffixRows,
+    val rows = collectAtMost(rules
+      .select(col("suffix").cast(StringType), col("kind").cast(StringType)),
+      maxSuffixRows)(
       s"more than $maxSuffixRows suffix rows — that is not a public " +
         "suffix list (the table is driver-resident by design)")
     def classesOf(kind: String): Map[Int, Seq[String]] = rows.iterator
@@ -406,10 +404,8 @@ object Curation {
       maxSources: Int = 100000): DataFrame = {
     require(budgetTokens > 0, s"epochPlan: budget must be > 0")
     require(maxEpochs >= 1, s"epochPlan: maxEpochs must be >= 1")
-    val per = df.groupBy(col(sourceCol))
-      .agg(sum(size(tokens(col(textCol)))).as("n_tokens"))
-      .limit(maxSources + 1).collect()
-    require(per.length <= maxSources,
+    val per = collectAtMost(df.groupBy(col(sourceCol))
+      .agg(sum(size(tokens(col(textCol)))).as("n_tokens")), maxSources)(
       s"epochPlan: more than $maxSources sources — the plan is " +
         "driver-resident by design (sources are config, not corpus)")
     val rows = per.map(r => (r.getString(0), r.getLong(1)))
@@ -499,9 +495,8 @@ object Curation {
       blocklist: DataFrame, maxLabels: Int = 8,
       maxRows: Int = 1000000): DataFrame = {
     import df.sparkSession.implicits._
-    val rows = blocklist.select(col("entry").cast(StringType))
-      .limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
+    val rows = collectAtMost(
+      blocklist.select(col("entry").cast(StringType)), maxRows)(
       s"more than $maxRows blocklist rows — the blocklist is " +
         "driver-resident by design (it is config, not corpus)")
     val bySize: Map[Int, Seq[String]] = rows.iterator
@@ -1464,13 +1459,11 @@ object Curation {
     // constraint propagation into a ~10 s/job spiral on the big
     // url-extraction tree (measured at sf0.1) — filtering the
     // ≤ maxDomains aggregated frame is free and equivalent
-    val counts = df.groupBy(col(sourceCol)).count()
-      .where(col(sourceCol).isNotNull)
-      .limit(maxDomains + 1)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    require(counts.size <= maxDomains,
+    val counts = collectAtMost(df.groupBy(col(sourceCol)).count()
+      .where(col(sourceCol).isNotNull), maxDomains)(
       s"more than $maxDomains distinct domains — bucket them upstream " +
         "or raise maxDomains (the counts map is driver-resident)")
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (counts.isEmpty) return df.limit(0)
     val total = counts.values.sum.toDouble
     val weights = counts.view.mapValues(n =>

@@ -117,18 +117,11 @@ object Dedup {
   private def lshCandidatesLayout(df: DataFrame, textCol: String,
       idCol: String, k: Int, bands: Int, r: Int,
       maxBandFreq: Option[Int]): DataFrame = {
-    val p = bands * r
     // materialize the (id, band) table once: the self-join would otherwise
     // recompute every signature for both sides
-    val withBands0 = minhash(df, textCol, idCol, k, p)
-      .select(col(idCol), explode(bandKeys(col("sig"), bands, r)).as("band"))
-    val withBands = CacheLifecycle.pin(maxBandFreq match {
-      case None => withBands0
-      case Some(cap) =>
-        val hot = withBands0.groupBy("band")
-          .agg(count(lit(1)).as("bf")).where(col("bf") > cap).select("band")
-        withBands0.join(hot, Seq("band"), "left_anti")
-    })
+    val withBands = CacheLifecycle.pin(dropHotBands(
+      bandTable(df, textCol, idCol, k, bands * r, bands, idCol),
+      maxBandFreq))
     val a = withBands.as("a")
     val b = withBands.as("b")
     a.join(b, "band")
@@ -419,38 +412,40 @@ object Dedup {
   }
 
   /** Embedding-cosine near-dup pairs at scale: assign every vector to its
-    * nearest IVF cell (broadcast centroids — see Similarity.assignCells),
-    * then pair only WITHIN a cell via an equi-join on the cell id. Search
-    * cost drops from O(n^2) to O(sum cell^2); pairs straddling a cell
-    * boundary are the recall trade-off, standard for IVF near-dup.
+    * `nprobe` nearest IVF cells (broadcast centroids — see
+    * Similarity.assignCellsMulti), then pair only WITHIN a cell via an
+    * equi-join on the cell id. Search cost drops from O(n^2) to
+    * O(sum cell^2); pairs straddling a cell boundary are the recall
+    * trade-off, standard for IVF near-dup.
+    *
+    * The codebook is `centroids` when given (e.g. a trained
+    * `Similarity.kmeansCentroids` — balanced cells bound the worst
+    * O(cell²) pair cost, which is what matters at 100 TB), else the
+    * `nlist` lowest ids. `nprobe > 1` recovers the pairs a single probe
+    * loses at cell boundaries, at `nprobe²`× the within-cell pair
+    * candidates; a pair can then co-occur in several cells, and
+    * `distinct` collapses the copies (cos is rounded, so they are
+    * bit-identical).
     */
   def embeddingPairsCelled(df: DataFrame, embCol: String, idCol: String,
-      threshold: Double, nlist: Int): DataFrame =
-    // single probe: a pair occurs in at most one cell, no dedup needed
-    celledPairs(df, embCol, idCol, threshold,
-      df.orderBy(col(idCol)).limit(nlist), nprobe = 1, dedup = false)
-
-  /** Celled near-dup pairs with an explicit codebook (e.g. a trained
-    * `Similarity.kmeansCentroids`) — balanced cells bound the worst
-    * O(cell²) pair cost, which is what matters at 100 TB.
-    */
-  def embeddingPairsCelledWith(df: DataFrame, embCol: String, idCol: String,
-      threshold: Double, centroids: DataFrame): DataFrame =
-    celledPairs(df, embCol, idCol, threshold, centroids, nprobe = 1,
-      dedup = false)
-
-  /** Multi-probe variant of `embeddingPairsCelled`: every vector lands in
-    * its `nprobe` nearest cells (Similarity.assignCellsMulti), recovering
-    * the pairs a single-probe assignment loses at cell boundaries. A pair
-    * can now co-occur in several cells — `distinct` collapses the
-    * duplicates (cos is rounded, so the copies are bit-identical). Cost:
-    * `nprobe²`× the within-cell pair candidates, still an equi-join.
-    */
-  def embeddingPairsCelledMulti(df: DataFrame, embCol: String,
-      idCol: String, threshold: Double, nlist: Int,
-      nprobe: Int): DataFrame =
-    celledPairs(df, embCol, idCol, threshold,
-      df.orderBy(col(idCol)).limit(nlist), nprobe, dedup = true)
+      threshold: Double, nlist: Int = 0, nprobe: Int = 1,
+      centroids: Option[DataFrame] = None): DataFrame = {
+    require(nlist > 0 || centroids.isDefined,
+      "embeddingPairsCelled: needs nlist > 0 or an explicit codebook")
+    val cells = Similarity.assignCellsMulti(df,
+      centroids.getOrElse(Similarity.idPrefixCodebook(df, idCol, nlist)),
+      embCol, idCol, nprobe)
+    val a = cells.select(col("cell"), col(idCol).as("id_a"),
+      col("v").as("va"))
+    val b = cells.select(col("cell"), col(idCol).as("id_b"),
+      col("v").as("vb"))
+    val pairs = a.join(b, "cell")
+      .where(col("id_a") < col("id_b"))
+      .withColumn("cos", ndot6(col("va"), col("vb")))
+      .where(col("cos") >= threshold)
+      .select(col("id_a"), col("id_b"), col("cos"))
+    if (nprobe > 1) pairs.distinct() else pairs
+  }
 
   /** Connected components over a candidate-pair edge list → duplicate
     * CLUSTERS: every document gets the minimum reachable id as its
@@ -579,13 +574,8 @@ object Dedup {
     */
   def dedupEmbeddings(df: DataFrame, embCol: String, idCol: String,
       threshold: Double, nlist: Int, nprobe: Int = 1): DataFrame = {
-    val pairs =
-      if (nprobe <= 1)
-        embeddingPairsCelled(df, embCol, idCol, threshold, nlist)
-      else
-        embeddingPairsCelledMulti(df, embCol, idCol, threshold, nlist,
-          nprobe)
-    keepList(df, idCol, pairs)
+    keepList(df, idCol,
+      embeddingPairsCelled(df, embCol, idCol, threshold, nlist, nprobe))
   }
 
   /** MinHash-LSH candidate pairs verified by EXACT shingle Jaccard —
@@ -880,16 +870,12 @@ object Dedup {
       bands: Int = 4, maxBandFreq: Option[Int] = None): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1,
       s"dedupAgainstNear: minJaccard must be in (0, 1], got $minJaccard")
-    val r = p / bands
-    def bandsOf(df: DataFrame, as: String) =
-      minhash(df, textCol, idCol, k, p)
-        .select(col(idCol).as(as),
-          explode(bandKeys(col("sig"), bands, r)).as("band"))
-    val nb = bandsOf(newDf, "__new_id")
+    val nb = bandTable(newDf, textCol, idCol, k, p, bands, "__new_id")
     // only the REFERENCE side pins: it is the corpus-sized leg whose
     // shingle+minhash pass dominates the call; the batch side is small
     // and changes per call (caching it would only fill the LRU)
-    val rb = CacheLifecycle.pin(bandsOf(refDf, "__ref_id"))
+    val rb = CacheLifecycle.pin(
+      bandTable(refDf, textCol, idCol, k, p, bands, "__ref_id"))
     nearFromBands(newDf, refDf, nb, rb, textCol, idCol, minJaccard, k,
       maxBandFreq)
   }
@@ -905,9 +891,7 @@ object Dedup {
     */
   def buildBandIndex(refDf: DataFrame, textCol: String, idCol: String,
       dir: String, k: Int = 3, p: Int = 12, bands: Int = 4): Unit = {
-    minhash(refDf, textCol, idCol, k, p)
-      .select(col(idCol).as("__ref_id"),
-        explode(bandKeys(col("sig"), bands, p / bands)).as("band"))
+    bandTable(refDf, textCol, idCol, k, p, bands, "__ref_id")
       .write.mode("overwrite").parquet(s"$dir/bands")
     refDf.sparkSession.range(1)
       .select(lit(k).as("k"), lit(p).as("p"), lit(bands).as("bands"))
@@ -926,12 +910,8 @@ object Dedup {
     */
   def updateBandIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, df: DataFrame, textCol: String, idCol: String): Unit = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val (k, p, bands) =
-      (m.getAs[Int]("k"), m.getAs[Int]("p"), m.getAs[Int]("bands"))
-    val nb = minhash(df, textCol, idCol, k, p)
-      .select(col(idCol).as("__ref_id"),
-        explode(bandKeys(col("sig"), bands, p / bands)).as("band"))
+    val (k, p, bands) = bandIndexMeta(spark, dir)
+    val nb = bandTable(df, textCol, idCol, k, p, bands, "__ref_id")
     val idx = spark.read.parquet(s"$dir/bands")
     val existing = idx
       .join(broadcast(nb.select("__ref_id").distinct()),
@@ -954,12 +934,8 @@ object Dedup {
       maxBandFreq: Option[Int] = None): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1,
       s"dedupAgainstNearIndexed: minJaccard must be in (0, 1], got $minJaccard")
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val (k, p, bands) =
-      (m.getAs[Int]("k"), m.getAs[Int]("p"), m.getAs[Int]("bands"))
-    val nb = minhash(newDf, textCol, idCol, k, p)
-      .select(col(idCol).as("__new_id"),
-        explode(bandKeys(col("sig"), bands, p / bands)).as("band"))
+    val (k, p, bands) = bandIndexMeta(spark, dir)
+    val nb = bandTable(newDf, textCol, idCol, k, p, bands, "__new_id")
     val rb = spark.read.parquet(s"$dir/bands")
     nearFromBands(newDf, refDf, nb, rb, textCol, idCol, minJaccard, k,
       maxBandFreq)
@@ -972,14 +948,7 @@ object Dedup {
   private def nearFromBands(newDf: DataFrame, refDf: DataFrame,
       nb: DataFrame, rb0: DataFrame, textCol: String, idCol: String,
       minJaccard: Double, k: Int, maxBandFreq: Option[Int]): DataFrame = {
-    val rb = maxBandFreq match {
-      case None => rb0
-      case Some(cap) =>
-        val hot = rb0.groupBy("band").agg(count(lit(1)).as("bf"))
-          .where(col("bf") > cap).select("band")
-        rb0.join(hot, Seq("band"), "left_anti")
-    }
-    val cand = broadcast(nb).join(rb, "band")
+    val cand = broadcast(nb).join(dropHotBands(rb0, maxBandFreq), "band")
       .select(col("__new_id"), col("__ref_id")).distinct()
     def shingleTable(df: DataFrame, ids: DataFrame, as: String) =
       df.join(ids, Seq(idCol), "left_semi")
@@ -1001,22 +970,29 @@ object Dedup {
     newDf.join(dropIds, Seq(idCol), "left_anti")
   }
 
-  private def celledPairs(df: DataFrame, embCol: String, idCol: String,
-      threshold: Double, centroids: DataFrame, nprobe: Int,
-      dedup: Boolean): DataFrame = {
-    val cells =
-      Similarity.assignCellsMulti(df, centroids, embCol, idCol, nprobe)
-    val a = cells.select(col("cell"), col(idCol).as("id_a"),
-      col("v").as("va"))
-    val b = cells.select(col("cell"), col(idCol).as("id_b"),
-      col("v").as("vb"))
-    val pairs = a.join(b, "cell")
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cos", ndot6(col("va"), col("vb")))
-      .where(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
-    // multi-probe: a pair co-occurs in up to nprobe shared cells; the
-    // copies are bit-identical (cos is rounded), distinct collapses them
-    if (dedup) pairs.distinct() else pairs
+  /** The MinHash band table: one `(idAs, band)` row per document and
+    * band of its `p`-permutation signature. */
+  private def bandTable(df: DataFrame, textCol: String, idCol: String,
+      k: Int, p: Int, bands: Int, idAs: String): DataFrame =
+    minhash(df, textCol, idCol, k, p)
+      .select(col(idCol).as(idAs),
+        explode(bandKeys(col("sig"), bands, p / bands)).as("band"))
+
+  /** `bandsDf` without the band buckets holding more than `maxBandFreq`
+    * rows (the hot-band skew guard); unchanged when it is `None`. */
+  private def dropHotBands(bandsDf: DataFrame,
+      maxBandFreq: Option[Int]): DataFrame = maxBandFreq match {
+    case None => bandsDf
+    case Some(cap) =>
+      val hot = bandsDf.groupBy("band").agg(count(lit(1)).as("bf"))
+        .where(col("bf") > cap).select("band")
+      bandsDf.join(hot, Seq("band"), "left_anti")
+  }
+
+  /** The `(k, p, bands)` a `buildBandIndex` directory was built with. */
+  private def bandIndexMeta(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (Int, Int, Int) = {
+    val m = spark.read.parquet(s"$dir/meta").collect()(0)
+    (m.getAs[Int]("k"), m.getAs[Int]("p"), m.getAs[Int]("bands"))
   }
 }

@@ -128,4 +128,16 @@ object Fns {
     if (capped <= 1000000) df.select(lit(1)).limit(capped.toInt).count()
     else math.min(df.count(), capped)
   }
+
+  /** Collect a driver-resident frame (config-scale data: vocabularies,
+    * suffix lists, per-source plans) of at most `cap` rows, refusing a
+    * larger one with `msg`. `limit(cap + 1)` makes an exactly-cap-sized
+    * input legal and a larger one provably truncated.
+    */
+  def collectAtMost(df: org.apache.spark.sql.DataFrame, cap: Int)(
+      msg: => String): Array[org.apache.spark.sql.Row] = {
+    val rows = df.limit(cap + 1).collect()
+    require(rows.length <= cap, msg)
+    rows
+  }
 }

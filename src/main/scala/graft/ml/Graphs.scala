@@ -264,9 +264,9 @@ object Graphs {
   def mixByLinkQuality(corpus: DataFrame, idCol: String,
       domainCol: String, quality: DataFrame, salt: String = "mixQ",
       maxDomains: Int = 10000): DataFrame = {
-    val rows = quality.select(col("domain"), col("quality"))
-      .where(col("quality") > 0).limit(maxDomains + 1).collect()
-    require(rows.length <= maxDomains,
+    val rows = Fns.collectAtMost(
+      quality.select(col("domain"), col("quality"))
+        .where(col("quality") > 0), maxDomains)(
       s"mixByLinkQuality: more than $maxDomains positive-quality " +
         "domains — the target map is driver-resident by design " +
         "(bucket low-quality domains upstream or raise maxDomains)")

@@ -244,8 +244,8 @@ object Similarity {
     // so the assignment crossJoin runs once
     val proto = CacheLifecycle.pin(
       prototypicality(corpus, centroids, embCol, idCol))
-    val pairs = Dedup.embeddingPairsCelledWith(corpus, embCol, idCol,
-      threshold, centroids)
+    val pairs = Dedup.embeddingPairsCelled(corpus, embCol, idCol,
+      threshold, centroids = Some(centroids))
     val comps = Dedup.components(pairs)
     val withComp = proto
       .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
@@ -808,7 +808,7 @@ object Similarity {
   /** The `nlist` lowest-id vectors: the deterministic IVF codebook the
     * oracles replay, and the init `kmeansCentroids` trains from.
     */
-  private def idPrefixCodebook(corpus: DataFrame, idCol: String,
+  private[ml] def idPrefixCodebook(corpus: DataFrame, idCol: String,
       nlist: Int): DataFrame =
     corpus.orderBy(col(idCol)).limit(nlist)
 

@@ -444,10 +444,9 @@ object Unigram {
       dir: String): (Seq[(String, Long)], Int) = {
     val m = spark.read.parquet(s"$dir/meta").collect()(0)
       .getAs[Int]("max_piece_len")
-    val rows = spark.read.parquet(s"$dir/pieces")
-      .select("piece", "p_ppm").limit((1 << 22) + 1).collect()
-    require(rows.length <= (1 << 22),
-      s"loadVocab: vocabulary too large (${rows.length})")
+    val rows = collectAtMost(
+      spark.read.parquet(s"$dir/pieces").select("piece", "p_ppm"),
+      1 << 22)(s"loadVocab: vocabulary too large (${(1 << 22) + 1})")
     (rows.map(r => r.getString(0) -> r.getLong(1)).toSeq
       .sortBy(r => Fns.utf8Key(r._1))(Fns.utf8BytesOrdering), m)
   }

@@ -162,18 +162,13 @@ object WordPiece {
     */
   def wordpieceVocabulary(df: DataFrame, textCol: String,
       merges: DataFrame): Seq[String] = {
-    // limit(cap + 1) + require(<= cap): an exactly-cap-sized input is
-    // legal, and a larger one is provably truncated (the loadVocab
-    // idiom)
     val cap = 1 << 20
-    val alpha = wordpieceAlphabet(df, textCol)
-      .limit(cap + 1).collect().map(_.getString(0))
-    require(alpha.length <= cap,
+    val alpha = Fns.collectAtMost(wordpieceAlphabet(df, textCol), cap)(
       s"wordpieceVocabulary: alphabet too large (> $cap)")
-    val minted = merges.select("piece").limit(cap + 1).collect()
       .map(_.getString(0))
-    require(minted.length <= cap,
+    val minted = Fns.collectAtMost(merges.select("piece"), cap)(
       s"wordpieceVocabulary: merge table too large (> $cap)")
+      .map(_.getString(0))
     (alpha ++ minted).distinct
       .sortBy(Fns.utf8Key)(Fns.utf8BytesOrdering).toSeq
   }
@@ -194,10 +189,9 @@ object WordPiece {
     */
   def loadVocab(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[String] = {
-    val rows = spark.read.parquet(s"$dir/pieces")
-      .select("piece").limit((1 << 22) + 1).collect()
-    require(rows.length <= (1 << 22),
-      s"loadVocab: vocabulary too large (${rows.length})")
+    val rows = Fns.collectAtMost(
+      spark.read.parquet(s"$dir/pieces").select("piece"), 1 << 22)(
+      s"loadVocab: vocabulary too large (${(1 << 22) + 1})")
     rows.map(_.getString(0)).toSeq.distinct
       .sortBy(Fns.utf8Key)(Fns.utf8BytesOrdering)
   }

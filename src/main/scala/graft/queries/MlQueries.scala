@@ -219,7 +219,7 @@ object MlQueries {
                  ${cosSql("a.e", "b.e")} AS cos
           FROM cells a JOIN cells b ON a.cell=b.cell AND a.vec_id < b.vec_id
           WHERE ${cosSql("a.e", "b.e")} >= 0.35""") { (spark, sf) =>
-      Dedup.embeddingPairsCelledMulti(
+      Dedup.embeddingPairsCelled(
         Tables.load(spark, sf, "embeddings").where(col("vec_id") < 300),
         "embedding", "vec_id", threshold = 0.35, nlist = 8, nprobe = 2)
     },
@@ -337,8 +337,8 @@ object MlQueries {
           FROM cells a JOIN cells b ON a.cell=b.cell AND a.vec_id < b.vec_id
           WHERE ${cosSql("a.e", "b.e")} >= 0.35""") { (spark, sf) =>
       val (corpus, cents) = trainedCodebook(spark, sf)
-      Dedup.embeddingPairsCelledWith(corpus, "embedding", "vec_id",
-        threshold = 0.35, centroids = cents)
+      Dedup.embeddingPairsCelled(corpus, "embedding", "vec_id",
+        threshold = 0.35, centroids = Some(cents))
     },
 
     // -- SSL-prototypes pruning over the trained codebook: per-cell keep

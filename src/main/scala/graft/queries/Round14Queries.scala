@@ -845,27 +845,20 @@ object Round14Queries {
     * seedSize, minCount, emRounds) vocabulary, so retraining per gate
     * only re-buys the same deterministic result. The TRAINING gates
     * (q_unigram_train/_soft/_prune) still run their own full loops —
-    * they ARE the training checks. Driver-side config-scale data (the
-    * incrStates / vocabDirs caching pattern).
+    * they ARE the training checks. Driver-side config-scale data, built
+    * once per sf by `Q.once`.
     */
-  private val unigramVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]
-
   private[queries] def unigramVocabFor(sf: String,
       corp: => DataFrame): Seq[(String, Long)] =
-    unigramVocabCache.computeIfAbsent(sf, { _ =>
-      graft.ml.Unigram.unigramTrain(corp, "text", UniMaxPieceLen,
-        UniSeedSize, UniMinCount, UniEmRounds)
-        .collect().map(r => r.getString(0) -> r.getLong(2)).toSeq
-    })
-
-  private val unigramVocabDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Q.once("unigramVocab", sf) {
+      graft.ml.Fns.collectAtMost(graft.ml.Unigram.unigramTrain(corp, "text",
+          UniMaxPieceLen, UniSeedSize, UniMinCount, UniEmRounds),
+        1 << 22)(s"unigram vocabulary exceeds ${1 << 22} pieces")
+        .map(r => r.getString(0) -> r.getLong(2)).toSeq
+    }
 
   private[queries] final case class IncrState(dir: String,
     model: graft.ml.Classifier.QualityModel, cut: Int)
-  private val incrStates =
-    new java.util.concurrent.ConcurrentHashMap[String, IncrState]()
 
   /** Build (once per sf) the standing-ingestion state both incremental
     * gates probe: the batch-1 curate run, its admitted corpus, the URL
@@ -873,9 +866,8 @@ object Round14Queries {
     */
   private[queries] def incrStateFor(spark: SparkSession, sf: String,
       docs: DataFrame, blocklist: DataFrame): IncrState =
-    incrStates.computeIfAbsent(sf, { _ =>
+    Q.once("incrState", sf) {
       import graft.ml.{Classifier, Dedup, Recipes}
-      val d = Q.tempDir("graft-incr-recipe").toString
       val pages = Round13Queries.withFunnelPage(docs)
       val input = Round11Queries.withUrl(pages
         .select(col("doc_id"), col("page").as("text"))
@@ -883,14 +875,16 @@ object Round14Queries {
       val seed = pages.where(col("doc_id") < 300)
         .select(col("doc_id"),
           col("page").contains("short line").cast("int").as("__y"))
-      val (kept1, _) = Recipes.curate(input, "doc_id", "html", "url",
-        blocklist, seed, "__y", minJaccard = 0.8,
-        badWords = Seq("offer"))
-      kept1.select("doc_id", "text_clean", "url")
-        .write.mode("overwrite").parquet(s"$d/admitted")
-      Curation.buildUrlIndex(kept1, "url", "doc_id", s"$d/url")
-      Dedup.buildBandIndex(spark.read.parquet(s"$d/admitted"),
-        "text_clean", "doc_id", s"$d/band")
+      val d = Q.stateDir("graft-incr-recipe", sf) { d =>
+        val (kept1, _) = Recipes.curate(input, "doc_id", "html", "url",
+          blocklist, seed, "__y", minJaccard = 0.8,
+          badWords = Seq("offer"))
+        kept1.select("doc_id", "text_clean", "url")
+          .write.mode("overwrite").parquet(s"$d/admitted")
+        Curation.buildUrlIndex(kept1, "url", "doc_id", s"$d/url")
+        Dedup.buildBandIndex(spark.read.parquet(s"$d/admitted"),
+          "text_clean", "doc_id", s"$d/band")
+      }
       // the frozen operating point: the same training pass curate ran
       val texted = input
         .withColumn("text_clean", Curation.htmlToText(col("html")))
@@ -902,7 +896,7 @@ object Round14Queries {
       val cut = Classifier.tuneThreshold(labeled, "text_clean", "__y",
         "doc_id", model)
       IncrState(d, model, cut.cutBucket)
-    })
+    }
 
   /** The Spark side of [[langFixtureCtes]]'s `ml` stage. */
   private def langFixture(docs: DataFrame): DataFrame = {
@@ -1267,15 +1261,12 @@ object Round14Queries {
     // persisted path shares the live encode's oracle
     Q.fn("q_unigram_persisted", unigramEncodeOracle) { (spark, sf) =>
       val corp = unigramCorpus(Tables.load(spark, sf, "documents"))
-      val dir = unigramVocabDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-unigram-vocab")
-          .toString
+      val dir = Q.stateDir("graft-unigram-vocab", sf) { d =>
         graft.ml.Unigram.saveVocab(spark,
           graft.ml.Unigram.unigramTrain(corp, "text", UniMaxPieceLen,
             UniSeedSize, UniMinCount, UniEmRounds),
           UniMaxPieceLen, d)
-        d
-      })
+      }
       graft.ml.Unigram.encodeWithVocabDir(spark, dir, corp, "text",
         "doc_id")
     },

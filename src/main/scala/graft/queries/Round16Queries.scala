@@ -15,8 +15,8 @@ object Round16Queries {
   // curateBatchReports); the four recipe gates previously re-ran the
   // same staged chain each (~80 s of the ~220 s sf0.1 bench and the
   // locus of two consecutive two-run-variance violations). The gates
-  // now share one engine pass per scale factor through the established
-  // vocabulary-cache pattern: the REAL operators run once (all values
+  // now share one engine pass per scale factor through `Q.once`, like
+  // the vocabulary carriers: the REAL operators run once (all values
   // still computed by the engine), the collected config-scale report
   // rows (7 funnel rows; stages × domains) are re-served to the
   // sibling gates. q_recipe_reports drives the combined entry point
@@ -27,22 +27,15 @@ object Round16Queries {
       funnel: Seq[(Int, String, Long)],
       domains: Seq[(Int, String, Option[String], Long)])
 
-  private val oneShotReports =
-    new java.util.concurrent.ConcurrentHashMap[String, RecipeReports]
-  private val incrReports =
-    new java.util.concurrent.ConcurrentHashMap[String, RecipeReports]
-
   private def collectReports(
       r: graft.ml.Recipes.CurationReports): RecipeReports = {
     // require-bounded driver state (the vocabulary-cache discipline):
     // both reports are config-scale by construction (stages and
     // stages × fixture domains); a fixture change that breaks that
     // fails loudly instead of ballooning the driver
-    val funnel = r.funnel.limit(1 << 10).collect()
-    require(funnel.length < (1 << 10),
+    val funnel = graft.ml.Fns.collectAtMost(r.funnel, 1 << 10)(
       s"recipe report cache: funnel unexpectedly large")
-    val domains = r.funnelByDomain.limit(1 << 20).collect()
-    require(domains.length < (1 << 20),
+    val domains = graft.ml.Fns.collectAtMost(r.funnelByDomain, 1 << 20)(
       s"recipe report cache: by-domain report unexpectedly large")
     RecipeReports(
       funnel
@@ -71,18 +64,18 @@ object Round16Queries {
 
   private def oneShotReportsFor(spark: SparkSession,
       sf: String): RecipeReports =
-    oneShotReports.computeIfAbsent(sf, { _ =>
+    Q.once("oneShotReports", sf) {
       import spark.implicits._
       val (input, seed) = oneShotInput(spark, sf)
       collectReports(graft.ml.Recipes.curateReports(input, "doc_id",
         "html", "url", Round12Queries.BlockEntries.toDF("entry"), seed,
         "__y", minJaccard = 0.8, badWords = Seq("offer"),
         psl = Some(Round13Queries.PslFullRules.toDF("suffix", "kind"))))
-    })
+    }
 
   private def incrReportsFor(spark: SparkSession,
       sf: String): RecipeReports =
-    incrReports.computeIfAbsent(sf, { _ =>
+    Q.once("incrReports", sf) {
       import spark.implicits._
       val docs = Tables.load(spark, sf, "documents")
       val blocklist = Round12Queries.BlockEntries.toDF("entry")
@@ -93,7 +86,7 @@ object Round16Queries {
         "url", blocklist, st.model, st.cut, s"${st.dir}/url",
         s"${st.dir}/band", kept1.select("doc_id", "text_clean"),
         minJaccard = 0.8, badWords = Seq("offer")))
-    })
+    }
 
   private[queries] def oneShotFunnelDf(spark: SparkSession,
       sf: String): DataFrame = {
@@ -326,9 +319,6 @@ object Round16Queries {
   // from scratch, so correctness coverage is unchanged.
   // --------------------------------------------------------------------
 
-  private val pageRankCache = new java.util.concurrent
-    .ConcurrentHashMap[String, Seq[(String, Long)]]
-
   /** The q_pagerank synthetic edge fixture (Round12's gate input). */
   private[queries] def fixtureEdges(spark: SparkSession,
       sf: String): DataFrame = {
@@ -350,14 +340,12 @@ object Round16Queries {
   private[queries] def fixtureRanks(spark: SparkSession,
       sf: String): DataFrame = {
     import spark.implicits._
-    pageRankCache.computeIfAbsent(sf, { _ =>
-      val rows = graft.ml.Graphs.pageRank(fixtureEdges(spark, sf),
-          "src", "dst", iters = 3)
-        .limit(1 << 20).collect()
-      require(rows.length < (1 << 20),
+    Q.once("fixtureRanks", sf) {
+      graft.ml.Fns.collectAtMost(graft.ml.Graphs.pageRank(
+          fixtureEdges(spark, sf), "src", "dst", iters = 3), 1 << 20)(
         "pagerank cache: fixture node set unexpectedly large")
-      rows.map(r => (r.getString(0), r.getLong(1))).toSeq
-    }).toDF("node", "pr_rank")
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    }.toDF("node", "pr_rank")
   }
 
   /** The in-band document-separator id of the q_pack_token_ids_sep
@@ -420,11 +408,6 @@ object Round16Queries {
       FROM pall p JOIN ppc c USING (doc_id)"""
   }
 
-  private val histSignedLoopDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val bpeMergeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** The signed centered-micros projection shared by the one-shot and
     * standing-state signed quantile gates.
     */
@@ -462,15 +445,13 @@ object Round16Queries {
     Q.fn("q_sketch_quantile_signed_loop", histSignedOracle) { (spark, sf) =>
       import graft.ml.Sketches
       val src = centeredMicros(spark, sf)
-      val dir = histSignedLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-hist-signed-state").toString
+      val dir = Q.stateDir("graft-hist-signed-state", sf) { d =>
         (0L to 2L).foreach { r =>
           Sketches.appendHistStateSigned(
             src.where(pmod(col("event_id"), lit(3L)) === r),
             col("__cmicros"), Seq("event_type"), HistB, d)
         }
-        d
-      })
+      }
       Sketches.histQuantilesSignedFromState(spark, dir,
         Seq("event_type"), HistB, Seq(100, 500, 900))
     },
@@ -482,14 +463,12 @@ object Round16Queries {
     Q.fn("q_bpe_persisted", Round14Queries.bpeEncodeIdsOracle) {
         (spark, sf) =>
       import spark.implicits._
-      val dir = bpeMergeDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-bpe-merges").toString
+      val dir = Q.stateDir("graft-bpe-merges", sf) { d =>
         graft.ml.Bpe.saveMerges(
           Round13Queries.largeMerges.zipWithIndex
             .map { case ((l, r), i) => (i + 1, l, r) }
             .toDF("rank", "lhs", "rhs"), d)
-        d
-      })
+      }
       Q.explodePieceIds(graft.ml.Bpe.encodeIdsWithMergesDir(spark, dir,
         Tables.load(spark, sf, "documents"), "text", "doc_id"))
     },

@@ -299,9 +299,6 @@ object Round17Queries {
         when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v3")))
           .otherwise(col("text")))
 
-  private val fpLoopDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Replays the standing state after build(docs<400) +
     * update(diffNext): per id the LATEST fingerprint is the ' v2'
     * render exactly for the 7-multiples the update touched; the probe
@@ -410,12 +407,6 @@ object Round17Queries {
        LEFT JOIN agg a USING (doc_id)"""
   }
 
-  /** Standing n-gram count state dirs per scale factor — built once,
-    * reused by the loop gate's later passes (the histLoopDirs pattern).
-    */
-  private val lmStateDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   // --------------------------------------------------------------------
   // Training-shard manifests over the packed layout: chunks group into
   // shards by chunk_id div chunksPerShard; each shard's manifest row
@@ -427,16 +418,13 @@ object Round17Queries {
   // without the unigram training CTEs.
   // --------------------------------------------------------------------
 
-  /** Standing data-card state dirs per scale factor (the histLoopDirs
-    * pattern): three batches by doc_id mod 3, appended once.
+  /** The standing data-card state dir per scale factor (`Q.stateDir`):
+    * three batches by doc_id mod 3, appended once.
     */
-  private val cardStateDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
 
   private[graft] def cardStateFor(spark: SparkSession,
       sf: String): String =
-    cardStateDirs.computeIfAbsent(sf, { _ =>
-      val d = Q.tempDir("graft-card-state").toString
+    Q.stateDir("graft-card-state", sf) { d =>
       val docs = Tables.load(spark, sf, "documents")
       (0L to 2L).foreach { r =>
         graft.ml.Sketches.appendCorpusCardState(
@@ -444,8 +432,7 @@ object Round17Queries {
           "text", "lang", col("n_chars"),
           p = SketchQueries.P, b = SketchQueries.HistB, dir = d)
       }
-      d
-    })
+    }
 
   private val ShardChunkTokens = 64L
   private val ShardChunksPer = 4L
@@ -524,16 +511,14 @@ object Round17Queries {
     // (counts are additive), so the same oracle checks it
     Q.fn("q_lm_backoff_loop", lmBackoffOracle) { (spark, sf) =>
       val d = Tables.load(spark, sf, "documents")
-      val dir = lmStateDirs.computeIfAbsent(sf, { _ =>
-        val dd = Q.tempDir("graft-ngram-state").toString
+      val dir = Q.stateDir("graft-ngram-state", sf) { dd =>
         (0L to 2L).foreach { r =>
           graft.ml.TextAnalysis.appendNgramState(
             d.where(col("doc_id") < 250 &&
               pmod(col("doc_id"), lit(3L)) === r),
             "text", LmN, dd)
         }
-        dd
-      })
+      }
       graft.ml.TextAnalysis.lmBackoffScoreFromState(spark, dir,
         d.where(col("doc_id") >= 250).select("doc_id", "text"),
         "text", "doc_id", n = LmN, alpha = LmAlpha)
@@ -681,14 +666,12 @@ object Round17Queries {
     // partial batch)
     Q.fn("q_corpus_diff_loop", corpusDiffLoopOracle) { (spark, sf) =>
       val docs = Tables.load(spark, sf, "documents")
-      val dir = fpLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-fp-loop").toString
+      val dir = Q.stateDir("graft-fp-loop", sf) { d =>
         graft.ml.Curation.buildFpIndex(
           docs.where(col("doc_id") < 400), "doc_id", "text", d)
         graft.ml.Curation.updateFpIndex(spark, d, diffNext(docs),
           "doc_id", "text")
-        d
-      })
+      }
       graft.ml.Curation.diffAgainstFpIndex(spark, dir,
         diffProbe(docs), "doc_id", "text")
     },

@@ -18,10 +18,6 @@ import graft.Tables
   */
 object Round9Queries {
 
-  /** source-dir → built q_knn_ivf_persisted index dir (JVM-lifetime). */
-  private val persistedIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Same replay as q_knn_ivf (MlQueries): the persisted-index path must
     * answer byte-for-byte what the in-memory IVF search answers — the
     * index directory only amortizes the build, never changes results.
@@ -83,16 +79,14 @@ object Round9Queries {
       import graft.ml.Similarity.IvfIndex
       // index-build/query-serve split: train+assign ONCE to parquet, then
       // search the directory — results must equal the in-memory search.
-      // The build is cached per source dir for the JVM's lifetime (and
-      // deleted on exit): Bench runs each query warmup+timed and Verify
+      // `Q.stateDir` builds it once per source dir for the JVM's lifetime
+      // (deleted on exit): Bench runs each query warmup+timed and Verify
       // again, and rebuilding the index per execution both litters /tmp
       // and times the build in a query meant to showcase amortized search
       val emb = Tables.load(spark, sf, "embeddings")
-      val dir = persistedIndexDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-ivf-index").toString
+      val dir = Q.stateDir("graft-ivf-index", sf) { d =>
         IvfIndex.build(emb, "embedding", "vec_id", nlist = 8).save(d)
-        d
-      })
+      }
       IvfIndex.load(spark, dir)
         .search(emb.where(col("vec_id") < 5), k = 3, nprobe = 2)
     },

@@ -23,17 +23,6 @@ object SketchQueries {
   private val CmsW = 16
   private val CmsMin = 200L
 
-  private val hllLoopDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val kmvLoopDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val cmsLoopDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val histLoopDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val overlapLoopDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Sub-bucket bits of the quantile-histogram gates (2^6 = 64
     * sub-buckets per octave → ≤ 1.6 % relative bucket width). */
   private[queries] val HistB = 6
@@ -663,15 +652,13 @@ object SketchQueries {
     // construction, no batch ever rewrites another's rows
     Q.fn("q_sketch_hll_loop", hllLoopOracle) { (spark, sf) =>
       val ev = Tables.load(spark, sf, "events")
-      val dir = hllLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-hll-state").toString
+      val dir = Q.stateDir("graft-hll-state", sf) { d =>
         (0L to 2L).foreach { r =>
           Sketches.appendHllState(
             ev.where(pmod(col("event_id"), lit(3L)) === r),
             col("event_id"), Nil, P, d)
         }
-        d
-      })
+      }
       Sketches.hllEstimateFromState(spark, dir, Nil, P)
     },
 
@@ -736,15 +723,13 @@ object SketchQueries {
     // other three sketch states
     Q.fn("q_sketch_quantile_loop", histLoopOracle) { (spark, sf) =>
       val docs = Tables.load(spark, sf, "documents")
-      val dir = histLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-hist-state").toString
+      val dir = Q.stateDir("graft-hist-state", sf) { d =>
         (0L to 2L).foreach { r =>
           Sketches.appendHistState(
             docs.where(pmod(col("doc_id"), lit(3L)) === r),
             col("n_chars"), Seq("lang"), HistB, d)
         }
-        d
-      })
+      }
       Sketches.histQuantilesFromState(spark, dir, Seq("lang"), HistB,
         Seq(500, 900, 990))
     },
@@ -778,8 +763,7 @@ object SketchQueries {
         .select(col("lang"), col("doc_id"),
           explode(filter(Fns.tokens(col("text")), t => t =!= ""))
             .as("tok"))
-      val dir = overlapLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-ovl-state").toString
+      val dir = Q.stateDir("graft-ovl-state", sf) { d =>
         (0L to 2L).foreach { r =>
           Seq(0, 1).foreach { p =>
             Sketches.appendKmvState(
@@ -787,8 +771,7 @@ object SketchQueries {
               col("tok"), Seq("lang"), K, s"$d/$p")
           }
         }
-        d
-      })
+      }
       Sketches.kmvOverlapFromStates(spark, s"$dir/0", s"$dir/1",
         Seq("lang"), K)
     },
@@ -799,15 +782,13 @@ object SketchQueries {
     // bottom-k of the per-batch bottom-ks)
     Q.fn("q_sketch_kmv_loop", kmvLoopOracle) { (spark, sf) =>
       val ev = Tables.load(spark, sf, "events")
-      val dir = kmvLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-kmv-state").toString
+      val dir = Q.stateDir("graft-kmv-state", sf) { d =>
         (0L to 2L).foreach { r =>
           Sketches.appendKmvState(
             ev.where(pmod(col("event_id"), lit(3L)) === r),
             col("event_id"), Seq("user_id"), K, d)
         }
-        d
-      })
+      }
       Sketches.kmvFromState(spark, dir, Seq("user_id"), K)
     },
 
@@ -820,15 +801,13 @@ object SketchQueries {
         .select(col("doc_id"),
           explode(filter(Fns.tokens(col("text")), t => t =!= ""))
             .as("tok"))
-      val dir = cmsLoopDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-cms-state").toString
+      val dir = Q.stateDir("graft-cms-state", sf) { d =>
         (0L to 2L).foreach { r =>
           Sketches.appendCmsState(
             toks.where(pmod(col("doc_id"), lit(3L)) === r),
             col("tok"), CmsD, CmsW, d)
         }
-        d
-      })
+      }
       val probes = toks.select(col("tok").cast("string").as("value"))
         .groupBy(col("value")).agg(count(lit(1)).as("exact_count"))
         .where(col("exact_count") >= CmsMin)

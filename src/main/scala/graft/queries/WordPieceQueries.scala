@@ -264,24 +264,18 @@ object WordPieceQueries {
     docs.withColumn("text",
       concat(col("text"), lit(" w"), (col("doc_id") % 10).cast("string")))
 
-  private val vocabDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** The trained WordPiece vocabulary, collected once per sf and shared
-    * by the encode-side gates (the unigramVocabFor pattern): all three
-    * train the identical WpMerges-round vocabulary, so per-gate
-    * retraining only re-buys the same deterministic result.
-    * q_wordpiece_train still runs the full loop — it IS the check.
+  /** The trained WordPiece vocabulary, collected once per sf by
+    * `Q.once` and shared by the encode-side gates: all three train the
+    * identical WpMerges-round vocabulary, so per-gate retraining only
+    * re-buys the same deterministic result. q_wordpiece_train still
+    * runs the full loop — it IS the check.
     */
-  private val trainedVocabs =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]
-
   private def vocabFor(sf: String,
       docs: org.apache.spark.sql.DataFrame): Seq[String] =
-    trainedVocabs.computeIfAbsent(sf, { _ =>
+    Q.once("wordpieceVocab", sf) {
       val merges = WordPiece.wordpieceTrain(docs, "text", WpMerges)
       WordPiece.wordpieceVocabulary(docs, "text", merges)
-    })
+    }
 
   val all: Seq[Q] = Seq(
     // persisted tokenizer artifact for the WordPiece family (the
@@ -290,13 +284,11 @@ object WordPieceQueries {
     // so it shares the live encode's oracle
     Q.fn("q_wordpiece_persisted", wordpieceEncodeOracle) { (spark, sf) =>
       val docs = Tables.load(spark, sf, "documents")
-      val dir = vocabDirs.computeIfAbsent(sf, { _ =>
-        val d = Q.tempDir("graft-wp-vocab").toString
+      val dir = Q.stateDir("graft-wp-vocab", sf) { d =>
         val merges = WordPiece.wordpieceTrain(docs, "text", WpMerges)
         WordPiece.saveVocab(spark,
           WordPiece.wordpieceVocabulary(docs, "text", merges), d)
-        d
-      })
+      }
       WordPiece.encodeWithVocabDir(spark, dir, unkBaitCorpus(docs),
         "text", "doc_id")
     },

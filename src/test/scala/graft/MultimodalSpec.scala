@@ -87,7 +87,7 @@ class MultimodalSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val single = pairSet(graft.ml.Dedup.embeddingPairsCelled(
       emb, "embedding", "vec_id", threshold = 0.35, nlist = 8))
-    val multi = pairSet(graft.ml.Dedup.embeddingPairsCelledMulti(
+    val multi = pairSet(graft.ml.Dedup.embeddingPairsCelled(
       emb, "embedding", "vec_id", threshold = 0.35, nlist = 8, nprobe = 2))
     assert(single.subsetOf(multi))
     // the fixture has boundary pairs: multi-probe must recover some

@@ -469,18 +469,41 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("q_knn_ivf_persisted builds its index once per source dir") {
-    val q = SparkEntry.queries("q_knn_ivf_persisted")
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def indexDirs = tmp.listFiles()
-      .count(_.getName.startsWith("graft-ivf-index"))
-    val r1 = q(spark, sfDir).collect().toSet
-    val after1 = indexDirs
-    val r2 = q(spark, sfDir).collect().toSet
-    assert(indexDirs == after1,
-      "a repeated execution (Bench warmup+timed, Verify) must reuse the " +
-        "JVM-cached index directory, not rebuild a fresh one")
-    assert(r1 == r2)
+  // every gate that keeps `Q.stateDir` state between its executions
+  Seq("q_knn_ivf_persisted" -> "index",
+    "q_knn_projected_ivf_persisted" -> "index",
+    "q_dedup_near_indexed" -> "index",
+    "q_dedup_near_loop" -> "index",
+    "q_url_dedup_incremental" -> "index",
+    "q_url_index_loop" -> "index",
+    "q_multimodal_ahash_index" -> "index",
+    "q_multimodal_ahash_loop" -> "index",
+    "q_multimodal_audio_index" -> "index",
+    "q_unigram_persisted" -> "vocabulary",
+    "q_wordpiece_persisted" -> "vocabulary",
+    "q_bpe_persisted" -> "merge table",
+    "q_sketch_hll_loop" -> "state",
+    "q_sketch_kmv_loop" -> "state",
+    "q_sketch_cms_loop" -> "state",
+    "q_sketch_quantile_loop" -> "state",
+    "q_sketch_quantile_signed_loop" -> "state",
+    "q_kmv_overlap_loop" -> "state",
+    "q_corpus_report_incremental" -> "state",
+    "q_lm_backoff_loop" -> "state",
+    "q_corpus_diff_loop" -> "state").foreach { case (name, what) =>
+    test(s"$name builds its $what once per source dir") {
+      val q = SparkEntry.queries(name)
+      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+      def stateDirs = tmp.listFiles().count(_.getName.startsWith("graft-"))
+      val r1 = q(spark, sfDir).collect()
+      val after1 = stateDirs
+      val r2 = q(spark, sfDir).collect()
+      assert(stateDirs == after1,
+        "a repeated execution (Bench warmup+timed, Verify) must reuse the " +
+          s"JVM-cached $what directory, not rebuild a fresh one")
+      assert(r1.length == r2.length)
+      assert(r1.toSet == r2.toSet)
+    }
   }
 
   test("marginMine: mutual argmax, neighborhood-scaled margins, " +
