@@ -28,20 +28,39 @@ object Profile {
       var end: Long, stages: mutable.Buffer[(Int, String, Long, Int)])
     val jobs = mutable.LinkedHashMap.empty[Int, J]
     val stageToJob = mutable.Map.empty[Int, Int]
+    // barrier: a marker job in its own group; the listener bus delivers in
+    // order, so once the marker's end event arrives every event of the
+    // jobs before it has been delivered too
+    val barrierGroup = "graft-profile-barrier"
+    val markers = mutable.Set.empty[Int]
+    val markerEnded = new java.util.concurrent.Semaphore(0)
+    def barrier(): Unit = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(barrierGroup, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      markerEnded.acquire()
+    }
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .getOrElse("")
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
         jobs.synchronized {
-          jobs(e.jobId) = J(e.jobId, d, e.time, 0L, mutable.Buffer.empty)
-          e.stageIds.foreach(s => stageToJob(s) = e.jobId)
+          if (prop("spark.jobGroup.id").contains(barrierGroup))
+            markers += e.jobId
+          else {
+            val d = prop("spark.job.description")
+              .orElse(prop("callSite.short")).getOrElse("")
+            jobs(e.jobId) = J(e.jobId, d, e.time, 0L, mutable.Buffer.empty)
+            e.stageIds.foreach(s => stageToJob(s) = e.jobId)
+          }
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
+        jobs.synchronized {
+          if (markers.remove(e.jobId)) markerEnded.release()
+          else jobs.get(e.jobId).foreach(_.end = e.time)
+        }
       override def onStageCompleted(
           e: SparkListenerStageCompleted): Unit = jobs.synchronized {
         val si = e.stageInfo
@@ -59,21 +78,19 @@ object Profile {
     val fn = SparkEntry.queries(name)
     // warmup (codegen/JIT) exactly like Bench
     fn(spark, sfDir).count()
+    barrier()
     (1 to passes).foreach { p =>
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
       graft.ml.CacheLifecycle.releaseAll()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val total = (System.nanoTime() - t0) / 1e9
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(500)
+      barrier()
       println(f"==== pass $p: $name total ${total}%.3f s, " +
         s"${jobs.size} jobs ====")
       jobs.synchronized {
-        // the listener bus is async and waitUntilEmpty is private[spark]:
-        // a job whose end event has not landed yet would print a huge
-        // negative duration — drop it instead (dev tool; the job count
-        // line above still reports the true total)
+        // a job still running after the pass (none, barring jobs the
+        // query leaves behind) has no end time: drop it from the timings
         val js = jobs.values.toSeq.filter(_.end != 0L)
         val sumJ = js.map(j => (j.end - j.start) / 1e3).sum
         println(f"  sum of job wall times: $sumJ%.3f s " +

@@ -783,14 +783,12 @@ object ExprCompiler {
       case "$jq" | "$jslt" =>
         val input =
           if (n.has("input")) compile(n.get("input"), ctx) else ctx.doc.root
-        val text = n.get("script").asText()
-        val script =
-          if (text.contains("\n") || text.trim.startsWith(".") ||
-            text.trim.startsWith("{")) text
-          else ctx.scripts(text)
+        // base = the script file itself, so its relative imports resolve
+        val (script, base) =
+          graft.op.Scripts.resolve(n.get("script").asText(), ctx.scripts)
         val program =
-          if (op == "$jq") graft.jq.MiniJq.compile(script, ctx.scripts)
-          else graft.jq.MiniJslt.compile(script, ctx.scripts)
+          if (op == "$jq") graft.jq.MiniJq.compile(script, ctx.scripts, base)
+          else graft.jq.MiniJslt.compile(script, ctx.scripts, base)
         val run = udf((json: String) =>
           Js.render(program(Js.parse(json))))
         run(to_json(input))

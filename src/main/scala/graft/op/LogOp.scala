@@ -1,10 +1,12 @@
 package graft.op
 
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.TextNode
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.json.Js
+import graft.expr.{Ctx, ExprCompiler}
 
 /** Where `$log`/`$trace` entries (and the custom JSLT `trace` function) go.
   * Implementations run on EXECUTORS — they must be Serializable and cheap
@@ -77,54 +79,47 @@ object LogSink {
   */
 object LogOp {
 
-  /** `$log` over a typed frame. Non-object spec: the stage object itself is
-    * logged once (reference logStageObject) and the stage is a passthrough;
-    * an object without `message` is a passthrough too.
+  /** `$log`. Non-object spec: the stage object itself is logged once
+    * (reference logStageObject) and the stage is a passthrough; an object
+    * without `message` is a passthrough too.
     */
   def log(df: DataFrame, spec: JsonNode, env: Env): DataFrame =
-    log(df, spec, env, n => Stages.expr(df, n, env), typedCorr(df))
-
-  /** `$log` over a schemaless message frame: expressions evaluate against
-    * the variant parse of `value`, `_corr` comes out of the JSON text.
-    */
-  def log(df: DataFrame, spec: JsonNode, env: Env,
-      compile: JsonNode => Column, corr: Column): DataFrame =
     if (!spec.isObject) {
       env.logger(env.application, "INFO", quote(Js.render(spec)),
         null, null, null)
       df
     } else if (!spec.has("message")) df
     else {
+      val ctx = Stages.ctxOf(df, env)
+      def compile(n: JsonNode) = ExprCompiler.compile(n, ctx)
       val level =
         if (spec.has("level")) compile(spec.get("level")).cast(StringType)
         else lit(null).cast(StringType)
       val attributes = Option(spec.get("attributes"))
         .map(a => stringize(df, compile(a)))
       emit(df, env.logger, env.application, level,
-        stringize(df, compile(spec.get("message"))), attributes, corr)
+        stringize(df, compile(spec.get("message"))), attributes, corr(ctx))
     }
 
   /** `$trace`: every message (or the expression's value) at INFO to the
     * engine logger (docs/aggregation_stages.md:804-824).
     */
-  def trace(df: DataFrame, spec: JsonNode, env: Env): DataFrame =
-    trace(df, spec, env, n => Stages.expr(df, n, env),
-      to_json(struct(df.columns.filterNot(_.startsWith("__")).map(col): _*)),
-      typedCorr(df))
-
-  def trace(df: DataFrame, spec: JsonNode, env: Env,
-      compile: JsonNode => Column, whole: Column, corr: Column): DataFrame = {
+  def trace(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
+    val ctx = Stages.ctxOf(df, env)
     val message =
-      if (spec == null || spec.isNull || spec.isBoolean) whole
-      else stringize(df, compile(spec))
-    emit(df, env.logger, traceLogger, lit("INFO"), message, None, corr)
+      if (spec == null || spec.isNull || spec.isBoolean)
+        Stages.messageJson(df)
+      else stringize(df, ExprCompiler.compile(spec, ctx))
+    emit(df, env.logger, traceLogger, lit("INFO"), message, None, corr(ctx))
   }
 
   val traceLogger = "graft.streams"
 
-  private def typedCorr(df: DataFrame): Column =
-    if (df.columns.contains("_corr")) col("_corr").cast(StringType)
-    else lit(null).cast(StringType)
+  /** The message's `_corr` as a string (null when it has none). */
+  private def corr(ctx: Ctx): Column =
+    (if (ctx.doc.has("_corr"))
+      ctx.doc.pathAs("_corr", TextNode.valueOf(""))
+    else lit(null)).cast(StringType)
 
   /** The reference converts the evaluated message to a string and wraps it
     * in quotes to defuse java.util.logging formatting (escapeFormatting).

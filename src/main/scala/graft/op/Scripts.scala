@@ -5,9 +5,11 @@ package graft.op
   * so the only reliable test is whether the loader resolves the text as
   * a name. Multi-line text is always inline. A typo'd name then surfaces
   * as a visible parse error on the "inline" program instead of silently
-  * misclassifying valid one-liners. Four call sites used to carry
-  * hand-rolled variants of this heuristic; drift between them is exactly
-  * how the one-liner bug shipped.
+  * misclassifying valid one-liners. Every script reference goes through
+  * here: the `$jq`/`$jslt` stages and expression operators, aggregate
+  * reducers (a `.jslt` file name picks JSLT) and JSON-land reducer
+  * stages. Hand-rolled copies of a "starts with `.` or `{`" heuristic
+  * drifted apart, which is how the one-liner bug shipped.
   */
 object Scripts {
   /** (script source, base path for relative imports — "" when inline). */

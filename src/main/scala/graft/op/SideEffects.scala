@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.json.Js
+import graft.expr.ExprCompiler
 
 /** Pluggable transports for the side-effecting stages. Tests inject
   * deterministic fakes; production wires real HTTP/S3 clients. Both must be
@@ -117,11 +118,13 @@ private[graft] object PartitionCalls {
   */
 object Http {
 
-  def apply(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
-    val ctx = Stages.ctxOf(df)
+  /** `df` plus the call's `__call {response, httpError}` column. */
+  private[graft] def call(df: DataFrame, spec: JsonNode, env: Env)
+      : DataFrame = {
+    val ctx = Stages.ctxOf(df, env)
     def exprStr(name: String): Column =
       if (spec.has(name)) {
-        val c = Stages.expr(df, spec.get(name))
+        val c = ExprCompiler.compile(spec.get(name), ctx)
         ctx.typeOf(c) match {
           case _: StructType | _: ArrayType | _: MapType => to_json(c)
           case _                                         => c.cast(StringType)
@@ -129,7 +132,7 @@ object Http {
       } else lit(null).cast(StringType)
 
     val transport = env.http
-    val withCall = PartitionCalls.appendCall(df,
+    PartitionCalls.appendCall(df,
       Seq(exprStr("method"), exprStr("url"), exprStr("headers"),
         exprStr("body")),
       PartitionCalls.callRowType,
@@ -139,8 +142,11 @@ object Http {
         args(0).asInstanceOf[String], args(1).asInstanceOf[String],
         args(2).asInstanceOf[String], args(3).asInstanceOf[String]))
     }
+  }
+
+  def apply(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
     val withErr =
-      withCall.withColumn("httpError", col("__call.httpError"))
+      call(df, spec, env).withColumn("httpError", col("__call.httpError"))
     val unwindFlag = spec.has("unwind") && spec.get("unwind").asBoolean()
     val out = Option(spec.get("as")).map(_.asText()) match {
       case None => withErr
@@ -165,18 +171,18 @@ object Http {
   */
 object SignJwt {
 
-  def apply(df: DataFrame, spec: JsonNode,
-      exprC: (DataFrame, JsonNode) => Column = (d, n) => Stages.expr(d, n))
-      : DataFrame = {
+  def apply(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
     val as = spec.get("as").asText()
     val pem = spec.get("privateKey").asText()
     val ttlSeconds =
       if (spec.has("ttl")) spec.get("ttl").asLong() else 5L
     def claimExpr(name: String): Column =
-      if (spec.has(name)) exprC(df, spec.get(name)).cast(StringType)
+      if (spec.has(name))
+        Stages.expr(df, spec.get(name), env).cast(StringType)
       else lit(null).cast(StringType)
     val extraClaims =
-      if (spec.has("claims")) to_json(exprC(df, spec.get("claims")))
+      if (spec.has("claims"))
+        to_json(Stages.expr(df, spec.get("claims"), env))
       else lit(null).cast(StringType)
 
     val sign = udf((iss: String, sub: String, aud: String, kid: String,
@@ -240,13 +246,12 @@ object S3Csv {
     def clear(): Unit = progress.clear()
   }
 
-  def apply(df: DataFrame, spec: JsonNode, env: Env,
-      exprC: (DataFrame, JsonNode) => Column = (d, n) => Stages.expr(d, n))
-      : DataFrame = {
-    val bucket = exprC(df, spec.get("bucket")).cast(StringType)
-    val key = exprC(df, spec.get("key")).cast(StringType)
+  def apply(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
+    val bucket = Stages.expr(df, spec.get("bucket"), env).cast(StringType)
+    val key = Stages.expr(df, spec.get("key"), env).cast(StringType)
     val eTag =
-      if (spec.has("eTag")) exprC(df, spec.get("eTag")).cast(StringType)
+      if (spec.has("eTag"))
+        Stages.expr(df, spec.get("eTag"), env).cast(StringType)
       else lit(null).cast(StringType)
     // String.split takes a regex — quote the literal separator
     val separator = java.util.regex.Pattern.quote(
@@ -310,12 +315,10 @@ object S3Csv {
   * land in httpError.
   */
 object S3Transfer {
-  def apply(df: DataFrame, spec: JsonNode, env: Env,
-      exprC: (DataFrame, JsonNode) => Column = (d, n) => Stages.expr(d, n))
-      : DataFrame = {
-    val url = exprC(df, spec.get("url")).cast(StringType)
-    val bucket = exprC(df, spec.get("bucket")).cast(StringType)
-    val key = exprC(df, spec.get("key")).cast(StringType)
+  def apply(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
+    val url = Stages.expr(df, spec.get("url"), env).cast(StringType)
+    val bucket = Stages.expr(df, spec.get("bucket"), env).cast(StringType)
+    val key = Stages.expr(df, spec.get("key"), env).cast(StringType)
     val transport = env.http
     val store = env.store
     val out = PartitionCalls.appendCall(df, Seq(url, bucket, key),
@@ -341,11 +344,9 @@ object S3Transfer {
   * multipart/mixed; extra attachment fields become MIME part headers.
   */
 object S3Attachments {
-  def apply(df: DataFrame, spec: JsonNode, env: Env,
-      exprC: (DataFrame, JsonNode) => Column = (d, n) => Stages.expr(d, n))
-      : DataFrame = {
-    val url = exprC(df, spec.get("url")).cast(StringType)
-    val attachments = to_json(exprC(df, spec.get("attachments")))
+  def apply(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
+    val url = Stages.expr(df, spec.get("url"), env).cast(StringType)
+    val attachments = to_json(Stages.expr(df, spec.get("attachments"), env))
     val transport = env.http
     val store = env.store
     val out = PartitionCalls.appendCall(df, Seq(url, attachments),
@@ -379,18 +380,12 @@ object S3Attachments {
   * object; passthrough output.
   */
 object S3Out {
-  def apply(df: DataFrame, spec: JsonNode, env: Env,
-      exprC: (DataFrame, JsonNode) => Column = (d, n) => Stages.expr(d, n))
-      : DataFrame = {
-    val bucket = exprC(df, spec.get("bucket")).cast(StringType)
-    val key = exprC(df, spec.get("key")).cast(StringType)
+  def apply(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
+    val bucket = Stages.expr(df, spec.get("bucket"), env).cast(StringType)
+    val key = Stages.expr(df, spec.get("key"), env).cast(StringType)
     val store = env.store
-    // schemaless frames: the message JSON IS the value column
-    val payload =
-      if (graft.streaming.MessagePipeline.isMessageShaped(df)) col("value")
-      else to_json(struct(df.columns
-        .filterNot(Set("__ord", "__raw")).map(col): _*))
-    val out = PartitionCalls.appendCall(df, Seq(bucket, key, payload),
+    val out = PartitionCalls.appendCall(df,
+      Seq(bucket, key, Stages.messageJson(df)),
       BooleanType,
       () => store.open(), () => store.close(),
       PartitionCalls.maxInFlight(spec)) { args =>

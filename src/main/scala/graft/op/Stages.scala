@@ -5,7 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.json.Js
-import graft.expr.{Ctx, ExprCompiler, QueryCompiler, RelationalDoc}
+import graft.expr.{Ctx, ExprCompiler, QueryCompiler, RelationalDoc, VariantDoc}
+import graft.streaming.{MessagePipeline => Msg}
 
 /** Environment a pipeline compiles against: how to resolve `$lookup` /
   * `$merge` collections, and where side-effect stages route.
@@ -47,16 +48,41 @@ final case class Env(
 
 /** Compiles MongoDB aggregation pipeline stages
   * (/root/reference/docs/aggregation_stages.md, SURVEY §2) to DataFrame
-  * transforms. Streaming-specific semantics (state stores, timers) live in
-  * graft.streaming; this compiler produces the relational/batch plan that
-  * both paths share.
+  * transforms — the one stage compiler for both document models. Typed
+  * frames keep their documents in top-level columns; schemaless message
+  * frames — `(key, value string-JSON)`, the reference's native model —
+  * keep them in `value`. `ctxOf` decides which, and every stage argument
+  * compiles through it. Stages whose bodies differ between the models
+  * (JSON splicing, grouping, joins) take their message-model body from
+  * graft.streaming.MessagePipeline; streaming-specific semantics (state
+  * stores, timers) live in graft.streaming.
   */
 object Stages {
   type Stage = DataFrame => DataFrame
 
+  /** Whether `df` is a schemaless message frame: `key` and a string
+    * `value`, plus nothing but transport and routing columns.
+    */
+  def isMessageShaped(df: DataFrame): Boolean = {
+    val cols = df.columns.toSet
+    cols.contains("value") && cols.contains("key") &&
+      cols.subsetOf(Set("key", "value", "__ord", "_topic", "_delay_ms",
+        "_deliver_at")) &&
+      df.schema("value").dataType == StringType
+  }
+
+  /** The document model of `df`, the one place it is decided: the
+    * variant parse of `value` for a message frame, the typed columns
+    * otherwise. Each stage asks for its input frame, and a message-model
+    * body returns a message frame, so a pipeline keeps the model its input
+    * picked — until a stage turns typed rows into messages (`$per` on a
+    * stream), when the stages after it see messages.
+    */
   def ctxOf(df: DataFrame, env: Env = null): Ctx =
     Ctx(
-      new RelationalDoc(df.columns.toSeq),
+      if (isMessageShaped(df))
+        new VariantDoc(call_function("parse_json", col("value")))
+      else new RelationalDoc(df.columns.toSeq),
       typeOf = c =>
         try df.select(c).schema.head.dataType
         catch { case _: Exception => NullType },
@@ -65,36 +91,55 @@ object Stages {
           name => throw new IllegalArgumentException(s"no script loader for $name")
         else env.scripts)
 
-  def expr(df: DataFrame, n: JsonNode): Column =
-    ExprCompiler.compile(n, ctxOf(df))
-
-  def expr(df: DataFrame, n: JsonNode, env: Env): Column =
+  def expr(df: DataFrame, n: JsonNode, env: Env = null): Column =
     ExprCompiler.compile(n, ctxOf(df, env))
 
+  /** The message's own JSON text: `value` of a message frame, else the
+    * typed row without its transport columns (`__ord`, `__raw`).
+    */
+  def messageJson(df: DataFrame): Column =
+    if (isMessageShaped(df)) col("value")
+    else to_json(struct(df.columns
+      .filterNot(Set("__ord", "__raw")).map(col): _*))
+
+  /** The stage body for the frame's document model. */
+  private def byModel(typed: Stage, message: Stage): Stage =
+    df => if (isMessageShaped(df)) message(df) else typed(df)
+
   def compile(name: String, spec: JsonNode, env: Env): Stage = name match {
-    case "$match"       => df => df.filter(QueryCompiler.compile(spec, ctxOf(df, env)))
-    case "$addFields" | "$set" => df => addFields(df, spec, env)
-    case "$unset"       => df => unset(df, spec)
-    case "$project"     => df => project(df, spec, env)
-    case "$replaceRoot" => df => replaceRoot(df, spec.get("newRoot"))
-    case "$replaceWith" => df => replaceRoot(df, spec)
-    case "$unwind"      => df => unwind(df, spec)
-    case "$group"       => df => group(df, spec)
-    case "$bucket"      => df => bucket(df, spec)
+    case "$match" =>
+      df => df.filter(QueryCompiler.compile(spec, ctxOf(df, env)))
+    case "$addFields" | "$set" =>
+      byModel(addFields(_, spec, env), Msg.addFields(_, spec, env))
+    case "$unset"       => byModel(unset(_, spec), Msg.unset(_, spec))
+    case "$project" =>
+      byModel(project(_, spec, env), Msg.project(_, spec, env))
+    case "$replaceRoot" | "$replaceWith" =>
+      val newRoot = if (name == "$replaceRoot") spec.get("newRoot") else spec
+      byModel(replaceRoot(_, newRoot, env), Msg.replaceRoot(_, newRoot, env))
+    case "$unwind"      => byModel(unwind(_, spec), Msg.unwind(_, spec))
+    case "$group"       => byModel(group(_, spec, env), Msg.group(_, spec, env))
+    case "$bucket"      => byModel(bucket(_, spec, env), Msg.bucket(_, spec, env))
     case "$count" =>
-      df => df.agg(count(lit(1)).as(spec.asText()))
-    case "$lookup"      => df => lookup(df, spec, env)
-    case "$deduplicate" => df => deduplicate(df, spec)
-    case "$deduplicateNear" => df => deduplicateNear(df, spec)
+      byModel(_.agg(count(lit(1)).as(spec.asText())),
+        Msg.countAs(_, spec.asText()))
+    case "$lookup"      => byModel(lookup(_, spec, env), Msg.lookup(_, spec, env))
+    case "$deduplicate" => df => deduplicate(df, spec, env)
+    case "$deduplicateNear" => df => deduplicateNear(df, spec, env)
     case "$per" => df =>
-      if (df.isStreaming) graft.streaming.PerStage(df, spec)
+      if (df.isStreaming || isMessageShaped(df))
+        graft.streaming.PerStage(df, spec)
       else per(df, spec)
-    case "$setKey" =>
-      df => df.withColumn("_key", expr(df, spec).cast(StringType))
+    case "$setKey" => df =>
+      df.withColumn(if (isMessageShaped(df)) "key" else "_key",
+        expr(df, spec, env).cast(StringType))
     case "$send" => // dynamic topic routing: sink honors per-row `_topic`
-      df => df.withColumn("_topic", expr(df, spec.get("topic")).cast(StringType))
-    case "$redact"   => df => Redact(df, spec)
-    case "$validate" => df => Validate(df, Validate.resolve(spec, env.scripts))
+      df => df.withColumn("_topic",
+        expr(df, spec.get("topic"), env).cast(StringType))
+    case "$redact"   => byModel(Redact(_, spec), Msg.redact(_, spec))
+    case "$validate" =>
+      val resolved = Validate.resolve(spec, env.scripts)
+      byModel(Validate(_, resolved), Msg.validate(_, resolved))
     case "$merge"    => df => merge(df, spec, env)
     case "$out" => // $merge with on:_id/replace/insert — a COLLECTION
       df => { env.collectionSink(spec.asText(), df); df }
@@ -106,15 +151,17 @@ object Stages {
         if (spec.get("on").isArray) Js.elems(spec.get("on")).map(_.asText())
         else Seq(spec.get("on").asText())
       df => {
-        env.delete(spec.get("from").asText(), df, on)
+        env.delete(spec.get("from").asText(),
+          if (isMessageShaped(df)) Msg.fields(df, on) else df, on)
         df
       }
-    case "$http"    => df => Http(df, spec, env)
+    case "$http" => byModel(Http(_, spec, env), Msg.http(_, spec, env))
     // $jq (docs/aggregation_stages.md:245-260) and $jslt (:262-277):
-    // whole-message transform in either language. Schemaless output →
-    // (key, value-as-JSON-string); an extension object form
-    // {script, schema} keeps the result typed for downstream stages.
-    case "$jq" | "$jslt" => df => {
+    // whole-message transform in either language. A message frame stays
+    // one; a typed frame's output is (key, value-as-JSON-string), or,
+    // with the extension object form {script, schema}, typed columns for
+    // downstream stages.
+    case "$jq" | "$jslt" =>
       val (text, schema) =
         if (spec.isTextual) (spec.asText(), None)
         else (spec.get("script").asText(),
@@ -124,26 +171,28 @@ object Stages {
       val program =
         if (name == "$jq") graft.jq.MiniJq.compile(script, env.scripts, base)
         else graft.jq.MiniJslt.compile(script, env.scripts, base)
+      // null-safe: a Kafka tombstone (null value) passes through — a
+      // thrown parse would be a poison pill the checkpoint replays
       val apply = udf((json: String) =>
-        graft.json.Js.render(program(graft.json.Js.parse(json))))
-      val keyCol =
-        if (df.columns.contains("_id")) col("_id").cast(StringType)
-        else lit(null).cast(StringType)
-      val transformed = df.select(keyCol.as("__oldkey"),
-        apply(to_json(struct(df.columns
-          .filterNot(Set("__ord", "__raw")).map(col): _*))).as("value"))
-      schema match {
-        case Some(ddl) =>
-          transformed
-            .select(from_json(col("value"), StructType.fromDDL(ddl)).as("v"))
-            .select("v.*")
-        case None => // changed _id re-keys the message (docs:248)
-          transformed.select(
-            coalesce(get_json_object(col("value"), "$._id"),
-              col("__oldkey")).as("_key"),
-            col("value"))
-      }
-    }
+        if (json == null) null else Js.render(program(Js.parse(json))))
+      byModel(df => {
+        val keyCol =
+          if (df.columns.contains("_id")) col("_id").cast(StringType)
+          else lit(null).cast(StringType)
+        val transformed = df.select(keyCol.as("__oldkey"),
+          apply(messageJson(df)).as("value"))
+        schema match {
+          case Some(ddl) =>
+            transformed
+              .select(from_json(col("value"), StructType.fromDDL(ddl)).as("v"))
+              .select("v.*")
+          case None => // changed _id re-keys the message (docs:248)
+            transformed.select(
+              coalesce(get_json_object(col("value"), "$._id"),
+                col("__oldkey")).as("_key"),
+              col("value"))
+        }
+      }, Msg.jq(_, apply(_)))
     // $lag (docs/aggregation_stages.md:279-318): forward at most one
     // message per `interval` (default 30 s, reference
     // LagStage.filterMessages) with the consumer-lag snapshot attached
@@ -154,6 +203,7 @@ object Stages {
         if (spec.has("interval")) spec.get("interval").asLong() else 30000L
       val stageId = java.util.UUID.randomUUID().toString
       val lagFn = env.lag
+      val as = spec.get("as").asText()
       df => {
         val sampled =
           if (intervalMs <= 0) df
@@ -166,12 +216,21 @@ object Stages {
             df.filter(pass())
           }
         val fetch = udf(() => lagFn()).asNondeterministic()
-        sampled.withColumn(spec.get("as").asText(), fetch())
+        if (isMessageShaped(df))
+          Msg.splice(sampled, as, call_function("parse_json", fetch()))
+        else sampled.withColumn(as, fetch())
       }
-    case "$s3Transfer"    => df => S3Transfer(df, spec, env)
-    case "$s3Attachments" => df => S3Attachments(df, spec, env)
-    case "$signJwt" => df => SignJwt(df, spec)
-    case "$s3Csv"   => df => S3Csv(df, spec, env)
+    case "$s3Transfer" =>
+      byModel(S3Transfer(_, spec, env), Msg.s3Transfer(_, spec, env))
+    case "$s3Attachments" =>
+      byModel(S3Attachments(_, spec, env), Msg.s3Attachments(_, spec, env))
+    case "$signJwt" =>
+      val as = spec.get("as").asText()
+      byModel(SignJwt(_, spec, env),
+        df => Msg.splice(SignJwt(df, spec, env), as, col(as)).drop(as))
+    case "$s3Csv" => byModel(S3Csv(_, spec, env),
+      // line-messages keep the message-frame shape
+      S3Csv(_, spec, env).withColumnRenamed("_key", "key"))
     case "$s3Out"   => df => S3Out(df, spec, env)
     // $delay re-delivers to a topic after `duration` ms
     // (docs/aggregation_stages.md:118-159). Micro-batch engines delay at
@@ -185,11 +244,11 @@ object Stages {
     case "$delay" =>
       if (spec.has("deliverAt"))
         df => {
-          val c = expr(df, spec.get("deliverAt"), env)
+          val ctx = ctxOf(df, env)
+          val c = ExprCompiler.compile(spec.get("deliverAt"), ctx)
           // numeric deliverAt = epoch MILLIS (a bare long cast would read
           // it as seconds); anything else casts (timestamp, ISO string)
-          val at = (try df.select(c).schema.head.dataType
-            catch { case _: Exception => NullType }) match {
+          val at = ctx.typeOf(c) match {
             case _: NumericType => timestamp_millis(c.cast("long"))
             case _ => c.cast("timestamp")
           }
@@ -317,8 +376,9 @@ object Stages {
     build(Vector.empty, tails.map(_.toSeq))
   }
 
-  private def replaceRoot(df: DataFrame, newRoot: JsonNode): DataFrame =
-    df.select(expr(df, newRoot).as("__root")).select("__root.*")
+  private def replaceRoot(df: DataFrame, newRoot: JsonNode, env: Env)
+      : DataFrame =
+    df.select(expr(df, newRoot, env).as("__root")).select("__root.*")
 
   /** One message per array element; element replaces the field. Reference
     * drops messages whose array is absent or empty (explode, not
@@ -351,8 +411,9 @@ object Stages {
   /** Accumulator set per docs/aggregation_stages.md:35. `$addToSet` is
     * sorted for determinism (Mongo set order is unspecified).
     */
-  private def accumulator(df: DataFrame, op: String, arg: JsonNode): Column = {
-    lazy val c = expr(df, arg)
+  private def accumulator(df: DataFrame, op: String, arg: JsonNode,
+      env: Env): Column = {
+    lazy val c = expr(df, arg, env)
     // Arrival-order accumulators ($first/$last/$mergeObjects) are
     // nondeterministic across partition orders; when the frame carries the
     // streaming layer's __ord stamp, rank by it instead (max_by/min_by).
@@ -391,25 +452,26 @@ object Stages {
     }
   }
 
-  private def aggColumns(df: DataFrame, spec: JsonNode): Seq[Column] =
+  private def aggColumns(df: DataFrame, spec: JsonNode, env: Env)
+      : Seq[Column] =
     Js.fields(spec).collect {
       case (field, v) if field != "_id" =>
         val (op, arg) = Js.asOp(v).getOrElse(
           throw new IllegalArgumentException(s"accumulator expected for $field"))
-        accumulator(df, op, arg).as(field)
+        accumulator(df, op, arg, env).as(field)
     }
 
-  private def group(df: DataFrame, spec: JsonNode): DataFrame = {
+  private def group(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
     val idNode = spec.get("_id")
     val id =
-      if (idNode == null || idNode.isNull) lit(null) else expr(df, idNode)
-    val aggs = aggColumns(df, spec)
+      if (idNode == null || idNode.isNull) lit(null) else expr(df, idNode, env)
+    val aggs = aggColumns(df, spec, env)
     if (aggs.isEmpty) df.select(id.as("_id")).distinct()
     else df.groupBy(id.as("_id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  private def bucket(df: DataFrame, spec: JsonNode): DataFrame = {
-    val groupBy = expr(df, spec.get("groupBy"))
+  private def bucket(df: DataFrame, spec: JsonNode, env: Env): DataFrame = {
+    val groupBy = expr(df, spec.get("groupBy"), env)
     val bounds = Js.elems(spec.get("boundaries")).map(QueryCompiler.litNode)
     val default =
       if (spec.has("default")) QueryCompiler.litNode(spec.get("default"))
@@ -421,7 +483,7 @@ object Stages {
     }
     val out = spec.get("output")
     val aggs =
-      if (out == null) Seq(count(lit(1)).as("count")) else aggColumns(df, out)
+      if (out == null) Seq(count(lit(1)).as("count")) else aggColumns(df, out, env)
     df.groupBy(bucketId.as("_id")).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -550,8 +612,9 @@ object Stages {
     * the banded transformWithState hops, batch via the banded join
     * analog (StatefulOps scaladoc has the semantics).
     */
-  private def deduplicateNear(df: DataFrame, spec: JsonNode): DataFrame = {
-    val e = expr(df, spec.get("expression"))
+  private def deduplicateNear(df: DataFrame, spec: JsonNode, env: Env)
+      : DataFrame = {
+    val e = expr(df, spec.get("expression"), env)
     val maxDist =
       if (spec.has("maxDistance")) spec.get("maxDistance").asInt() else 3
     val dupTopic =
@@ -566,18 +629,23 @@ object Stages {
       dupTopic)
   }
 
-  private def deduplicate(df: DataFrame, spec: JsonNode): DataFrame = {
-    val e = expr(df, spec.get("expression"))
+  private def deduplicate(df: DataFrame, spec: JsonNode, env: Env)
+      : DataFrame = {
+    val ctx = ctxOf(df, env)
+    val e = ExprCompiler.compile(spec.get("expression"), ctx)
     if (df.isStreaming)
-      // transformWithState dedup with cacheWindow as real state TTL —
-      // plain dropDuplicates on a stream grows its state forever AND
-      // silently ignores cacheWindow (the schemaless path routes to the
-      // same operator; this typed path must too)
+      // transformWithState dedup with cacheWindow as real state TTL
+      // (docs/aggregation_stages.md:97-104), wall-clock expiry like the
+      // reference's cache — plain dropDuplicates on a stream grows its
+      // state forever AND silently ignores cacheWindow
       graft.streaming.StatefulOps.deduplicate(df, e,
         if (spec.has("cacheWindow")) Some(spec.get("cacheWindow").asLong())
         else None)
-    else
-      df.withColumn("__dedup", e).dropDuplicates("__dedup").drop("__dedup")
+    else {
+      // a variant (schemaless) key cannot be grouped on: use its text
+      val k = if (ctx.typeOf(e) == VariantType) e.cast(StringType) else e
+      df.withColumn("__dedup", k).dropDuplicates("__dedup").drop("__dedup")
+    }
   }
 
   /** Batch analog of the $per batching stage (streaming impl batches arrival
@@ -605,8 +673,11 @@ object Stages {
     val into = spec.get("into").asText()
     val (wm, wnm) = mergeModes(spec)
     val keyed =
-      if (spec.has("key")) df.withColumn("_id", expr(df, spec.get("key")))
-      else df
+      if (!spec.has("key")) df
+      else {
+        val k = expr(df, spec.get("key"), env)
+        if (isMessageShaped(df)) Msg.rekey(df, k) else df.withColumn("_id", k)
+      }
     // non-default Mongo modes ride in-band as literal metadata columns
     // (the $send/_topic pattern); the collection sink peels them off
     val stamped =

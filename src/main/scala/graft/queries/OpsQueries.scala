@@ -262,7 +262,8 @@ object OpsQueries {
       spec.put("as", "token"); spec.put("privateKey", pem); spec.put("ttl", 60L)
       spec.set[com.fasterxml.jackson.databind.JsonNode]("sub",
         graft.json.Js.parse("\"$r_name\""))
-      val signed = graft.op.SignJwt(Tables.load(spark, sf, "region"), spec)
+      val signed = graft.op.SignJwt(Tables.load(spark, sf, "region"), spec,
+        Tables.env(spark, sf))
       // payload decode is pure column algebra: base64url → base64 via
       // translate, unbase64, then JSON extraction of the claims
       val part = split(col("token"), "\\.")

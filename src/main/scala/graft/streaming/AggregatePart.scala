@@ -59,12 +59,9 @@ object AggregatePart {
     // re-serializing the typed row: schema inference alphabetizes fields,
     // but reducers and the event diff follow document field order. A
     // schemaless (key, value) frame's value IS the raw text already.
-    val isMessage = MessagePipeline.isMessageShaped(commands)
     val json =
       if (commands.columns.contains("__raw")) col("__raw")
-      else if (isMessage) col("value")
-      else to_json(struct(
-        commands.columns.filterNot(Set("__ord", "__raw")).map(col): _*))
+      else graft.op.Stages.messageJson(commands)
     val keyCol = keyOverride
       .getOrElse(
         if (commands.columns.contains("_id")) col("_id")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.json.Js
-import graft.op.{Env, Pipeline, Stages}
+import graft.op.{Env, Pipeline, Scripts, Stages}
 
 /** How an application's edges bind to the world. Production: Kafka topics
   * (`fromTopic` → readStream.format("kafka"), docs/streams.md:47) and
@@ -338,8 +338,6 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
         val src = instr(s"$name.in")(resolveFrom(part))
         val out =
           if (!part.has("pipeline")) src
-          else if (MessagePipeline.isMessageShaped(src))
-            MessagePipeline.compile(part.get("pipeline"), env)(src)
           else Pipeline.compile(part.get("pipeline"), env)(src)
         Seq(name -> instr(s"$name.out")(out))
 
@@ -377,18 +375,9 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
             commands0 // streaming: arrival order IS the iterator order
           else commands0.withColumn("__ord", monotonically_increasing_id())
         // preprocessors may be inline pipelines or file references
-        // (reference app8/app35: `preprocessor: "duplicates.yaml"`);
-        // schemaless (key, value) commands route through the message-mode
-        // compiler like stream parts do
-        def preprocessor(node: JsonNode): DataFrame => DataFrame = {
-          val pipeline =
-            if (node.isTextual) Js.parseYaml(env.scripts(node.asText()))
-            else node
-          df =>
-            if (MessagePipeline.isMessageShaped(df))
-              MessagePipeline.compile(pipeline, env)(df)
-            else Pipeline.compile(pipeline, env)(df)
-        }
+        // (reference app8/app35: `preprocessor: "duplicates.yaml"`)
+        def preprocessor(node: JsonNode): DataFrame => DataFrame =
+          Pipeline.compile(node, env)
         def commandName(df: DataFrame): Column =
           if (df.columns.contains("_command")) col("_command")
           else get_json_object(col("value"), "$._command")
@@ -410,7 +399,7 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
           }
         }.getOrElse(aggPre)
         val keyOverride = Option(part.get("uniqueExpression"))
-          .map(e => Stages.expr(pre, e))
+          .map(e => Stages.expr(pre, e, env))
         val conf = AggregateLogic.Config(
           appName = "", aggType = aggType,
           validators = readValidators(part),
@@ -544,10 +533,8 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
         // topic (docs/state.md:125,176-197): expose the re-keyed command
         // stream under <type>-unique
         val uniqueStream = keyOverride.map { k =>
-          val payload = pre.columns.filterNot(Set("__ord", "__raw")).map(col)
           s"$aggType-unique$envSuffix" -> pre.select(
-            k.cast("string").as("key"),
-            to_json(struct(payload: _*)).as("value"))
+            k.cast("string").as("key"), Stages.messageJson(pre).as("value"))
         }
         // metric subparts `<type>.<purpose>`; declared commands also get
         // the reference's per-command split on the event and reply
@@ -590,14 +577,21 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
       : DataFrame = {
     val window = Option(part.get("window")).map(_.asLong())
     val jname = Option(part.get("name")).map(_.asText()).getOrElse("")
-    def side(n: JsonNode, tag: String): (DataFrame, Column) = {
-      // metric subparts `<part>.left.in`/`<part>.right.in`
-      // (docs/telemetry.md:38)
-      val df0 = instr(s"$jname.$tag.in")(resolveFrom(n))
-      val onCol = Stages.expr(df0, n.get("on")).cast("string")
+    // metric subparts `<part>.left.in`/`<part>.right.in`
+    // (docs/telemetry.md:38)
+    val inputs = Seq("left", "right").map(tag =>
+      instr(s"$jname.$tag.in")(resolveFrom(part.get(tag))))
+    // a schemaless side makes the output a message frame: both sides then
+    // join as their message JSON
+    val message = inputs.exists(Stages.isMessageShaped)
+    def side(df0: DataFrame, tag: String): (DataFrame, Column) = {
+      val n = part.get(tag)
+      val onCol = Stages.expr(df0, n.get("on"), env).cast("string")
       // __ord/__raw are transport metadata: keeping them in the payload
       // would defeat the value-keyed duplicate suppression below
-      val payload = df0.columns.filterNot(Set("__ord", "__raw")).map(col)
+      val payload =
+        if (message) Stages.messageJson(df0)
+        else struct(df0.columns.filterNot(Set("__ord", "__raw")).map(col): _*)
       // null keys never join (filtered), and the coalesce makes the key
       // STATICALLY non-nullable: the join state schema must not depend
       // on when the optimizer infers non-nullability, or a restart can
@@ -609,11 +603,11 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
       // (re-running the topic yields the identical join), where
       // arrival time depends on when the job happened to read the row
       val jts = Option(n.get("timestamp"))
-        .map(e => Stages.expr(df0, e).cast("timestamp"))
+        .map(e => Stages.expr(df0, e, env).cast("timestamp"))
         .getOrElse(current_timestamp())
       val packed = df0.where(onCol.isNotNull && jts.isNotNull).select(
         coalesce(onCol, lit("")).as(s"__key_$tag"),
-        struct(payload: _*).as(tag),
+        payload.as(tag),
         // statically non-nullable for the same restart-schema reason as
         // the key (the coalesce arm is unreachable after the filter)
         coalesce(jts, to_timestamp(lit("1970-01-01")))
@@ -624,8 +618,8 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
         else packed
       (withWm, col(s"__key_$tag"))
     }
-    val (l, lk) = side(part.get("left"), "left")
-    val (r, rk) = side(part.get("right"), "right")
+    val (l, lk) = side(inputs(0), "left")
+    val (r, rk) = side(inputs(1), "right")
     // Reference semantics default the window to INFINITE (App.java:693).
     // On a stream that means both join buffers grow forever — the one
     // silent unbounded-state path left in the engine — so the faithful
@@ -666,6 +660,13 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
     // both produce them). Streaming: value-keyed dedup riding the join's
     // own ingestion-time watermark (a fresh watermark downstream of a
     // stream-stream join is disallowed); batch: distinct on the output.
+    // a message join emits {_id, left, right} as one keyed message
+    val output =
+      if (!message) Seq(col("__key_left").as("_id"), col("left"), col("right"))
+      else Seq(col("__key_left").as("key"), to_json(struct(
+        col("__key_left").as("_id"),
+        call_function("parse_json", col("left")).as("left"),
+        call_function("parse_json", col("right")).as("right"))).as("value"))
     if (joined.isStreaming && window.isDefined)
       joined
         .withColumn("__jv",
@@ -673,10 +674,9 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
         // keep exactly one event-time column for the dedup state eviction
         .drop("__jts_right")
         .dropDuplicatesWithinWatermark("__jv")
-        .select(col("__key_left").as("_id"), col("left"), col("right"))
+        .select(output: _*)
     else {
-      val out =
-        joined.select(col("__key_left").as("_id"), col("left"), col("right"))
+      val out = joined.select(output: _*)
       if (joined.isStreaming) out else out.dropDuplicates()
     }
   }
@@ -698,12 +698,8 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
               val p = JsonPipeline.compile(r, env.scripts)
               in => p(in.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
             } else {
-              val text = r.asText()
-              val inline = text.contains("\n") || text.trim.startsWith(".") ||
-                text.trim.startsWith("{")
-              val script = if (inline) text else env.scripts(text)
-              val base = if (inline) "" else text
-              if (!inline && text.endsWith(".jslt"))
+              val (script, base) = Scripts.resolve(r.asText(), env.scripts)
+              if (base.endsWith(".jslt"))
                 graft.jq.MiniJslt.compile(script, env.scripts, base)
               else graft.jq.MiniJq.compile(script, env.scripts, base)
             }

@@ -37,7 +37,7 @@ object DelayedDelivery {
     // schemaless (key, value) message frames: the value IS the JSON text
     // — wrapping it in a struct would redeliver an envelope, not the
     // message (same contract as StreamIo.toKafkaShape)
-    val msg = MessagePipeline.isMessageShaped(df)
+    val msg = graft.op.Stages.isMessageShaped(df)
     val payloadCols =
       df.columns.filterNot(Routing ++ Set("__ord")).map(col)
     val key =

@@ -63,12 +63,10 @@ object JsonPipeline {
   }
 
   private def scriptOf(spec: JsonNode, scripts: String => String)
-      : (String, String) = {
-    val text = if (spec.isTextual) spec.asText() else spec.get("script").asText()
-    val inline = text.contains("\n") || text.trim.startsWith(".") ||
-      text.trim.startsWith("{")
-    if (inline) (text, "") else (scripts(text), text)
-  }
+      : (String, String) =
+    graft.op.Scripts.resolve(
+      if (spec.isTextual) spec.asText() else spec.get("script").asText(),
+      scripts)
 
   /** The expression subset over the current document. */
   def eval(e: JsonNode, doc: JsonNode): JsonNode = e match {

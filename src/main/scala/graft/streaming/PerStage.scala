@@ -2,7 +2,6 @@ package graft.streaming
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Streaming `$per` (docs/aggregation_stages.md:393-411): accumulate
   * `amount` messages into one message whose `as` field is the array;
@@ -15,16 +14,13 @@ import org.apache.spark.sql.functions._
 object PerStage {
 
   def apply(df: DataFrame, spec: JsonNode): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val amount = spec.get("amount").asInt()
     val as = spec.get("as").asText()
     val timeoutMs =
       if (spec.has("timeout")) Some(spec.get("timeout").asLong()) else None
 
-    val payload =
-      if (df.columns.toSet == Set("key", "value")) df.select(col("value"))
-      else df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+    // each batch element is the message itself, transport columns dropped
+    val payload = df.select(graft.op.Stages.messageJson(df).as("value"))
 
     // transformWithState: ListState buffer + a native per-key flush timer
     // (ProcessingTime mode keeps the engine triggering to evaluate timers

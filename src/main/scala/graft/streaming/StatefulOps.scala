@@ -26,10 +26,9 @@ import graft.json.Js
 object StatefulOps {
 
   /** The `$deduplicateNear` per-band signature-log cap's single source
-    * of truth — referenced by both stage parsers (`op.Stages`,
-    * `streaming.MessagePipeline`) and both parameter defaults
-    * (`deduplicateNear`, `NearBandProcessor`) so a spec default and a
-    * processor default can never silently drift apart.
+    * of truth — referenced by the stage parser (`op.Stages`) and both
+    * parameter defaults (`deduplicateNear`, `NearBandProcessor`) so a
+    * spec default and a processor default can never silently drift apart.
     */
   val DefaultMaxPerBand: Int = 4096
 

@@ -118,4 +118,66 @@ class AggregateAppSpec extends AnyFunSuite {
     assert(unique.length == 3)
     assert(unique.map(_._1).toSet == Set("k-7", "k-8"))
   }
+
+  /** Schemaless commands: (key, value-JSON) messages with an arrival stamp. */
+  private def messages(docs: String*) =
+    docs.zipWithIndex.toDF("value", "__ord")
+      .select(get_json_object(col("value"), "$._id").as("key"), col("value"),
+        col("__ord").cast("long").as("__ord"))
+
+  test("schemaless uniqueExpression re-keys commands; unique carries the commands") {
+    val docs = Seq(
+      """{"_id":"a1","_command":"put","ukey":"k-7","_jwt":{"sub":"system"}}""",
+      """{"_id":"a2","_command":"put","ukey":"k-7","_jwt":{"sub":"system"}}""",
+      """{"_id":"a3","_command":"put","ukey":"k-8","_jwt":{"sub":"system"}}""")
+    val io = new TestIo(Map("sapp-thing-command" -> messages(docs: _*)))
+    val streams = new AppRunner(spark, io, Env(spark)).run(
+      """{"application":"sapp","version":"1.0","parts":[
+           {"type":"aggregate","aggregateType":"sapp-thing",
+            "uniqueExpression":"$ukey"}]}""")
+    val byKey = streams("sapp-thing-aggregate")
+      .select("key", "value").as[(String, String)].collect()
+      .groupBy(_._1)
+    assert(byKey.keySet == Set("k-7", "k-8"))
+    assert(byKey("k-7").map(v => Js.parse(v._2).get("_seq").asLong()).max == 1)
+    // the unique purpose stream carries each command itself, re-keyed
+    val unique = streams("sapp-thing-unique")
+      .select("key", "value").as[(String, String)].collect()
+    assert(unique.map { case (k, v) => (k, Js.parse(v)) }.toSet ==
+      docs.map(d => (Js.parse(d).get("ukey").asText(), Js.parse(d))).toSet)
+  }
+
+  test("schemaless preprocessor file inlines its file-reference entries") {
+    val docs = Seq(
+      """{"_id":"p1","_command":"put","v":1,"_jwt":{"sub":"system"}}""",
+      """{"_id":"p1","_command":"put","v":1,"_jwt":{"sub":"system"}}""",
+      """{"_id":"p2","_command":"put","v":2,"_jwt":{"sub":"system"}}""")
+    val io = new TestIo(Map("papp-doc-command" -> messages(docs: _*)))
+    val scripts = Map(
+      "pre.yaml" -> "- dedup.yaml\n",
+      "dedup.yaml" -> "$deduplicate:\n  expression: $_id\n")
+    val streams = new AppRunner(spark, io, Env(spark, scripts = scripts)).run(
+      """{"application":"papp","version":"1.0","parts":[
+           {"type":"aggregate","aggregateType":"papp-doc",
+            "preprocessor":"pre.yaml"}]}""")
+    val events = streams("papp-doc-event")
+      .select("key").as[String].collect().sorted.toSeq
+    assert(events == Seq("p1", "p2"))
+  }
+
+  test("a one-line reducer that starts with neither '.' nor '{' is inline") {
+    val cmds = Seq(("r1", "put", 1L, 3)).toDF("_id", "_command", "__ord", "v")
+      .withColumn("_jwt", struct(lit("system").as("sub")))
+    val io = new TestIo(Map("rapp-doc-command" -> cmds))
+    val streams = new AppRunner(spark, io, Env(spark)).run(
+      """{"application":"rapp","version":"1.0","parts":[
+           {"type":"aggregate","aggregateType":"rapp-doc",
+            "commands":{"put":{
+              "reducer":"del(.state) | .command | del(._command)"}}}]}""")
+    val states = streams("rapp-doc-aggregate")
+      .select("value").as[String].collect().map(Js.parse)
+    assert(states.length == 1)
+    assert(states.head.get("v").asInt() == 3)
+    assert(states.head.get("_command") == null)
+  }
 }

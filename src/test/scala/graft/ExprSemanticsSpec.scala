@@ -127,7 +127,7 @@ class ExprSemanticsSpec extends AnyFunSuite {
       ("2", """{"v":7,"id":"num"}"""),
       ("3", """{"v":[1],"id":"arr"}""")).toDF("key", "value")
     def ids(q: String): Seq[String] =
-      graft.streaming.MessagePipeline.compile(
+      graft.op.Pipeline.compile(
         graft.json.Js.parse(s"""[{"$$match":$q}]"""), env)(msgs)
         .collect().map(r => graft.json.Js.parse(r.getAs[String]("value"))
           .get("id").asText()).toSeq.sorted
@@ -144,5 +144,23 @@ class ExprSemanticsSpec extends AnyFunSuite {
                         {"case":"$n","then":"seven"}],
             "default":"none"}}}}]""")
     assert(out.getString(0) == "seven")
+  }
+
+  test("a one-line $jq operator script that starts with neither '.' nor '{' is inline") {
+    val df = Seq(("a", 1)).toDF("_id", "v")
+    val out = one(df, """[{"$project":{"j":{"$jq":{"script":"del(._id)"}}}}]""")
+    assert(graft.json.Js.parse(out.getAs[String]("j")) ==
+      graft.json.Js.parse("""{"v":1}"""))
+  }
+
+  test("a $jq operator script file resolves its imports relative to itself") {
+    val df = Seq(("a", 3)).toDF("_id", "v")
+    val scripts = Map(
+      "lib/main.jq" -> "import \"util.jq\" as u;\n{ \"d\": (.v | u::twice) }",
+      "lib/util.jq" -> "def twice: . * 2;")
+    val out = Pipeline.run(df,
+      """[{"$project":{"j":{"$jq":{"script":"lib/main.jq"}}}}]""",
+      Env(spark, scripts = scripts)).collect().head
+    assert(graft.json.Js.parse(out.getAs[String]("j")).get("d").asInt() == 6)
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.jq.MiniJslt
 import graft.json.Js
 import graft.op.{Env, LogSink, Pipeline}
-import graft.streaming.MessagePipeline
 
 /** `$log`/`$trace` must EMIT (reference LogStage.java:36-110), not just
   * pass data through: the Capture sink records what executors wrote.
@@ -93,7 +92,7 @@ class LogOpSpec extends AnyFunSuite {
     val df = Seq(("k1",
       """{"_id":"k1","_corr":"ab-cd","note":"n1"}"""))
       .toDF("key", "value")
-    val out = MessagePipeline.compile(
+    val out = Pipeline.compile(
       Js.parse("""[{"$log":{"message":"$note","level":"WARNING"}}]"""),
       env)(df)
     assert(out.select("value").as[String].collect().head.contains("n1"))

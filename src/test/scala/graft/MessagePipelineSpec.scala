@@ -174,4 +174,20 @@ class MessagePipelineSpec extends AnyFunSuite {
     assert(rows.length == 2)
     io.stopAll()
   }
+
+  test("schemaless $jq expression operator loads a named script") {
+    val dir = Files.createTempDirectory("graft-msgjqop").toString
+    write(dir, "jo", "m1", """{"_id":"a","v":2}""")
+    val io = new FileStreamIo(dir, Map.empty)
+    val scripts = Map("twice.jq" -> "{ \"d\": (.v * 2) }")
+    new AppRunner(spark, io, Env(spark, scripts = scripts)).run(
+      """{"application":"mjqop","version":"1.0","parts":[
+           {"type":"stream","name":"s","fromTopic":"jo","toTopic":"out_mjqop",
+            "pipeline":[{"$set":{"j":{"$jq":{"script":"twice.jq"}}}}]}]}""")
+    io.processAll()
+    val v = Js.parse(spark.table("out_mjqop").collect().head
+      .getAs[String]("value"))
+    assert(Js.parse(v.get("j").asText()).get("d").asInt() == 4)
+    io.stopAll()
+  }
 }

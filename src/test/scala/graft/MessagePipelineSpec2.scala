@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.json.Js
-import graft.op.{Env, HttpResult, HttpTransport}
-import graft.streaming.MessagePipeline
+import graft.op.{Env, HttpResult, HttpTransport, Pipeline}
 
 /** The message-mode stages added in round 2: $jslt, $unwind, $count,
   * $validate, $delay, $http — all over schemaless (key, value) frames.
@@ -26,7 +25,7 @@ class MessagePipelineSpec2 extends AnyFunSuite {
 
   private def run(pipeline: String, df: org.apache.spark.sql.DataFrame,
       env: Env = Env(spark)) =
-    MessagePipeline.compile(Js.parse(pipeline), env)(df)
+    Pipeline.compile(Js.parse(pipeline), env)(df)
 
   test("$jslt transforms the whole message") {
     val out = run(
@@ -138,7 +137,7 @@ class MessagePipelineSpec3 extends AnyFunSuite {
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
 
   private def run(pipeline: String, df: org.apache.spark.sql.DataFrame) =
-    MessagePipeline.compile(Js.parse(pipeline), Env(spark))(df)
+    Pipeline.compile(Js.parse(pipeline), Env(spark))(df)
 
   test("$redact prunes subtrees by per-level condition") {
     val out = run(
@@ -262,7 +261,7 @@ class VariantTypeSpec extends AnyFunSuite {
       """{"_id":"d","v":{"x":1}}""")
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{"t":{"$type":"$v"},"ia":{"$isArray":"$v"}}}]"""),
       Env(spark))(df)
       .select("value").as[String].collect().map(Js.parse)
@@ -278,7 +277,7 @@ class VariantTypeSpec extends AnyFunSuite {
       """{"_id":"a","arr":[1,2,"b"],"withNull":[1,null],"x":2}""")
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "hitNum":{"$in":[2,"$arr"]},
            "missNum":{"$in":[9,"$arr"]},
@@ -305,7 +304,7 @@ class VariantTypeSpec extends AnyFunSuite {
     val df = Seq("""{"_id":"a","o":{"z":1,"a":"two"},"n":null}""")
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "kv":{"$objectToArray":"$o"},
            "nul":{"$objectToArray":"$n"},
@@ -333,7 +332,7 @@ class VariantTypeSpec extends AnyFunSuite {
     // reverse "]2,1,3[") and the rest failed analysis
     val df = Seq("""{"_id":"a","arr":[3,1,2]}""").toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "m":{"$map":{"input":"$arr","in":{"$add":["$$this",1]}}},
            "f":{"$filter":{"input":"$arr","cond":{"$gt":["$$this",1]}}},
@@ -371,7 +370,7 @@ class VariantTypeSpec extends AnyFunSuite {
                      "t":[1,"s",true],"ft":[1,0]}""".replace("\n", ""))
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "u":{"$setUnion":["$x","$y"]},
            "i":{"$setIntersection":["$x","$y"]},
@@ -408,7 +407,7 @@ class VariantTypeSpec extends AnyFunSuite {
       """{"_id":"a","arr":[{"v":1},{"v":9}],"nums":[1,5,9]}""")
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "obj":{"$elemMatch":["$arr",{"v":{"$gt":5}}]},
            "objMiss":{"$elemMatch":["$arr",{"v":{"$gt":50}}]},
@@ -434,7 +433,7 @@ class VariantTypeSpec extends AnyFunSuite {
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
     def run(m: String): Seq[String] =
-      MessagePipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
+      Pipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
         .select("value").as[String].collect().toSeq
         .map(v => Js.parse(v).get("_id").asText()).sorted
     assert(run("""{"items":{"$elemMatch":{"name":"a","qty":{"$gte":2}}}}""")
@@ -470,7 +469,7 @@ class VariantTypeSpec extends AnyFunSuite {
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
     def run(m: String): Seq[String] =
-      MessagePipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
+      Pipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
         .select("value").as[String].collect().toSeq
         .map(v => Js.parse(v).get("_id").asText()).sorted
     assert(run("""{"v":{"$type":["long","string"]}}""") == Seq("a", "b"))
@@ -486,7 +485,7 @@ class VariantTypeSpec extends AnyFunSuite {
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
     def run(m: String): Seq[String] =
-      MessagePipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
+      Pipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
         .select("value").as[String].collect().toSeq
         .map(v => Js.parse(v).get("_id").asText()).sorted
     // {"items.qty": v}: items is an array of documents — Mongo resolves
@@ -521,7 +520,7 @@ class VariantTypeSpec extends AnyFunSuite {
       .toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
     def run(m: String): Seq[String] =
-      MessagePipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
+      Pipeline.compile(Js.parse(s"""[{"$$match":$m}]"""), Env(spark))(df)
         .select("value").as[String].collect().toSeq
         .map(v => Js.parse(v).get("_id").asText()).sorted
     // Mongo: {$ne: v} through an array path holds only when NO traversed
@@ -547,7 +546,7 @@ class VariantTypeSpec extends AnyFunSuite {
     // string stays a literal by contract
     val df = Seq("""{"_id":"a","x":7,"s":"t"}""").toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "resolved":{"$arrayElemAt":[[1,"$x"],1]},
            "lit":{"$arrayElemAt":[{"$literal":[1,"$x"]},1]}}}]"""),
@@ -562,7 +561,7 @@ class VariantTypeSpec extends AnyFunSuite {
   test("variant $indexOfArray honors start/end bounds") {
     val df = Seq("""{"_id":"a","xs":[5,3,5,"5",5]}""").toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "whole":{"$indexOfArray":["$xs",5]},
            "from1":{"$indexOfArray":["$xs",5,1]},
@@ -585,7 +584,7 @@ class VariantTypeSpec extends AnyFunSuite {
     // array and each element keeps its Mongo type bracket
     val df = Seq("""{"_id":"a","x":[2,1,"b"]}""").toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = MessagePipeline.compile(Js.parse(
+    val out = Pipeline.compile(Js.parse(
       """[{"$addFields":{
            "inNum":{"$in":[1,{"$literal":[1,"b"]}]},
            "inStrMiss":{"$in":["1",{"$literal":[1,"b"]}]},

@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.json.Js
-import graft.op.Env
-import graft.streaming.MessagePipeline
+import graft.op.{Env, Pipeline}
 
 /** Round-3 message-mode (schemaless) coverage of the side-effect / sink
   * stages: $out, $merge, $delete, $lag, $signJwt, $s3Csv, $s3Out,
@@ -21,7 +20,7 @@ class MessageSideEffectsSpec extends AnyFunSuite {
 
   private def run(pipeline: String, df: org.apache.spark.sql.DataFrame,
       env: Env) =
-    MessagePipeline.compile(Js.parse(pipeline), env)(df)
+    Pipeline.compile(Js.parse(pipeline), env)(df)
 
   test("$out routes the message frame to the collection sink, passthrough") {
     var seen: Option[org.apache.spark.sql.DataFrame] = None
@@ -119,7 +118,7 @@ class MessageSideEffectsSpec extends AnyFunSuite {
     spec.set[JsonNode]("sub", Js.parse("\"$user\""))
     val stage = Js.obj(); stage.set[JsonNode]("$signJwt", spec)
     val pipeline = Js.arr(); pipeline.add(stage)
-    val out = MessagePipeline.compile(pipeline, Env(spark))(
+    val out = Pipeline.compile(pipeline, Env(spark))(
       msgs("""{"_id":"a","user":"u1"}"""))
       .select("value").as[String].collect().map(Js.parse)
     val token = out.head.get("_jwt").asText()

@@ -203,7 +203,7 @@ class MongoOrderSparkSpec extends AnyFunSuite {
       """{"_id":"5","g":"x","v":[7]}""",
       """{"_id":"6","g":"x","v":true}""").toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = graft.streaming.MessagePipeline.compile(
+    val out = graft.op.Pipeline.compile(
       Js.parse("""[{"$group":{"_id":"$g","lo":{"$min":"$v"},
                               "hi":{"$max":"$v"}}}]"""),
       graft.op.Env(spark))(msgs)
@@ -222,7 +222,7 @@ class MongoOrderSparkSpec extends AnyFunSuite {
       """{"_id":"1","g":"x","v":2,"o":{"a":1,"b":null}}""",
       """{"_id":"2","g":"x","v":4,"o":{"b":2,"c":3}}""").toDF("value")
       .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
-    val out = graft.streaming.MessagePipeline.compile(
+    val out = graft.op.Pipeline.compile(
       Js.parse("""[{"$group":{"_id":"$g",
                     "f":{"$first":"$v"},"l":{"$last":"$v"},
                     "sd":{"$stdDevPop":"$v"},
@@ -249,7 +249,7 @@ class MongoOrderSparkSpec extends AnyFunSuite {
     // Mongo: missing `a` sits in the Null bracket, below every number —
     // both documents satisfy a < b (a null-propagating compare would
     // silently drop doc 2)
-    val out = graft.streaming.MessagePipeline.compile(
+    val out = graft.op.Pipeline.compile(
       Js.parse("""[{"$match":{"$expr":{"$lt":["$a","$b"]}}}]"""),
       graft.op.Env(spark))(msgs)
       .select("key").as[String].collect().toSet

@@ -40,4 +40,32 @@ class PerStreamingSpec extends AnyFunSuite {
     assert(after4.forall(_.get("batch").size() == 2))
     io.stopAll()
   }
+
+  test("each $per batch element is its input message, schemaless or typed") {
+    val dir = Files.createTempDirectory("graft-per-doc").toString
+    val docs = Seq("""{"_id":"a","v":1}""", """{"_id":"b","v":2}""")
+    Files.createDirectories(Paths.get(s"$dir/pdoc"))
+    docs.zipWithIndex.foreach { case (d, i) =>
+      Files.writeString(Paths.get(s"$dir/pdoc/m$i.json"), d)
+    }
+    val schema = org.apache.spark.sql.types.DataType
+      .fromDDL("_id string, v int")
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    Seq("msg" -> Map.empty[String, org.apache.spark.sql.types.StructType],
+      "typed" -> Map("pdoc" -> schema)).foreach { case (mode, schemas) =>
+      val io = new FileStreamIo(dir, schemas)
+      new AppRunner(spark, io, Env(spark)).run(
+        s"""{"application":"perdoc","version":"1.0","parts":[
+             {"type":"stream","name":"p","fromTopic":"pdoc",
+              "toTopic":"out_perdoc_$mode",
+              "pipeline":[{"$$per":{"amount":2,"as":"batch"}}]}]}""")
+      io.processAll()
+      val batches = spark.table(s"out_perdoc_$mode").collect()
+        .map(r => Js.parse(r.getAs[String]("value")))
+      io.stopAll()
+      assert(batches.length == 1, mode)
+      assert(Js.elems(batches.head.get("batch")).toSet ==
+        docs.map(Js.parse).toSet, mode)
+    }
+  }
 }

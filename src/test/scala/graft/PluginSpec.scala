@@ -23,6 +23,22 @@ class PluginSpec extends AnyFunSuite {
     assert(out.getAs[String]("src") == "plugged")
   }
 
+  test("plugin $tag stage runs over a schemaless message stream") {
+    val dir = Files.createTempDirectory("graft-plugmsg")
+    Files.createDirectories(dir.resolve("pm"))
+    Files.writeString(dir.resolve("pm/m1.json"), """{"_id":"a","v":1}""")
+    val io = new graft.streaming.FileStreamIo(dir.toString, Map.empty)
+    new graft.streaming.AppRunner(spark, io, env).run(
+      """{"application":"pgm","version":"1.0","parts":[
+           {"type":"stream","name":"s","fromTopic":"pm","toTopic":"out_pgm",
+            "pipeline":[{"$tag":{"field":"src","value":"plugged"}}]}]}""")
+    io.processAll()
+    val out = spark.table("out_pgm").collect()
+    io.stopAll()
+    assert(out.map(r => (r.getAs[String]("key"), r.getAs[String]("src")))
+      .toSeq == Seq(("a", "plugged")))
+  }
+
   test("plugin $double expression operator") {
     val out = Pipeline.run(Seq(("a", 21)).toDF("_id", "v"),
       """[{"$set":{"d":{"$double":"$v"}}}]""", env).collect().head

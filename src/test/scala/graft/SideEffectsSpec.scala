@@ -103,7 +103,7 @@ class SideEffectsSpec extends AnyFunSuite {
     spec.put("as", "_token"); spec.put("privateKey", pem)
     spec.put("ttl", 60L)
     spec.set[com.fasterxml.jackson.databind.JsonNode]("sub", Js.parse("\"$user\""))
-    val out = graft.op.SignJwt(df, spec)
+    val out = graft.op.SignJwt(df, spec, graft.op.Env(spark))
     val token = out.select("_token").as[String].head()
     val parsed = io.jsonwebtoken.Jwts.parser()
       .verifyWith(pair.getPublic).build()

@@ -100,6 +100,62 @@ class StreamJoinSpec extends AnyFunSuite {
     io.stopAll()
   }
 
+  test("merge + event-time join over schemaless sources pairs like typed ones") {
+    // the merge_join app shape: two click topics merged, then joined with
+    // orders on `corr` within an event-time window — once with declared
+    // schemas, once over raw (key, value) messages
+    val dir = Files.createTempDirectory("graft-sjmsg").toString
+    def write(topic: String, name: String, json: String): Unit = {
+      Files.createDirectories(Paths.get(s"$dir/$topic"))
+      Files.writeString(Paths.get(s"$dir/$topic/$name.json"), json)
+    }
+    def msg(id: String, corr: String, ts: String) =
+      s"""{"_id":"$id","corr":"$corr","ts":"2024-01-01T$ts"}"""
+    write("cweb", "m1", msg("w1", "c1", "10:00:00Z"))
+    write("cweb", "m2", msg("w2", "c2", "10:00:05Z"))
+    write("cweb", "m3", msg("w3", "c3", "10:00:00Z")) // no order
+    write("capp", "m4", msg("a1", "c1", "10:00:20Z"))
+    write("capp", "m5", msg("a2", "c4", "10:05:00Z")) // outside the window
+    write("ord", "m6", msg("o1", "c1", "10:00:10Z"))
+    write("ord", "m7", msg("o2", "c2", "10:00:30Z"))
+    write("ord", "m8", msg("o4", "c4", "10:00:00Z"))
+    def app(out: String) =
+      s"""{"application":"sjmsg","version":"1.0","parts":[
+           {"type":"merge","name":"clicks","fromTopics":["cweb","capp"]},
+           {"type":"join","name":"checkout","window":60000,"toTopic":"$out",
+            "left":{"fromStream":"clicks","on":"$$corr","timestamp":"$$ts"},
+            "right":{"fromTopic":"ord","on":"$$corr","timestamp":"$$ts"}}]}"""
+    val schema = DataType.fromDDL("_id string, corr string, ts string")
+      .asInstanceOf[StructType]
+    val typedIo = new FileStreamIo(dir,
+      Map("cweb" -> schema, "capp" -> schema, "ord" -> schema))
+    new AppRunner(spark, typedIo, Env(spark)).run(app("out_sj_typed"))
+    typedIo.processAll()
+    val typed = spark.table("out_sj_typed").collect().map { r =>
+      (r.getAs[String]("_id"),
+        r.getAs[org.apache.spark.sql.Row]("left").getAs[String]("_id"),
+        r.getAs[org.apache.spark.sql.Row]("right").getAs[String]("_id"))
+    }.toSet
+    typedIo.stopAll()
+    val msgIo = new FileStreamIo(dir, Map.empty)
+    new AppRunner(spark, msgIo, Env(spark)).run(app("out_sj_msg"))
+    msgIo.processAll()
+    val rows = spark.table("out_sj_msg").collect()
+    msgIo.stopAll()
+    val schemaless = rows.map { r =>
+      val v = graft.json.Js.parse(r.getAs[String]("value"))
+      assert(r.getAs[String]("key") == v.get("_id").asText())
+      (v.get("_id").asText(), v.get("left").get("_id").asText(),
+        v.get("right").get("_id").asText())
+    }.toSet
+    assert(typed == Set(("c1", "w1", "o1"), ("c1", "a1", "o1"),
+      ("c2", "w2", "o2")))
+    assert(schemaless == typed)
+    // each side is the message itself, not a {key, value} envelope
+    val left = graft.json.Js.parse(rows.head.getAs[String]("value")).get("left")
+    assert(left.get("corr") != null && left.get("value") == null)
+  }
+
   test("event-time join windows on the data's clock, not arrival") {
     // Both sides carry a `timestamp` expression: rows minutes apart in
     // EVENT time never join even though they arrive seconds apart, and

@@ -8,8 +8,9 @@ Usage:
 Writes OUT_DIR/<query>_<SUFFIX>.txt for every `========== <query> ==========`
 section. Run-to-run noise is normalized so two runs of the same plan compare
 equal with `diff`: expression ids (`#123` -> `#N`), lambda variable names
-(`x_45` -> `x_N`), exchange plan ids (`plan_id=9` -> `plan_id=N`) and the
-random suffix of `graft-*` temp directories.
+(`x_45` -> `x_N`), exchange plan ids (`plan_id=9` -> `plan_id=N`), the
+random suffix of `graft-*` temp directories, and in streaming plans the JVM
+lambda class names, object identity hashes and the query's run id.
 """
 import re
 import sys
@@ -20,6 +21,9 @@ NOISE = [
     (re.compile(r"\bx_\d+\b"), "x_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"(/graft-[a-z-]+?)\d+\b"), r"\1N"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"(\w)@[0-9a-f]{5,8}\b"), r"\1@H"),
+    (re.compile(r"runId = [0-9a-f-]{36}"), "runId = R"),
 ]
 # Spark log lines and sbt chatter that may interleave with the plans
 LOG = re.compile(r"^(\d\d/\d\d/\d\d \d\d:\d\d:\d\d |\[(info|warn|error|success)\])")
