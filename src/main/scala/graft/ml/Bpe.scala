@@ -158,14 +158,8 @@ object Bpe {
     require(merges.nonEmpty, "bpeEncodeLarge: empty merge list")
     val spark = df.sparkSession
     import spark.implicits._
-    val mergeArr = merges.toArray
-    // every rank of every pair (a learned table CAN repeat a pair;
-    // each occurrence is its own pass)
-    val rankIndex: Map[(String, String), Array[Int]] = merges.zipWithIndex
-      .groupBy(_._1)
-      .map { case (p, xs) => p -> xs.map(_._2 + 1).sorted.toArray }
-    val bcMerges = spark.sparkContext.broadcast(mergeArr)
-    val bcRanks = spark.sparkContext.broadcast(rankIndex)
+    val bcMerges = spark.sparkContext.broadcast(merges.toArray)
+    val bcRanks = spark.sparkContext.broadcast(rankIndex(merges))
     val toks = df.select(col(idCol),
       explode_outer(filter(tokens(col(textCol)), t => t =!= ""))
         .as("__word"))
@@ -199,36 +193,8 @@ object Bpe {
   def bpeEncodeIdsLarge(df: DataFrame, textCol: String, idCol: String,
       merges: Seq[(String, String)]): DataFrame = {
     require(merges.nonEmpty, "bpeEncodeIdsLarge: empty merge list")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val mergeArr = merges.toArray
-    val rankIndex: Map[(String, String), Array[Int]] = merges.zipWithIndex
-      .groupBy(_._1)
-      .map { case (p, xs) => p -> xs.map(_._2 + 1).sorted.toArray }
-    val outIds: Map[String, Long] = merges.zipWithIndex
-      .groupBy { case ((l, r), _) => l + r }
-      .map { case (piece, xs) =>
-        piece -> (0x110000L + xs.map(_._2 + 1).min)
-      }
-    val bcMerges = spark.sparkContext.broadcast(mergeArr)
-    val bcRanks = spark.sparkContext.broadcast(rankIndex)
-    val bcIds = spark.sparkContext.broadcast(outIds)
-    val toks = df.select(col(idCol),
-      posexplode(filter(tokens(col(textCol)), t => t =!= "")))
-      .toDF(idCol, "tok_pos", "__word")
-    val enc = toks.select(col("__word")).distinct().as[String]
-      .mapPartitions { it =>
-        val idOf = bcIds.value
-        it.map { w =>
-          val pieces = encodePieceStrings(w, bcMerges.value, bcRanks.value)
-          (w, pieces.map(p =>
-            if (p.length == 1) p.codePointAt(0).toLong
-            else idOf(p)))
-        }
-      }.toDF("__word", "piece_ids")
-    toks.join(enc, Seq("__word"))
-      .select(col(idCol), col("tok_pos").cast("long").as("tok_pos"),
-        col("piece_ids"))
+    encodeIds(df, textCol, idCol, merges, _.toCharArray.map(_.toString),
+      0x110000L, _.codePointAt(0).toLong)
   }
 
   /** BYTE-LEVEL id-sequence BPE encoding — the GPT-2-family layout
@@ -261,17 +227,28 @@ object Bpe {
         l.nonEmpty && r.nonEmpty && (l + r).forall(_ < 0x100) },
       "bpeEncodeIdsBytes: merge table must be byte-representable " +
         "(every char of every side < U+0100) and have non-empty sides")
+    encodeIds(df, textCol, idCol, merges, utf8ByteSyms, 256L,
+      _.charAt(0).toLong)
+  }
+
+  /** The id encoders' one body: each distinct word splits into its
+    * initial symbols (`syms`), runs the pass-by-rank simulation, and maps
+    * each piece to an id — `symId` for a single symbol, `mergedBase +
+    * (the smallest rank whose merge concatenates to it)` for a merged
+    * piece. One row per token occurrence: (idCol, tok_pos, piece_ids).
+    */
+  private def encodeIds(df: DataFrame, textCol: String, idCol: String,
+      merges: Seq[(String, String)], syms: String => Array[String],
+      mergedBase: Long, symId: String => Long): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val mergeArr = merges.toArray
-    val rankIndex: Map[(String, String), Array[Int]] = merges.zipWithIndex
-      .groupBy(_._1)
-      .map { case (p, xs) => p -> xs.map(_._2 + 1).sorted.toArray }
     val outIds: Map[String, Long] = merges.zipWithIndex
       .groupBy { case ((l, r), _) => l + r }
-      .map { case (piece, xs) => piece -> (256L + xs.map(_._2 + 1).min) }
-    val bcMerges = spark.sparkContext.broadcast(mergeArr)
-    val bcRanks = spark.sparkContext.broadcast(rankIndex)
+      .map { case (piece, xs) =>
+        piece -> (mergedBase + xs.map(_._2 + 1).min)
+      }
+    val bcMerges = spark.sparkContext.broadcast(merges.toArray)
+    val bcRanks = spark.sparkContext.broadcast(rankIndex(merges))
     val bcIds = spark.sparkContext.broadcast(outIds)
     val toks = df.select(col(idCol),
       posexplode(filter(tokens(col(textCol)), t => t =!= "")))
@@ -280,16 +257,23 @@ object Bpe {
       .mapPartitions { it =>
         val idOf = bcIds.value
         it.map { w =>
-          val pieces = encodePieceStringsFrom(utf8ByteSyms(w),
+          val pieces = encodePieceStringsFrom(syms(w),
             bcMerges.value, bcRanks.value)
-          (w, pieces.map(p =>
-            if (p.length == 1) p.charAt(0).toLong else idOf(p)))
+          (w, pieces.map(p => if (p.length == 1) symId(p) else idOf(p)))
         }
       }.toDF("__word", "piece_ids")
     toks.join(enc, Seq("__word"))
       .select(col(idCol), col("tok_pos").cast("long").as("tok_pos"),
         col("piece_ids"))
   }
+
+  /** Every rank of every pair, ascending (a learned table CAN repeat a
+    * pair; each occurrence is its own pass).
+    */
+  private def rankIndex(merges: Seq[(String, String)])
+      : Map[(String, String), Array[Int]] =
+    merges.zipWithIndex.groupBy(_._1)
+      .map { case (p, xs) => p -> xs.map(_._2 + 1).sorted.toArray }
 
   /** A word's UTF-8 bytes as latin-1 single-char symbol strings — the
     * byte-level base alphabet in the representation the pass-by-rank

@@ -102,9 +102,15 @@ object Stages {
     else to_json(struct(df.columns
       .filterNot(Set("__ord", "__raw")).map(col): _*))
 
-  /** The stage body for the frame's document model. */
+  /** The stage body for the frame's document model. Every such stage
+    * rewrites the document, so a typed frame's `__raw` (the input
+    * message's original text) no longer describes its rows and is
+    * dropped before the body runs.
+    */
   private def byModel(typed: Stage, message: Stage): Stage =
-    df => if (isMessageShaped(df)) message(df) else typed(df)
+    df =>
+      if (isMessageShaped(df)) message(df)
+      else typed(if (df.columns.contains("__raw")) df.drop("__raw") else df)
 
   def compile(name: String, spec: JsonNode, env: Env): Stage = name match {
     case "$match" =>

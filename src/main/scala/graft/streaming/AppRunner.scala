@@ -78,11 +78,8 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
       df.mapPartitions { (it: Iterator[Row]) =>
         it.map { r =>
           val v = r.getString(1)
-          if (r.getString(0) != null && v != null) {
-            val seq = Option(Js.parse(v).get("_seq"))
-              .filter(_.isNumber).map(_.asLong()).getOrElse(-1L)
-            fs.put(r.getString(0), seq, v)
-          }
+          if (r.getString(0) != null && v != null)
+            fs.put(r.getString(0), HrefStore.seqOf(v), v)
           r
         }
       }(Encoders.row(df.schema))
@@ -472,10 +469,7 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
               // pass-1 final state per instance, reduced DISTRIBUTED
               // (arg-max on _seq per id)
               val finals = states
-                .map(o => (o.key,
-                  Option(graft.json.Js.parse(o.value).get("_seq"))
-                    .map(_.asLong()).getOrElse(-1L),
-                  o.value))
+                .map(o => (o.key, HrefStore.seqOf(o.value), o.value))
                 .groupByKey(_._1)
                 .reduceGroups((a, b) => if (a._2 >= b._2) a else b)
                 .map { case (_, t) => t }

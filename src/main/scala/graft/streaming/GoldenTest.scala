@@ -232,11 +232,14 @@ object GoldenTest {
           // `environment` carry a suffix (<type>-aggregate-<env>)
           case (n, df) if n.contains("-aggregate") =>
             (df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.select("key", "value").collect().foreach { r =>
-                val v = r.getString(1)
-                val seq = Option(Js.parse(v).get("_seq"))
-                  .map(_.asLong()).getOrElse(-1L)
-                HrefStore.put(runId, r.getString(0), seq, v)
+              // publish from the executors, like AppRunner's batch path
+              batch.select("key", "value").foreachPartition {
+                (it: Iterator[org.apache.spark.sql.Row]) =>
+                  it.foreach { r =>
+                    val v = r.getString(1)
+                    HrefStore.put(runId, r.getString(0),
+                      HrefStore.seqOf(v), v)
+                  }
               }
             }.queryName(s"href-updater-$runId-$n").start(),
               StatefulOps.usesProcessingTimers(df))

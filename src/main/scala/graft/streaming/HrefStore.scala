@@ -20,6 +20,13 @@ object HrefStore {
     stores.computeIfAbsent(run,
       _ => new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]())
 
+  /** An aggregate state's `_seq`, -1 when it has no numeric one — the
+    * order every publisher compares states by.
+    */
+  def seqOf(json: String): Long =
+    Option(graft.json.Js.parse(json).get("_seq"))
+      .filter(_.isNumber).map(_.asLong()).getOrElse(-1L)
+
   /** Keep the latest state per aggregate id (highest `_seq` wins). */
   def put(run: String, id: String, seq: Long, json: String): Unit =
     store(run).merge(id, (seq, json),
@@ -58,10 +65,6 @@ object HrefStore {
       extends (String => Option[String]) with Serializable {
     private def path(id: String) = java.nio.file.Paths.get(root,
       java.net.URLEncoder.encode(id, "UTF-8") + ".json")
-
-    private def seqOf(json: String): Long =
-      Option(graft.json.Js.parse(json).get("_seq"))
-        .map(_.asLong()).getOrElse(-1L)
 
     def put(id: String, seq: Long, json: String): Unit = {
       val p = path(id)

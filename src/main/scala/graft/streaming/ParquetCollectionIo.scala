@@ -10,16 +10,20 @@ import org.apache.spark.sql.functions._
   * `fromCollection`/`$lookup` read the current state. Streaming writers go
   * through foreachBatch (the idempotent-upsert sink pattern).
   *
-  * Scale: the collection is hash-BUCKETED on `_id` into
-  * `__bucket=N/` partition directories. An upsert only reads and rewrites
-  * the buckets its batch touches — cost is O(touched buckets), not
-  * O(collection) — which is the poor man's MERGE (a real lakehouse format
-  * with MERGE INTO replaces the bucket rewrite one-for-one; the layout,
-  * pruning, and latest-row-wins logic are the same). Topics delegate to
-  * the wrapped transport Io.
+  * Layout: a collection is the parquet files its newest generation
+  * manifest (`__manifest-<gen>`) lists, hash-BUCKETED on `_id` into
+  * `__bucket=N/` directories. The manifest is the only record of what
+  * the collection holds: a directory is never listed for data, so a
+  * collection with no committed generation reads as an error and is
+  * written from an empty snapshot, whatever files its directory holds.
+  * Every write ($out/$merge upserts and $delete) commits through one
+  * path, `swapBuckets`, and rewrites only the buckets it touches —
+  * cost is O(touched buckets), not O(collection) — which is the poor
+  * man's MERGE (a real lakehouse format with MERGE INTO replaces the
+  * bucket rewrite one-for-one; the layout, pruning, and latest-row-wins
+  * logic are the same). Topics delegate to the wrapped transport Io.
   */
 final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
-    buckets: Int = 16,
     /** a lock file older than this is presumed abandoned (writer crash)
       * and stolen; must exceed the longest single upsert batch
       */
@@ -80,32 +84,26 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
   // ---- snapshot manifest -------------------------------------------------
   //
   // Readers must never glimpse a bucket mid-swap. The collection's
-  // current snapshot is the file list in `__manifest` (the miniature of
-  // a lakehouse format's commit log): writers move NEW files into the
-  // bucket dirs additively, atomically replace the manifest, and only
-  // DELETE a replaced file one generation later — so any reader whose
-  // plan resolved the previous manifest still finds its files on disk.
-  // Contract: a reader is safe while at most one writer generation lands
-  // between resolving the manifest and finishing the scan; direct
-  // directory listing is unsupported once a second generation exists
-  // (retired files are still present — exactly Delta/Iceberg semantics).
+  // current snapshot is the file list in its newest `__manifest-<gen>`
+  // (the miniature of a lakehouse format's commit log): writers move NEW
+  // files into the bucket dirs additively, publish the next generation,
+  // and only DELETE a replaced file one generation later — so any reader
+  // whose plan resolved the previous manifest still finds its files on
+  // disk. Contract: a reader is safe while at most one writer generation
+  // lands between resolving the manifest and finishing the scan. Files
+  // no manifest lists (retired ones, a crashed writer's moves) are on
+  // disk but never read — exactly Delta/Iceberg semantics.
 
   /** live: bucket → collection-relative parquet paths of the CURRENT
     * snapshot; retired: files replaced by the LAST write, deleted at the
     * next one; schema: the stored frame's Spark schema (JSON) — a
     * delete-all leaves live empty while the retired files are still on
     * disk for their grace generation, and readers must get an EMPTY
-    * frame of this schema, never a directory scan that would resurrect
-    * the deleted rows.
+    * frame of this schema. Every committed manifest carries it; only
+    * the empty snapshot (gen 0, nothing committed) has none.
     */
   private[graft] case class Manifest(gen: Long, live: Map[Int, Seq[String]],
       retired: Seq[String], schema: Option[String] = None)
-
-  /** Legacy single-file manifest (pre-CAS layout): read-only fallback,
-    * deleted on the first generation-file commit.
-    */
-  private def legacyManifestPath(name: String) =
-    Paths.get(dir(name), "__manifest")
 
   /** One manifest FILE per generation, zero-padded so lexical max ==
     * numeric max. The file is the commit token: it is published with an
@@ -149,61 +147,26 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
       Option(n.get("schema")).filter(_.isTextual).map(_.asText()))
   }
 
+  /** The newest committed generation; None = never committed. Once a
+    * generation exists one always does (a commit publishes N before it
+    * GCs N−2), so an empty listing is never a race.
+    */
   private def loadManifest(name: String): Option[Manifest] = {
-    // The newest generation file wins; a concurrent GC can delete a file
-    // between the listing and the read (kept generations: N and N-1, so
-    // only a reader two commits behind races it) — re-list and retry.
-    // The legacy branch has its own race: the first CAS commit creates
-    // the gen file BEFORE deleting the legacy file, so a reader that
-    // listed no gen files and then misses the legacy file raced the
-    // migration — loop back and re-list (the gen file exists by then)
-    // rather than crash or fall through to a directory scan that would
-    // resurrect retired rows. Only two consecutive truly-empty
-    // observations mean a never-written collection.
+    // a concurrent GC can delete a file between the listing and the read
+    // (kept generations: N and N-1, so only a reader two commits behind
+    // races it) — re-list and retry
     var attempts = 0
-    var emptySeen = 0
     while (attempts < 6) {
       attempts += 1
       genManifests(name).lastOption match {
+        case None => return None
         case Some((_, f)) =>
           try return Some(parseManifest(Files.readString(f)))
           catch { case _: java.io.IOException => () } // deleted: re-list
-        case None =>
-          val legacy = legacyManifestPath(name)
-          try return Some(parseManifest(Files.readString(legacy)))
-          catch {
-            case _: java.nio.file.NoSuchFileException =>
-              emptySeen += 1
-              if (emptySeen >= 2) return None // stable: never written
-            case _: java.io.IOException => () // transient: re-list
-          }
       }
     }
     throw new IllegalStateException(
       s"collection $name: manifest generations churned 6 reads in a row")
-  }
-
-  /** Bootstrap a manifest from the directory (pre-manifest layout):
-    * every parquet file under `__bucket=N/` is live; a LEGACY flat
-    * layout (files at the root) has no bucketed live set — callers
-    * migrate it whole through `writeSwap`.
-    */
-  private def dirManifest(name: String): Manifest = {
-    import scala.jdk.CollectionConverters._
-    val target = Paths.get(dir(name))
-    if (!Files.exists(target)) Manifest(0, Map.empty, Nil)
-    else {
-      val live = Files.list(target).iterator().asScala.toSeq
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("__bucket="))
-        .map { bdir =>
-          val b = bdir.getFileName.toString.stripPrefix("__bucket=").toInt
-          b -> Files.list(bdir).iterator().asScala.toSeq
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(f => s"__bucket=$b/${f.getFileName}")
-        }.filter(_._2.nonEmpty).toMap
-      Manifest(0, live, Nil)
-    }
   }
 
   /** Publish `m` as generation file `__manifest-<gen>` via an
@@ -212,9 +175,9 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     * NOT a CAS on POSIX). Returns false when a peer owns the generation —
     * the caller's merge was computed against a superseded snapshot and
     * must retry; nothing destructive may happen before this succeeds.
-    * On success, generations ≤ gen−2 and the legacy single-file manifest
-    * are garbage-collected (gen−1 stays so an in-flight reader that
-    * resolved the previous listing still finds its file).
+    * On success, generations ≤ gen−2 are garbage-collected (gen−1 stays
+    * so an in-flight reader that resolved the previous listing still
+    * finds its file).
     */
   private[graft] def casManifest(name: String, m: Manifest): Boolean = {
     val o = graft.json.Js.obj()
@@ -241,46 +204,27 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
       genManifests(name).foreach { case (g, f) =>
         if (g <= m.gen - 2) Files.deleteIfExists(f)
       }
-      Files.deleteIfExists(legacyManifestPath(name))
     }
     won
   }
 
-  /** The current snapshot as a DataFrame (with the `__bucket` partition
-    * column), pruned to `onlyBuckets` at the FILE level when given.
-    * None = empty collection.
+  /** Snapshot `m` as a DataFrame (with the `__bucket` partition column),
+    * pruned to the buckets `only` admits at the FILE level. An empty live
+    * set (e.g. delete-all) is an empty frame of the recorded schema: the
+    * retired files are STILL on disk for their grace generation and must
+    * never be read. None = nothing committed (the empty snapshot).
     */
-  private def liveRead(name: String,
-      onlyBuckets: Option[Set[Int]] = None): Option[DataFrame] =
-    loadManifest(name) match {
-      case Some(m) =>
-        val files = onlyBuckets.fold(m.live)(bs => m.live.view
-            .filterKeys(bs).toMap)
-          .values.flatten.map(f => s"${dir(name)}/$f").toSeq
-        if (files.isEmpty) {
-          // empty live set (e.g. delete-all): the retired files are
-          // STILL on disk for their grace generation — an empty frame of
-          // the recorded schema, never a directory fallback that would
-          // resurrect them. A pre-schema-field manifest (older build)
-          // recovers the schema from the retired files' own footers.
-          val schema = m.schema.orElse {
-            val retired = m.retired.map(f => s"${dir(name)}/$f")
-              .filter(f => Files.exists(Paths.get(f)))
-            if (retired.isEmpty) None
-            else Some(spark.read.option("basePath", dir(name))
-              .parquet(retired: _*).schema.json)
-          }
-          schema.map(s => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.DataType.fromJson(s)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]))
-        }
-        else Some(spark.read.option("basePath", dir(name))
-          .parquet(files: _*))
-      case None => // pre-manifest or legacy-flat directory
-        if (!Files.exists(Paths.get(dir(name)))) None
-        else Some(spark.read.parquet(dir(name)))
-    }
+  private def read(name: String, m: Manifest,
+      only: Int => Boolean = _ => true): Option[DataFrame] = {
+    val files = m.live.toSeq.collect { case (b, fs) if only(b) => fs }
+      .flatten.map(f => s"${dir(name)}/$f")
+    if (files.nonEmpty)
+      Some(spark.read.option("basePath", dir(name)).parquet(files: _*))
+    else m.schema.map(s => spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.DataType.fromJson(s)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]))
+  }
 
   /** Still ours? False means a peer stole it (we looked stale). */
   private def ownsLock(name: String): Boolean =
@@ -359,18 +303,18 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
   private[graft] var killPoint: Int => Unit = _ => ()
 
   private def bucketOf(id: org.apache.spark.sql.Column) =
-    pmod(xxhash64(id.cast("string")), lit(buckets)).cast("int")
+    pmod(xxhash64(id.cast("string")), lit(ParquetCollectionIo.Buckets))
+      .cast("int")
 
   def source(spark: SparkSession, kind: String, name: String,
       options: Map[String, String] = Map.empty): DataFrame =
     kind match {
       case "collection" =>
         // snapshot read via the manifest; an EMPTIED collection reads as
-        // an empty frame of the recorded schema (liveRead) — only a
-        // never-written/pre-manifest path falls through to the directory
-        // read (same missing-dir error as before)
-        val df = liveRead(name)
-          .getOrElse(spark.read.parquet(dir(name)))
+        // an empty frame of the recorded schema
+        val df = loadManifest(name).flatMap(read(name, _))
+          .getOrElse(throw new IllegalStateException(
+            s"collection $name has no committed generation under $root"))
           .drop("__bucket")
         // schemaless layout: _id was derived from the key on write —
         // hide it so the read-back frame stays message-shaped
@@ -406,6 +350,16 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     case _ => inner.sink(kind, name, df, asString, partId, options)
   }
 
+  /** Per-collection JVM monitors: in-process writers to the SAME
+    * collection serialize here; writers to different collections must
+    * not queue behind a peer instance's cross-process lock wait on an
+    * unrelated collection (acquireLock can poll up to lockWaitMs).
+    */
+  private val monitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private def monitor(name: String): Object =
+    monitors.computeIfAbsent(name, _ => new Object)
+
   /** Bucket-local upsert: by default incoming rows win over stored rows
     * with the same `_id` (whenMatched: replace / whenNotMatched: insert —
     * the reference's `$out` shape); within one batch the last row wins.
@@ -422,16 +376,6 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     *    ignore-null document merge
     *  - fail / discard: matched-set policies via semi/anti joins on `_id`
     */
-  /** Per-collection JVM monitors: in-process writers to the SAME
-    * collection serialize here; writers to different collections must
-    * not queue behind a peer instance's cross-process lock wait on an
-    * unrelated collection (acquireLock can poll up to lockWaitMs).
-    */
-  private val monitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def monitor(name: String): Object =
-    monitors.computeIfAbsent(name, _ => new Object)
-
   def upsert(name: String, batch0: DataFrame): Unit =
     monitor(name).synchronized {
       withWriterLock(name)(() => upsertLocked(name, batch0))
@@ -478,7 +422,7 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
       .withColumn("__bucket",
         when(col("_id").isNotNull, bucketOf(col("_id"))))
     val touched = incoming.select("__bucket").distinct()
-      .collect().map { r => // ≤ `buckets` values
+      .collect().map { r => // ≤ Buckets values
         // a null bucket means a null _id (null message key and no _id in
         // the value) — fail the batch with the cause, not an NPE
         if (r.isNullAt(0)) throw new IllegalArgumentException(
@@ -486,15 +430,12 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
             "and no _id field in the value)")
         r.getInt(0)
       }.toSet
-    val stored = liveRead(name)
-    // a pre-bucketing (flat) layout must be migrated WHOLE on first touch:
-    // a bucket-only swap would leave the stale flat files at the root next
-    // to the new __bucket=N dirs (conflicting layouts / resurrected rows)
-    val legacy = stored.exists(df => !df.columns.contains("__bucket"))
-    val bucketed =
-      if (legacy) stored.map(_.withColumn("__bucket", bucketOf(col("_id"))))
-      else liveRead(name, Some(touched)) // file-level pruned snapshot
-        .map(_.where(col("__bucket").isin(touched.toSeq: _*)))
+    // the snapshot this write merges against and commits over; no
+    // committed generation = the empty snapshot, whatever files the
+    // directory holds
+    val m = loadManifest(name).getOrElse(Manifest(0, Map.empty, Nil))
+    val bucketed = read(name, m, touched) // file-level pruned snapshot
+      .map(_.where(col("__bucket").isin(touched.toSeq: _*)))
     require(Set("replace", "keepExisting", "merge", "fail")(wm),
       s"whenMatched $wm")
     val existingIds = bucketed.map(_.select("_id"))
@@ -584,41 +525,39 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
             if (c == "_id") col("_id")
             else col("__row").getField(c).as(c)): _*)
     }
-    if (legacy) writeSwap(name, latest)
-    else swapBuckets(name, latest, touched)
+    swapBuckets(name, m, latest, touched)
   }
 
   /** `$delete` support (docs/aggregation_stages.md:161-178): drop stored
     * docs whose `on` fields equal any incoming message's values
     * (left-anti join on the key columns), then rewrite. Delete keys are
-    * arbitrary fields (not `_id`), so every bucket is scanned — the
-    * lakehouse-format DELETE is the real-scale version of this one.
+    * arbitrary fields (not `_id`), so every bucket is scanned and every
+    * live bucket is rewritten — the lakehouse-format DELETE is the
+    * real-scale version of this one.
     */
   def delete(name: String, matches: DataFrame, on: Seq[String]): Unit =
     monitor(name).synchronized {
       withWriterLock(name) { () =>
-        liveRead(name) match {
-          case Some(df) =>
-            val stored = df.drop("__bucket")
+        loadManifest(name) match {
+          case Some(m) =>
             val keys = matches.select(on.map(col): _*).distinct()
-            writeSwap(name, stored.join(keys, on, "left_anti")
-              .withColumn("__bucket", bucketOf(col("_id"))))
+            swapBuckets(name, m,
+              read(name, m).get.join(keys, on, "left_anti"), m.live.keySet)
           case None => true
         }
       }
     }
 
-  /** Write `latest` (already bucketed) to a staging dir, then swap ONLY
-    * the touched `__bucket=N` subdirectories into place. Untouched
-    * buckets keep their files — no read, no write, no move.
-    */
-  /** Stage, then COMMIT via the manifest: new files move into the live
-    * bucket dirs additively (Spark part-file names carry a job UUID — no
-    * collisions), the manifest swap is the atomic commit point, and the
+  /** Write `latest` (already bucketed) to a staging dir, then COMMIT
+    * generation `m.gen + 1` over `m`: ONLY the touched `__bucket=N`
+    * subdirectories change — untouched buckets keep their files, no
+    * read, no write, no move. New files move into the live bucket dirs
+    * additively (Spark part-file names carry a job UUID — no
+    * collisions), the manifest CAS is the atomic commit point, and the
     * files the PREVIOUS write retired are deleted now that a full
     * generation has passed.
     */
-  private def swapBuckets(name: String, latest: DataFrame,
+  private def swapBuckets(name: String, m: Manifest, latest: DataFrame,
       touched: Set[Int]): Boolean = {
     // per-instance staging dir: a peer that stole the lock must never
     // overwrite OUR staging output mid-write
@@ -632,7 +571,6 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     if (!ownsLock(name)) { deleteRecursively(Paths.get(tmp)); return false }
     val target = Paths.get(dir(name))
     Files.createDirectories(target)
-    val m = loadManifest(name).getOrElse(dirManifest(name))
     val moved: Map[Int, Seq[String]] = touched.toSeq.map { b =>
       val src = Paths.get(tmp, s"__bucket=$b")
       // a touched bucket can end empty (all its rows were later deleted
@@ -678,49 +616,6 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
       StructField("__bucket", IntegerType)).json
   }
 
-  /** Full-snapshot replace ($delete, legacy-flat migration): every
-    * staged bucket becomes the new live set; ALL previous files retire.
-    */
-  private def writeSwap(name: String, df: DataFrame): Boolean = {
-    val tmp = dir(name) + s".__tmp-$lockToken"
-    df.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(tmp)
-    if (!ownsLock(name)) { deleteRecursively(Paths.get(tmp)); return false }
-    import scala.jdk.CollectionConverters._
-    val target = Paths.get(dir(name))
-    Files.createDirectories(target)
-    val m = loadManifest(name).getOrElse(dirManifest(name))
-    val moved = Files.list(Paths.get(tmp)).iterator().asScala.toSeq
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("__bucket="))
-      .map { src =>
-        val b = src.getFileName.toString.stripPrefix("__bucket=").toInt
-        val dstDir = target.resolve(s"__bucket=$b")
-        Files.createDirectories(dstDir)
-        b -> Files.list(src).iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map { f =>
-            Files.move(f, dstDir.resolve(f.getFileName.toString))
-            s"__bucket=$b/${f.getFileName}"
-          }
-      }.filter(_._2.nonEmpty).toMap
-    // a legacy-flat migration also retires the root-level files
-    val flat = Files.list(target).iterator().asScala.toSeq
-      .filter(p => !Files.isDirectory(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .map(_.getFileName.toString)
-    // same pre-commit ownership re-check as swapBuckets
-    if (!ownsLock(name)) { deleteRecursively(Paths.get(tmp)); return false }
-    val committed = commit(name, m, live = moved,
-      nowRetired = m.live.values.flatten.toSeq ++ flat,
-      schemaJson = storedSchemaJson(df))
-    deleteRecursively(Paths.get(tmp))
-    committed
-  }
-
-  /** The atomic commit: delete what the previous write retired (its
-    * grace generation has passed), GC crash debris, then swap the
-    * manifest in.
-    */
   /** The commit point. ORDER MATTERS: the generation CAS comes FIRST —
     * only the writer that owns generation prev.gen+1 may run the
     * destructive steps (deleting the previous generation's retired files,
@@ -767,6 +662,9 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
 }
 
 object ParquetCollectionIo {
+  /** Hash buckets per collection (`pmod(xxhash64(_id), Buckets)`). */
+  private val Buckets = 16
+
   /** Lock-heartbeat scheduler: one daemon thread for the JVM (a refresh
     * is a single utimes call; even many concurrent holds are cheap).
     */

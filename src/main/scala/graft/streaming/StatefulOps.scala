@@ -206,7 +206,6 @@ object StatefulOps {
     val spark = df.sparkSession
     ensureRocksDb(spark)
     import spark.implicits._
-    val nBands = maxDist + 1
     val schema = df.schema
     val ord =
       if (df.columns.contains("__ord")) col("__ord").cast("long")
@@ -224,18 +223,9 @@ object StatefulOps {
           case ((row, o, s), i) => (uidOf(Seq(row), pid, i, 0L), row, o, s)
         }
       }.toDF("__id", "__row", "__o", "__sig")
-    val bounds = (0 to nBands).map(i => i * 64 / nBands)
-    val bandCols = (0 until nBands).map { i =>
-      val off = bounds(i)
-      val width = bounds(i + 1) - bounds(i)
-      val mask = if (width >= 64) -1L else (1L << width) - 1
-      concat_ws(":", lit(i),
-        call_function("shiftright", col("__sig"), lit(off))
-          .bitwiseAND(lit(mask)))
-    }
     val flagged = stamped
       .select(col("__id"), col("__row"), col("__o"), col("__sig"),
-        explode(array(bandCols: _*)).as("__band"))
+        explode(array(bandCols(maxDist): _*)).as("__band"))
       .as[(String, String, Long, Long, String)]
       .groupByKey(_._5)
       .transformWithState(
@@ -250,6 +240,23 @@ object StatefulOps {
       .toDF("__row", "__flagged")
       .select(col("__flagged"), from_json(col("__row"), schema).as("__r"))
     routeDups(voted, schema, dupTopic)
+  }
+
+  /** The near-dedup band keys of `__sig`: `maxDist + 1` contiguous bit
+    * ranges of the 64-bit simhash, each tagged with its band index (two
+    * signatures within `maxDist` bits agree on at least one band).
+    */
+  private def bandCols(maxDist: Int): Seq[Column] = {
+    val nBands = maxDist + 1
+    val bounds = (0 to nBands).map(i => i * 64 / nBands)
+    (0 until nBands).map { i =>
+      val off = bounds(i)
+      val width = bounds(i + 1) - bounds(i)
+      val mask = if (width >= 64) -1L else (1L << width) - 1
+      concat_ws(":", lit(i),
+        call_function("shiftright", col("__sig"), lit(off))
+          .bitwiseAND(lit(mask)))
+    }
   }
 
   /** Shared verdict routing for the near-dedup paths: without a dup
@@ -287,7 +294,6 @@ object StatefulOps {
       maxDist: Int, dupTopic: Option[String] = None): DataFrame = {
     require(maxDist >= 0 && maxDist < 64,
       s"deduplicateNear: maxDist must be in [0, 64), got $maxDist")
-    val nBands = maxDist + 1
     val schema = df.schema
     val ord =
       if (df.columns.contains("__ord")) col("__ord").cast("long")
@@ -295,21 +301,12 @@ object StatefulOps {
     val base = df.select(
       to_json(struct(df.columns.map(col): _*)).as("__row"),
       ord.as("__o"), simhash64(text).as("__sig"))
-    val bounds = (0 to nBands).map(i => i * 64 / nBands)
-    val bandCols = (0 until nBands).map { i =>
-      val off = bounds(i)
-      val width = bounds(i + 1) - bounds(i)
-      val mask = if (width >= 64) -1L else (1L << width) - 1
-      concat_ws(":", lit(i),
-        call_function("shiftright", col("__sig"), lit(off))
-          .bitwiseAND(lit(mask)))
-    }
     import org.apache.spark.sql.expressions.Window
     val copies = base.withColumn("__copy",
       row_number().over(Window.partitionBy("__row").orderBy("__o")))
     val banded = copies
       .select(col("__row"), col("__o"), col("__sig"), col("__copy"),
-        explode(array(bandCols: _*)).as("__band"))
+        explode(array(bandCols(maxDist): _*)).as("__band"))
     val a = banded.select(col("__band"), col("__o").as("__oa"),
       col("__row").as("__ra"), col("__sig").as("__sa"))
     val b = banded.select(col("__band"), col("__o").as("__ob"),

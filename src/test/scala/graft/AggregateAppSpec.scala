@@ -180,4 +180,21 @@ class AggregateAppSpec extends AnyFunSuite {
     assert(states.head.get("v").asInt() == 3)
     assert(states.head.get("_command") == null)
   }
+
+  test("a typed preprocessor's edit reaches the reducer, not the stale __raw") {
+    // GoldenTest and StreamIo sources carry the message's original text
+    // as __raw; a stage that rewrites the document must not leave it
+    val raw = """{"_id":"t1","_command":"put","v":5,"_jwt":{"sub":"system"}}"""
+    val cmds = Seq(("t1", "put", 1L, 5, raw))
+      .toDF("_id", "_command", "__ord", "v", "__raw")
+      .withColumn("_jwt", struct(lit("system").as("sub")))
+    val io = new TestIo(Map("tapp-doc-command" -> cmds))
+    val streams = new AppRunner(spark, io, Env(spark)).run(
+      """{"application":"tapp","version":"1.0","parts":[
+           {"type":"aggregate","aggregateType":"tapp-doc",
+            "preprocessor":[{"$set":{"v":99}}]}]}""")
+    val states = streams("tapp-doc-aggregate")
+      .select("value").as[String].collect().map(Js.parse)
+    assert(states.map(_.get("v").asInt()).toSeq == Seq(99))
+  }
 }

@@ -165,4 +165,34 @@ class CollectionLockSpec extends AnyFunSuite {
       assert(w2.genManifests("c").size <= 2)
     }
   }
+
+  test("kill-point loop through a first write: no generation, no rows") {
+    // the collection has no committed generation before the victim's
+    // write: until its CAS lands (kill 1, 2) readers are refused and the
+    // moved files are never adopted; after it (kill 3) they are the
+    // collection
+    import spark.implicits._
+    def ids(io: ParquetCollectionIo) = io.source(spark, "collection", "c")
+      .select("_id").as[String].collect().toSet
+    for (kill <- 1 to 3) {
+      val root = Files.createTempDirectory(s"graft-first$kill").toString
+      val victim = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
+      final class Boom extends RuntimeException(s"kill@$kill")
+      victim.killPoint = p => if (p == kill) throw new Boom
+      intercept[Boom] {
+        victim.upsert("c", Seq(("mid", 1)).toDF("_id", "v"))
+      }
+      Files.deleteIfExists(Paths.get(s"$root/c.__lock"))
+      val reader = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
+      if (kill < 3) {
+        val e = intercept[IllegalStateException](ids(reader))
+        assert(e.getMessage.contains("collection c "), s"kill@$kill: $e")
+      } else assert(ids(reader) == Set("mid"), s"kill@$kill")
+      val w2 = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
+      w2.upsert("c", Seq(("after", 2)).toDF("_id", "v"))
+      val fin = ids(w2)
+      if (kill < 3) assert(fin == Set("after"), s"kill@$kill final $fin")
+      else assert(fin == Set("mid", "after"), s"kill@$kill final $fin")
+    }
+  }
 }

@@ -6,8 +6,8 @@ import graft.streaming.ParquetCollectionIo
 import org.apache.spark.sql.functions.col
 
 /** Snapshot isolation for collection readers (manifest commit protocol):
-  * a write moves new files in additively, atomically replaces
-  * `__manifest`, and deletes a replaced file only one generation LATER —
+  * a write moves new files in additively, publishes the next
+  * `__manifest-<gen>`, and deletes a replaced file only one generation LATER —
   * so a plan resolved against generation k still scans cleanly after
   * k+1 lands, and concurrent readers never glimpse a half-swapped
   * bucket.
@@ -45,7 +45,7 @@ class CollectionSnapshotSpec extends AnyFunSuite {
     io.delete("c", (0 until 20).map(i => Tuple1(s"id$i")).toDF("_id"),
       Seq("_id"))
     // the replaced files are STILL on disk (one grace generation) — a
-    // directory fallback would resurrect all 20 deleted rows here
+    // read of them would resurrect all 20 deleted rows here
     val read = io.source(spark, "collection", "c")
     assert(read.count() == 0, "deleted rows resurrected from retired files")
     // and the schema survives the emptying (an upsert/lookup against the
@@ -55,49 +55,21 @@ class CollectionSnapshotSpec extends AnyFunSuite {
     assert(io.source(spark, "collection", "c").count() == 1)
   }
 
-  test("an emptied collection with a pre-schema manifest still reads empty") {
-    // manifests written by older builds have no schema field: recover
-    // the schema from the retired files' own footers instead of falling
-    // back to a directory scan (which would resurrect the deleted rows)
-    val root = Files.createTempDirectory("graft-snap4").toString
-    val io = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
+  test("stray bucket files without a generation manifest are never read") {
+    // parquet under `__bucket=0/` but no `__manifest-<gen>`: what a first
+    // write leaves when it crashes after moving its files. Only a
+    // committed generation says what a collection holds.
+    val root = Files.createTempDirectory("graft-stray").toString
     import spark.implicits._
-    io.upsert("c", (0 until 10).map(i => (s"id$i", i)).toDF("_id", "v"))
-    io.delete("c", (0 until 10).map(i => Tuple1(s"id$i")).toDF("_id"),
-      Seq("_id"))
-    // rewrite the CURRENT generation file (the CAS layout keeps one
-    // manifest file per generation; the legacy single-file path is
-    // covered by the migration test below)
-    val mf = io.genManifests("c").last._2
-    val n = graft.json.Js.parse(Files.readString(mf))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    n.remove("schema")
-    Files.writeString(mf, graft.json.Js.render(n))
-    val read = io.source(spark, "collection", "c")
-    assert(read.count() == 0, "resurrected rows from a pre-schema manifest")
-    assert(read.columns.toSet == Set("_id", "v"))
-  }
-
-  test("a legacy single-file manifest reads and migrates on first commit") {
-    // older builds wrote one ATOMIC_MOVE-replaced `__manifest`; the CAS
-    // layout must (a) read it when no generation files exist, (b) retire
-    // it at the first generation commit so there is one source of truth
-    val root = Files.createTempDirectory("graft-legacy").toString
+    Seq(("stray", 1)).toDF("_id", "v").write.parquet(s"$root/c/__bucket=0")
     val io = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
-    import spark.implicits._
+    val e = intercept[IllegalStateException](
+      io.source(spark, "collection", "c"))
+    assert(e.getMessage.contains("collection c "), e.getMessage)
+    // the first commit starts from the empty snapshot: only its own rows
     io.upsert("c", Seq(("a", 1), ("b", 2)).toDF("_id", "v"))
-    // rewrite the collection into the legacy shape: move the gen file's
-    // CONTENT to `__manifest` and drop the gen files
-    val gens = io.genManifests("c")
-    val legacy = Paths.get(s"$root/c/__manifest")
-    Files.writeString(legacy, Files.readString(gens.last._2))
-    gens.foreach(g => Files.delete(g._2))
-    assert(io.source(spark, "collection", "c").count() == 2,
-      "legacy manifest must still read")
-    io.upsert("c", Seq(("c", 3)).toDF("_id", "v"))
-    assert(!Files.exists(legacy), "first CAS commit retires the legacy file")
-    assert(io.genManifests("c").nonEmpty)
-    assert(io.source(spark, "collection", "c").count() == 3)
+    assert(io.source(spark, "collection", "c").select("_id").as[String]
+      .collect().toSet == Set("a", "b"))
   }
 
   test("concurrent reads during continuous writes never fail or tear") {
