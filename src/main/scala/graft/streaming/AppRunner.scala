@@ -563,8 +563,9 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
   }
 
   /** Windowed two-sided join (docs/join.md): `on` expressions as keys,
-    * ingestion-time window, output {_id, left, right}. Streaming inputs get
-    * a watermark so the state store evicts rows outside the window.
+    * ingestion-time window, output {_id, left, right}. Two streaming
+    * sides compile to ONE stateful operator (`StatefulOps.windowJoin`);
+    * a stream-static or batch join is Spark's join.
     */
   private def joinPart(part: JsonNode, resolveFrom: JsonNode => DataFrame,
       instr: String => DataFrame => DataFrame = _ => identity)
@@ -578,11 +579,11 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
     // a schemaless side makes the output a message frame: both sides then
     // join as their message JSON
     val message = inputs.exists(Stages.isMessageShaped)
-    def side(df0: DataFrame, tag: String): (DataFrame, Column) = {
+    def side(df0: DataFrame, tag: String): DataFrame = {
       val n = part.get(tag)
       val onCol = Stages.expr(df0, n.get("on"), env).cast("string")
       // __ord/__raw are transport metadata: keeping them in the payload
-      // would defeat the value-keyed duplicate suppression below
+      // would defeat the value-keyed duplicate suppression
       val payload =
         if (message) Stages.messageJson(df0)
         else struct(df0.columns.filterNot(Set("__ord", "__raw")).map(col): _*)
@@ -599,21 +600,16 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
       val jts = Option(n.get("timestamp"))
         .map(e => Stages.expr(df0, e, env).cast("timestamp"))
         .getOrElse(current_timestamp())
-      val packed = df0.where(onCol.isNotNull && jts.isNotNull).select(
+      df0.where(onCol.isNotNull && jts.isNotNull).select(
         coalesce(onCol, lit("")).as(s"__key_$tag"),
         payload.as(tag),
         // statically non-nullable for the same restart-schema reason as
         // the key (the coalesce arm is unreachable after the filter)
         coalesce(jts, to_timestamp(lit("1970-01-01")))
           .as(s"__jts_$tag"))
-      val withWm =
-        if (packed.isStreaming && window.isDefined)
-          packed.withWatermark(s"__jts_$tag", s"${window.get} milliseconds")
-        else packed
-      (withWm, col(s"__key_$tag"))
     }
-    val (l, lk) = side(inputs(0), "left")
-    val (r, rk) = side(inputs(1), "right")
+    val l = side(inputs(0), "left")
+    val r = side(inputs(1), "right")
     // Reference semantics default the window to INFINITE (App.java:693).
     // On a stream that means both join buffers grow forever — the one
     // silent unbounded-state path left in the engine — so the faithful
@@ -636,24 +632,6 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
         s"streaming join part '$pname' runs with UNBOUNDED join state " +
           "(allowUnboundedJoinState): no watermark eviction will occur")
     }
-    // Two-sided range, NOT abs(l−r) <= w: StreamingJoinHelper can only
-    // derive state-value watermarks (→ state eviction) from range
-    // predicates directly on the watermarked timestamp columns. An abs()
-    // wrapper defeats the extraction and both join buffers grow forever.
-    val timeCond = window match {
-      case Some(w) =>
-        col("__jts_right") >= col("__jts_left") -
-          expr(s"INTERVAL $w MILLISECOND") &&
-        col("__jts_right") <= col("__jts_left") +
-          expr(s"INTERVAL $w MILLISECOND")
-      case None => lit(true)
-    }
-    val joined = l.join(r, lk === rk && timeCond, "inner")
-    // duplicate-emission suppression (reference App.java:706-708: identical
-    // join outputs within 1 s are dropped — replay and simultaneous-arrival
-    // both produce them). Streaming: value-keyed dedup riding the join's
-    // own ingestion-time watermark (a fresh watermark downstream of a
-    // stream-stream join is disallowed); batch: distinct on the output.
     // a message join emits {_id, left, right} as one keyed message
     val output =
       if (!message) Seq(col("__key_left").as("_id"), col("left"), col("right"))
@@ -661,17 +639,29 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
         col("__key_left").as("_id"),
         call_function("parse_json", col("left")).as("left"),
         call_function("parse_json", col("right")).as("right"))).as("value"))
-    if (joined.isStreaming && window.isDefined)
-      joined
-        .withColumn("__jv",
-          sha2(to_json(struct(col("__key_left"), col("left"), col("right"))), 256))
-        // keep exactly one event-time column for the dedup state eviction
-        .drop("__jts_right")
-        .dropDuplicatesWithinWatermark("__jv")
-        .select(output: _*)
+    if (l.isStreaming && r.isStreaming)
+      StatefulOps.windowJoin(l, r, window).select(output: _*)
     else {
+      val timeCond = window match {
+        case Some(w) =>
+          col("__jts_right") >= col("__jts_left") -
+            expr(s"INTERVAL $w MILLISECOND") &&
+          col("__jts_right") <= col("__jts_left") +
+            expr(s"INTERVAL $w MILLISECOND")
+        case None => lit(true)
+      }
+      val joined = l.join(r, col("__key_left") === col("__key_right") &&
+        timeCond, "inner")
+      // duplicate-emission suppression (reference App.java:706-708:
+      // identical join outputs within 1 s are dropped). A stream-static
+      // join keeps no pairing state: a replayed stream row pairs with the
+      // static side again, and the pair is dropped while the window
+      // lasts (the `$deduplicate` TTL operator); batch: distinct.
       val out = joined.select(output: _*)
-      if (joined.isStreaming) out else out.dropDuplicates()
+      if (!joined.isStreaming) out.dropDuplicates()
+      else if (window.isEmpty) out
+      else StatefulOps.deduplicate(out,
+        sha2(to_json(struct(out.columns.map(col): _*)), 256), window)
     }
   }
 

@@ -628,7 +628,8 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     * `withWriterLock`, which re-reads and retries the whole merge.
     * A crash between the CAS and the cleanup strands the previous
     * retired set as unreferenced debris — the next commit's GC removes
-    * anything in a live bucket dir outside (live ∪ retired).
+    * anything in ANY bucket dir outside (live ∪ retired): a dead writer
+    * may have moved files into a bucket no manifest lists.
     */
   private def commit(name: String, prev: Manifest,
       live: Map[Int, Seq[String]], nowRetired: Seq[String],
@@ -642,7 +643,7 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     killPoint(3)
     prev.retired.foreach(f => Files.deleteIfExists(target.resolve(f)))
     val known = (live.values.flatten ++ retired).toSet
-    live.keys.foreach { b =>
+    (0 until ParquetCollectionIo.Buckets).foreach { b =>
       val bdir = target.resolve(s"__bucket=$b")
       if (Files.exists(bdir))
         Files.list(bdir).iterator().asScala.toSeq

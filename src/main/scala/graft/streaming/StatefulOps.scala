@@ -1,9 +1,10 @@
 package graft.streaming
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import graft.json.Js
 
 /** Arbitrary-state streaming operators on Spark 4's `transformWithState`:
@@ -121,6 +122,51 @@ object StatefulOps {
     out.toDF("__row")
       .select(from_json(col("__row"), schema).as("__r"))
       .select("__r.*")
+  }
+
+  /** Stream–stream `join` part as ONE keyed `transformWithState`
+    * operator (see [[JoinProcessor]]). Each side is `(key: string,
+    * payload, event time)` — the payload any type (a document struct, or
+    * message JSON text). With a `windowMs` each side gets its own watermark
+    * before the union, so the query's watermark stays the min of the
+    * two, and rows behind it drop on input like any event-time operator;
+    * without one (the `allowUnboundedJoinState` opt-in) both buffers
+    * grow forever and nothing is suppressed. Output: the left key, then
+    * both payloads, under the sides' own column names and types.
+    *
+    * One operator instead of Spark's symmetric hash join plus a
+    * `dropDuplicatesWithinWatermark` behind it: one multi-column-family
+    * store per partition instead of five, one shuffle instead of two,
+    * and no per-plan-copy broadcast in the join exec's constructor — a
+    * micro-batch's fixed cost, which is what bounds join latency.
+    */
+  def windowJoin(left: DataFrame, right: DataFrame,
+      windowMs: Option[Long]): DataFrame = {
+    val spark = left.sparkSession
+    ensureRocksDb(spark)
+    val types = Seq(left, right).map(_.schema(1).dataType)
+    def packed(df: DataFrame, side: Int): DataFrame = {
+      val Array(k, p, ts) = df.columns
+      val wm = windowMs.fold(df)(w => df.withWatermark(ts, s"$w milliseconds"))
+      // the pair identity of the duplicate suppression: a side's payload
+      // hash, computed once per input row (transport metadata is not in
+      // the payload, so a replayed message hashes alike)
+      val h =
+        if (windowMs.isEmpty) lit("")
+        else sha2(to_json(struct(col(p).as("p"))), 256)
+      wm.select(col(k).as("k"), lit(side).as("side"),
+        (if (side == 0) col(p) else lit(null).cast(types(0))).as("l"),
+        (if (side == 1) col(p) else lit(null).cast(types(1))).as("r"),
+        unix_micros(col(ts)).as("us"), h.as("h"), col(ts).as("ts"))
+    }
+    val out = StructType(Seq(StructField(left.columns(0), StringType, false),
+      StructField(left.columns(1), types(0)),
+      StructField(right.columns(1), types(1))))
+    packed(left, 0).union(packed(right, 1))
+      .groupByKey((r: Row) => r.getString(0))(Encoders.STRING)
+      .transformWithState(new JoinProcessor(windowMs, types(0), types(1)),
+        if (windowMs.isDefined) TimeMode.EventTime() else TimeMode.None(),
+        OutputMode.Append())(Encoders.row(out))
   }
 
   /** 64-bit SimHash of a text column, per row (the same majority formula
@@ -541,6 +587,96 @@ final class DedupProcessor(ttlMs: Option[Long])
       seen.update(true)
       Iterator(rows.minBy(_._2)._3)
     }
+}
+
+/** The stream–stream join's state, per join key: one buffer per side of
+  * (payload, event time µs, payload hash) and — windowed — a map of the
+  * pairs already emitted (left hash ++ right hash → expiry ms), which
+  * suppresses the duplicate a replayed message would pair into
+  * (reference App.java:706-708).
+  *
+  * Per micro-batch: new-left × (buffered-right ∪ new-right), plus
+  * buffered-left × new-right, matching when |l − r| ≤ window, inclusive
+  * at both ends. A row is useless once ts + window ≤ watermark: later
+  * rows are newer than the watermark, so none can be within the window.
+  * One event-time timer per key, at the earliest such expiry, evicts
+  * the expired rows and pairs and re-arms for the next one. Windowless:
+  * no timers, no suppression — every pairing is emitted.
+  */
+final class JoinProcessor(windowMs: Option[Long], leftType: DataType,
+    rightType: DataType) extends StatefulProcessor[String, Row, Row] {
+  @transient private var buffers: Array[ListState[Row]] = _
+  @transient private var emitted: MapState[String, Long] = _
+
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    def buffer(name: String, t: DataType) = getHandle.getListState(name,
+      Encoders.row(StructType(Seq(StructField("p", t),
+        StructField("us", LongType, false), StructField("h", StringType)))),
+      TTLConfig.NONE)
+    buffers = Array(buffer("left", leftType), buffer("right", rightType))
+    if (windowMs.isDefined)
+      emitted = getHandle.getMapState("emitted", Encoders.STRING,
+        Encoders.scalaLong, TTLConfig.NONE)
+  }
+
+  /** The first watermark (ms) at which a row of this event time can no
+    * longer pair: ts + window, rounded UP so the µs comparison is exact.
+    */
+  private def expiry(us: Long): Long =
+    Math.floorDiv(us + windowMs.get * 1000 + 999, 1000)
+
+  private def pairs(l: Row, r: Row): Boolean = windowMs.forall(w =>
+    math.abs(l.getLong(1) - r.getLong(1)) <= w * 1000)
+
+  override def handleInputRows(key: String, rows: Iterator[Row],
+      tv: TimerValues): Iterator[Row] = {
+    val in = rows.toVector
+    def arrived(side: Int) = in.filter(_.getInt(1) == side)
+      .map(r => Row(r.get(2 + side), r.getLong(4), r.getString(5)))
+    val (newL, newR) = (arrived(0), arrived(1))
+    def buffered(side: Int, needed: Boolean) =
+      if (needed) buffers(side).get().toVector else Vector.empty
+    val bufR = buffered(1, newL.nonEmpty)
+    val bufL = buffered(0, newR.nonEmpty)
+    val candidates = newL.flatMap(l => (bufR ++ newR).map(l -> _)) ++
+      bufL.flatMap(l => newR.map(l -> _))
+    val out = candidates.filter { case (l, r) =>
+      pairs(l, r) && (windowMs.isEmpty || {
+        val id = l.getString(2) + r.getString(2)
+        val fresh = !emitted.containsKey(id)
+        if (fresh) emitted.updateValue(id, expiry(l.getLong(1)))
+        fresh
+      })
+    }.map { case (l, r) => Row(key, l.get(0), r.get(0)) }
+    if (newL.nonEmpty) buffers(0).appendList(newL.toArray)
+    if (newR.nonEmpty) buffers(1).appendList(newR.toArray)
+    if (windowMs.isDefined) {
+      // one live timer per key, at the earliest expiry it holds
+      val next = (newL ++ newR).map(e => expiry(e.getLong(1))).min
+      val armed = getHandle.listTimers().map(_.asInstanceOf[Long]).toVector
+      if (armed.forall(_ > next)) {
+        armed.foreach(getHandle.deleteTimer)
+        getHandle.registerTimer(next)
+      }
+    }
+    out.iterator
+  }
+
+  override def handleExpiredTimer(key: String, tv: TimerValues,
+      info: ExpiredTimerInfo): Iterator[Row] = {
+    val wm = tv.getCurrentWatermarkInMs()
+    val kept = buffers.toVector.flatMap { b =>
+      val all = b.get().toVector
+      val live = all.filter(e => expiry(e.getLong(1)) > wm)
+      if (live.isEmpty) b.clear()
+      else if (live.size < all.size) b.put(live.toArray)
+      live.map(e => expiry(e.getLong(1)))
+    }
+    val (dead, alive) = emitted.iterator().toVector.partition(_._2 <= wm)
+    dead.foreach(p => emitted.removeKey(p._1))
+    (kept ++ alive.map(_._2)).minOption.foreach(getHandle.registerTimer)
+    Iterator.empty
+  }
 }
 
 /** One band's signature log for `$deduplicateNear`: a TTL'd ListState of

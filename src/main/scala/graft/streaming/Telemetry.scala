@@ -121,6 +121,15 @@ object Telemetry {
       state.put(operator, (rows, bytes)); ()
     }
 
+    /** Each query's last micro-batch phase durations (GAUGES, ms): the
+      * per-trigger floor a deployed app pays, by phase.
+      */
+    private val triggers =
+      new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
+    def setTrigger(query: String, phase: String, ms: Long): Unit = {
+      triggers.put((query, phase), ms); ()
+    }
+
     private def attr(key: String, value: String): String =
       s"""{"key":${jstr(key)},"value":{"stringValue":${jstr(value)}}}"""
 
@@ -140,8 +149,9 @@ object Telemetry {
          |"dataPoints":[${points.mkString(",")}]}}""".stripMargin
         .replace("\n", "")
 
-    private def gauge(name: String, points: Seq[String]): String =
-      s"""{"name":${jstr(name)},"unit":"1","gauge":{
+    private def gauge(name: String, points: Seq[String],
+        unit: String = "1"): String =
+      s"""{"name":${jstr(name)},"unit":${jstr(unit)},"gauge":{
          |"dataPoints":[${points.mkString(",")}]}}""".stripMargin
         .replace("\n", "")
 
@@ -159,11 +169,18 @@ object Telemetry {
             point(s._1, "," + attr("operator", op)) }),
           gauge("json_streams.state_bytes", stateSnap.map { case (op, s) =>
             point(s._2, "," + attr("operator", op)) }))
+      val triggerSnap = triggers.asScala.toSeq.sortBy(_._1)
+      val triggerMetrics =
+        if (triggerSnap.isEmpty) Nil
+        else Seq(gauge("json_streams.trigger_ms", triggerSnap.map {
+          case ((q, phase), ms) =>
+            point(ms, "," + attr("query", q) + "," + attr("phase", phase))
+        }, unit = "ms"))
       val metrics = (Seq(
         counter("json_streams.messages", msgPoints),
         counter("json_streams.starts", Seq(point(starts.get(), ""))),
         counter("json_streams.stops", Seq(point(stops.get(), "")))) ++
-        stateMetrics)
+        stateMetrics ++ triggerMetrics)
         .filter(_.contains("asInt")) // drop the messages counter pre-traffic
       val body =
         s"""{"resourceMetrics":[{"resource":{"attributes":[
@@ -202,9 +219,17 @@ object Telemetry {
       row: org.apache.spark.sql.Row): Unit =
     points(name, row).foreach { case (k, n) => sink.addMessages(k, n) }
 
+  /** The `durationMs` phases of a micro-batch that `json_streams.trigger_ms`
+    * exports.
+    */
+  val TriggerPhases: Seq[String] = Seq("latestOffset", "getBatch",
+    "queryPlanning", "addBatch", "walCommit", "commitOffsets",
+    "triggerExecution")
+
   /** Streaming-query listener feeding the metric sink: each micro-batch's
     * `jsm__`-prefixed observed counts accumulate into the cumulative
-    * counters; query starts/stops tick their counters. Flushes at most
+    * counters; query starts/stops tick their counters; state sizes and
+    * trigger phases set their gauges. Flushes at most
     * once per `intervalMillis` (reference cadence: a minute) plus once on
     * every termination, so a short-lived run still exports.
     */
@@ -261,11 +286,20 @@ object Telemetry {
         sink.addMessages("late.dropped", lateDropped)
       // state-store size per operator, summed over the queries holding
       // that operator (each query's state is real, distinct state — no
-      // ownership here) — the unbounded-state early-warning gauge
-      val ops = event.progress.stateOperators
-        .map(so => so.operatorName -> (so.numRowsTotal, so.memoryUsedBytes))
-        .toMap
+      // ownership here) and over same-named operators within one query
+      // (a join fed by a `$deduplicate` holds two transformWithState
+      // operators) — the unbounded-state early-warning gauge
+      val ops = event.progress.stateOperators.toSeq.groupBy(_.operatorName)
+        .map { case (op, sos) =>
+          op -> (sos.map(_.numRowsTotal).sum, sos.map(_.memoryUsedBytes).sum)
+        }
       if (ops.nonEmpty) { stateByQuery.put(rid, ops); publishState() }
+      // the trigger floor: this query's last batch, phase by phase
+      val query =
+        Option(event.progress.name).getOrElse(event.progress.id.toString)
+      triggerQuery.put(rid, query)
+      TriggerPhases.foreach(ph => sink.setTrigger(query, ph,
+        Option(event.progress.durationMs.get(ph)).fold(0L)(_.longValue)))
       val now = System.currentTimeMillis()
       if (now - lastFlush >= intervalMillis) { lastFlush = now; sink.flush() }
     }
@@ -273,9 +307,16 @@ object Telemetry {
     override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
       owners.values.removeIf(_ == event.runId)
       if (stateByQuery.remove(event.runId) != null) publishState()
+      // a terminated query's phases zero out, like its state gauges
+      Option(triggerQuery.remove(event.runId)).foreach(q =>
+        TriggerPhases.foreach(sink.setTrigger(q, _, 0)))
       sink.addStop()
       sink.flush()
     }
+
+    /** run id → the `query` attribute its trigger gauges carry */
+    private val triggerQuery =
+      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
 
     private val stateByQuery = new java.util.concurrent.ConcurrentHashMap[
       java.util.UUID, Map[String, (Long, Long)]]()

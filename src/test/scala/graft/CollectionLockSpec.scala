@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.json.Js
 import graft.streaming.ParquetCollectionIo
 import org.apache.spark.sql.functions.col
 
@@ -193,6 +194,21 @@ class CollectionLockSpec extends AnyFunSuite {
       val fin = ids(w2)
       if (kill < 3) assert(fin == Set("after"), s"kill@$kill final $fin")
       else assert(fin == Set("mid", "after"), s"kill@$kill final $fin")
+      // the successor's commit GCs every bucket dir, not only its live
+      // ones: the dead writer's moved file may sit in a bucket the new
+      // generation does not list
+      val m = Js.parse(Files.readString(w2.genManifests("c").last._2))
+      val listed = (Js.fields(m.get("live")).flatMap(f => Js.elems(f._2)) ++
+        Js.elems(m.get("retired"))).map(_.asText()).toSet
+      val onDisk = {
+        import scala.jdk.CollectionConverters._
+        val c = Paths.get(s"$root/c")
+        Files.walk(c).iterator().asScala.toSeq
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(c.relativize(_).toString).toSet
+      }
+      assert(onDisk.subsetOf(listed),
+        s"kill@$kill unlisted files: ${onDisk -- listed}")
     }
   }
 }

@@ -90,4 +90,48 @@ class JoinRestartSpec extends AnyFunSuite {
     assert(c3.getStruct(1).getAs[Long]("lv") == 3L)
     assert(c3.getStruct(2).getAs[Long]("rv") == 4L)
   }
+
+  test("a checkpoint of the symmetric-hash-join layout is refused loudly") {
+    // Join checkpoints written before the join became one stateful
+    // operator hold a symmetric hash join plus a
+    // dropDuplicatesWithinWatermark: phase 1 builds that plan shape
+    // directly, phase 2 resumes it under the runner, which must fail at
+    // its first batch instead of reading the old state as new.
+    import org.apache.spark.sql.functions._
+    val work = Files.createTempDirectory("graft-join-oldckpt")
+    val (srcRoot, outRoot, ckptRoot) =
+      (work.resolve("in"), work.resolve("out"), work.resolve("ckpt"))
+    put(srcRoot.resolve("lt"), "m0001.json",
+      """{"_id":"L1","corr":"c1","lv":1}""")
+    put(srcRoot.resolve("rt"), "m0002.json",
+      """{"_id":"R1","corr":"c1","rv":2}""")
+    val old = new ResumableIo(srcRoot, outRoot, ckptRoot, schemas)
+    def side(tag: String) = {
+      val df = old.source(spark, "topic", tag.head + "t")
+      df.select(col("corr").as(s"__key_$tag"),
+        struct(df.columns.filterNot(_ == "__ord").map(col): _*).as(tag),
+        current_timestamp().as(s"__jts_$tag"))
+        .withWatermark(s"__jts_$tag", "600000 milliseconds")
+    }
+    val joined = side("left").join(side("right"),
+      col("__key_left") === col("__key_right") &&
+        col("__jts_right") >= col("__jts_left") -
+          expr("INTERVAL 600000 MILLISECOND") &&
+        col("__jts_right") <= col("__jts_left") +
+          expr("INTERVAL 600000 MILLISECOND"))
+    old.start("jout", joined
+      .withColumn("__jv", sha2(to_json(struct(col("__key_left"),
+        col("left"), col("right"))), 256))
+      .drop("__jts_right")
+      .dropDuplicatesWithinWatermark("__jv")
+      .select(col("__key_left").as("_id"), col("left"), col("right")))
+    old.drainAndStop()
+
+    put(srcRoot.resolve("rt"), "m0003.json",
+      """{"_id":"R2","corr":"c1","rv":3}""")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      runPhase(new ResumableIo(srcRoot, outRoot, ckptRoot, schemas)))
+    assert(e.getMessage.contains(
+      "STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"), e.getMessage)
+  }
 }

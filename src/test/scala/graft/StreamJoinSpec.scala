@@ -51,12 +51,11 @@ class StreamJoinSpec extends AnyFunSuite {
   }
 
   test("streaming join evicts state once the window has passed") {
-    // Guards the two-sided range form of the window condition: with
-    // abs(l - r) <= w StreamingJoinHelper cannot derive state-value
-    // watermarks and both buffers grow without bound. Feed three
-    // well-separated micro-batch rounds through a 1 s window and assert
-    // the state store sheds the old rows instead of accumulating all 9
-    // (6 join-side + 3 dedup) entries.
+    // Guards watermark eviction: without it both buffers grow without
+    // bound. Feed three well-separated micro-batch rounds through the
+    // window and assert the state store sheds the old rows instead of
+    // accumulating all 9 entries (per join key: a left buffer, a right
+    // buffer and the emitted pair).
     val dir = Files.createTempDirectory("graft-sjevict").toString
     def write(topic: String, name: String, json: String): Unit = {
       Files.createDirectories(Paths.get(s"$dir/$topic"))
@@ -192,6 +191,110 @@ class StreamJoinSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[String]("_id")).toSeq == Seq("c1"),
       s"event-time window violated: ${rows.mkString(",")}")
     io.stopAll()
+  }
+
+  test("event-time join semantics: window edge, late rows, replays, eviction") {
+    // Fed by `timestamp` values only, one micro-batch per step: every
+    // outcome below is a function of the data, not of arrival time.
+    val dir = Files.createTempDirectory("graft-sjsem").toString
+    var seq = 0
+    def write(topic: String, id: String, corr: String, at: String): Unit = {
+      Files.createDirectories(Paths.get(s"$dir/$topic"))
+      seq += 1
+      Files.writeString(Paths.get(f"$dir/$topic/m$seq%04d.json"),
+        s"""{"_id":"$id","corr":"$corr","ets":"2024-01-01T$at"}""")
+    }
+    val schema = DataType.fromDDL("_id string, corr string, ets string")
+      .asInstanceOf[StructType]
+    Files.createDirectories(Paths.get(s"$dir/lsem"))
+    Files.createDirectories(Paths.get(s"$dir/rsem"))
+    val io = new FileStreamIo(dir, Map("lsem" -> schema, "rsem" -> schema),
+      maxFilesPerTrigger = 10)
+    new AppRunner(spark, io, Env(spark)).run(
+      """{"application":"sjsem","version":"1.0","parts":[
+           {"type":"join","name":"js","window":10000,
+            "left":{"fromTopic":"lsem","on":"$corr","timestamp":"$ets"},
+            "right":{"fromTopic":"rsem","on":"$corr","timestamp":"$ets"},
+            "toTopic":"out_sjsem"}]}""")
+    def pairs = spark.table("out_sjsem").collect()
+      .map(_.getAs[String]("_id")).toSeq.sorted
+    val q = io.queries("out_sjsem")
+    def stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    // 1. a gap of exactly the window pairs (once, though its left row
+    // arrives twice in the batch); window + 1 ms does not
+    write("lsem", "l1", "edge", "10:00:00.000Z")
+    write("lsem", "l1", "edge", "10:00:00.000Z")
+    write("rsem", "r1", "edge", "10:00:10.000Z")
+    write("lsem", "l2", "past", "10:00:00.000Z")
+    write("rsem", "r2", "past", "10:00:10.001Z")
+    io.processAll()
+    assert(pairs == Seq("edge"))
+    // 2. both sides move to 10:01:00 (watermark 10:00:50); `late`'s right
+    // row at 10:00:55 is inside the watermark and stays buffered
+    write("lsem", "l3", "again", "10:01:00.000Z")
+    write("rsem", "r3", "again", "10:01:00.000Z")
+    write("rsem", "r4", "late", "10:00:55.000Z")
+    io.processAll()
+    assert(pairs == Seq("again", "edge"))
+    // its left partner at 10:00:49 is 6 s away, inside the window, but
+    // behind the watermark: dropped on input, so it never pairs
+    write("lsem", "l4", "late", "10:00:49.000Z")
+    io.processAll()
+    assert(pairs == Seq("again", "edge"))
+    // 3. a replayed left row (same message, later batch) pairs with the
+    // buffered right row again: the duplicate pair is suppressed
+    write("lsem", "l3", "again", "10:01:00.000Z")
+    io.processAll()
+    assert(pairs == Seq("again", "edge"))
+    val before = stateRows
+    // 4. the watermark passes every buffered row's ts + window: the
+    // state holds only the two new unmatched rows
+    write("lsem", "l9", "end-l", "10:05:00.000Z")
+    write("rsem", "r9", "end-r", "10:05:00.000Z")
+    io.processAll()
+    assert(pairs == Seq("again", "edge"))
+    val after = stateRows
+    assert(after < before && after <= 2,
+      s"join state not evicted: $before rows before, $after after")
+    io.stopAll()
+  }
+
+  test("typed join payloads come out exactly as they went in") {
+    // the join state carries each side's document struct through row
+    // encoders: every column type must survive buffering and pairing
+    val dir = Files.createTempDirectory("graft-sjtypes").toString
+    val ddl = "_id string, corr string, n int, big bigint, x double, " +
+      "dec decimal(20,6), at timestamp, tags array<string>, " +
+      "attrs map<string,int>, sub struct<a:int,b:string>"
+    val schema = DataType.fromDDL(ddl).asInstanceOf[StructType]
+    def doc(id: String) =
+      s"""{"_id":"$id","corr":"c1","n":-7,"big":9007199254740993,""" +
+        """"x":0.1,"dec":"12345678901234.123456",""" +
+        """"at":"2024-01-01T10:00:00.123456Z","tags":["p",null],""" +
+        """"attrs":{"k":1},"sub":{"a":2,"b":null}}"""
+    Files.createDirectories(Paths.get(s"$dir/lty"))
+    Files.createDirectories(Paths.get(s"$dir/rty"))
+    Files.writeString(Paths.get(s"$dir/lty/m1.json"), doc("l1"))
+    Files.writeString(Paths.get(s"$dir/rty/m2.json"), doc("r1"))
+    val io = new FileStreamIo(dir, Map("lty" -> schema, "rty" -> schema),
+      maxFilesPerTrigger = 10)
+    new AppRunner(spark, io, Env(spark)).run(
+      """{"application":"sjty","version":"1.0","parts":[
+           {"type":"join","name":"jt","window":60000,
+            "left":{"fromTopic":"lty","on":"$corr"},
+            "right":{"fromTopic":"rty","on":"$corr"},
+            "toTopic":"out_sjty"}]}""")
+    io.processAll()
+    io.stopAll()
+    val out = spark.table("out_sjty")
+    assert(out.schema("left").dataType == schema &&
+      out.schema("right").dataType == schema, out.schema.treeString)
+    val src = spark.read.schema(schema).json(s"$dir/lty", s"$dir/rty")
+      .collect().map(r => r.getString(0) -> r).toMap
+    val pair = out.collect()
+    assert(pair.length == 1)
+    assert(pair.head.getStruct(1) == src("l1"))
+    assert(pair.head.getStruct(2) == src("r1"))
   }
 
   test("windowless streaming join requires the explicit unbounded opt-in") {

@@ -264,23 +264,125 @@ class TelemetrySpec extends AnyFunSuite {
         """{"_id":"b","corr":"c2"}""")
       io.processAll()
       io.stopAll()
-      def gaugeRows: Long = {
-        import scala.jdk.CollectionConverters._
-        posts.iterator().asScala.toSeq
-          .filter(_._1.endsWith("/v1/metrics")).map(_._2)
-          .flatMap { b =>
-            Js.elems(Js.parse(b).get("resourceMetrics").get(0)
-              .get("scopeMetrics").get(0).get("metrics"))
-              .filter(_.get("name").asText() == "json_streams.state_rows")
-              .flatMap(m => Js.elems(m.get("gauge").get("dataPoints")))
-              .map(_.get("asInt").asText().toLong)
-          }.maxOption.getOrElse(-1L)
-      }
+      def gaugeRows: Long = gaugePoints(posts, "json_streams.state_rows")
+        .map(_._2).maxOption.getOrElse(-1L)
       val deadline = System.currentTimeMillis() + 10000
       while (gaugeRows < 2 && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
       // two distinct dedup keys live in the state store
       assert(gaugeRows == 2, s"state gauge: $gaugeRows")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  /** The data points of every `name` gauge posted so far, oldest first:
+    * (attributes, value).
+    */
+  private def gaugePoints(posts: java.util.Collection[(String, String)],
+      name: String): Seq[(Map[String, String], Long)] = {
+    import scala.jdk.CollectionConverters._
+    posts.iterator().asScala.toSeq
+      .filter(_._1.endsWith("/v1/metrics")).map(_._2)
+      .flatMap { b =>
+        Js.elems(Js.parse(b).get("resourceMetrics").get(0)
+          .get("scopeMetrics").get(0).get("metrics"))
+          .filter(_.get("name").asText() == name)
+          .flatMap(m => Js.elems(m.get("gauge").get("dataPoints")))
+          .map(dp => Js.elems(dp.get("attributes")).map(a =>
+            a.get("key").asText() ->
+              a.get("value").get("stringValue").asText()).toMap ->
+            dp.get("asInt").asText().toLong)
+      }
+  }
+
+  test("state gauges sum same-named operators within one query") {
+    // a join fed by a `$deduplicate` part: one query, two
+    // transformWithState operators — the gauge is their sum, not
+    // whichever reported last
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-otlpsum").toString
+    Seq("sl", "sr").foreach(t => Files.createDirectories(Paths.get(s"$dir/$t")))
+    val posts =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val http: HttpTransport = (_, url, _, body) => {
+      posts.add((url, body)); HttpResult(200, "{}")
+    }
+    val io = new graft.streaming.FileStreamIo(dir, Map.empty,
+      maxFilesPerTrigger = 10)
+    val runner = new AppRunner(spark, io,
+      graft.op.Env(spark).copy(http = http),
+      config = Map("otlp.http" -> "http://collector:4318",
+        "instance" -> "i-1", "otlp.metricsIntervalMillis" -> "0"))
+    runner.run(
+      """{"application":"gsum","version":"1.0","parts":[
+           {"type":"stream","name":"d","fromTopic":"sl","pipeline":[
+              {"$deduplicate":{"expression":"$_id"}}]},
+           {"type":"join","name":"j","window":60000,"toTopic":"sout",
+            "left":{"fromStream":"d","on":"$corr","timestamp":"$ts"},
+            "right":{"fromTopic":"sr","on":"$corr","timestamp":"$ts"}}]}""")
+    val listener = runner.metricsListener.get
+    spark.streams.addListener(listener)
+    try {
+      def msg(id: String, corr: String) =
+        s"""{"_id":"$id","corr":"$corr","ts":"2024-01-01T10:00:00Z"}"""
+      Files.writeString(Paths.get(s"$dir/sl/m1.json"), msg("a", "c1"))
+      Files.writeString(Paths.get(s"$dir/sl/m2.json"), msg("b", "c2"))
+      Files.writeString(Paths.get(s"$dir/sr/m3.json"), msg("r", "c1"))
+      io.processAll()
+      val tws = io.queries("sout").lastProgress.stateOperators
+        .filter(_.operatorName.startsWith("transformWithState"))
+      assert(tws.length == 2, tws.map(_.operatorName).mkString(","))
+      val op = tws.head.operatorName
+      val want = tws.map(_.numRowsTotal).sum
+      def gauge = gaugePoints(posts, "json_streams.state_rows")
+        .filter(_._1.get("operator").contains(op)).lastOption.map(_._2)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!gauge.contains(want) && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      assert(tws.forall(_.numRowsTotal > 0))
+      assert(gauge.contains(want), s"gauge $gauge, operators sum to $want")
+      io.stopAll()
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("trigger phases export as json_streams.trigger_ms gauges") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-otlpt").toString
+    Files.createDirectories(Paths.get(s"$dir/tin"))
+    val posts =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val http: HttpTransport = (_, url, _, body) => {
+      posts.add((url, body)); HttpResult(200, "{}")
+    }
+    val io = new graft.streaming.FileStreamIo(dir, Map.empty)
+    val runner = new AppRunner(spark, io,
+      graft.op.Env(spark).copy(http = http),
+      config = Map("otlp.http" -> "http://collector:4318",
+        "instance" -> "i-1", "otlp.metricsIntervalMillis" -> "0"))
+    runner.run(
+      """{"application":"gt","version":"1.0","parts":[
+           {"type":"stream","name":"s","fromTopic":"tin","toTopic":"tout"}]}""")
+    val listener = runner.metricsListener.get
+    spark.streams.addListener(listener)
+    try {
+      Files.writeString(Paths.get(s"$dir/tin/m1.json"), """{"_id":"a"}""")
+      io.processAll()
+      def points = gaugePoints(posts, "json_streams.trigger_ms")
+        .filter(_._1.get("query").contains("tout"))
+      def phases = points.map(_._1("phase")).toSet
+      val deadline = System.currentTimeMillis() + 10000
+      while (phases.size < 7 && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      assert(phases == Telemetry.TriggerPhases.toSet, s"phases $phases")
+      assert(points.exists(p => p._1("phase") == "triggerExecution" &&
+        p._2 > 0))
+      // a terminated query's points zero out
+      io.stopAll()
+      def last = points.takeRight(7)
+      val stopBy = System.currentTimeMillis() + 10000
+      while (!last.forall(_._2 == 0) && System.currentTimeMillis() < stopBy)
+        Thread.sleep(100)
+      assert(last.map(_._1("phase")).toSet == phases && last.forall(_._2 == 0),
+        s"after stop: $last")
     } finally spark.streams.removeListener(listener)
   }
 

@@ -10,7 +10,8 @@ section. Run-to-run noise is normalized so two runs of the same plan compare
 equal with `diff`: expression ids (`#123` -> `#N`), lambda variable names
 (`x_45` -> `x_N`), exchange plan ids (`plan_id=9` -> `plan_id=N`), the
 random suffix of `graft-*` temp directories, and in streaming plans the JVM
-lambda class names, object identity hashes and the query's run id.
+lambda class names, object identity hashes, the query's run id and the node
+id an `EventTimeWatermark` carries.
 """
 import re
 import sys
@@ -24,6 +25,8 @@ NOISE = [
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"(\w)@[0-9a-f]{5,8}\b"), r"\1@H"),
     (re.compile(r"runId = [0-9a-f-]{36}"), "runId = R"),
+    (re.compile(r"^Arguments: [0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}, "),
+     "Arguments: U, "),
 ]
 # Spark log lines and sbt chatter that may interleave with the plans
 LOG = re.compile(r"^(\d\d/\d\d/\d\d \d\d:\d\d:\d\d |\[(info|warn|error|success)\])")
