@@ -202,19 +202,22 @@ object ExprCompiler {
   private def compileOp(op: String, n: JsonNode, ctx: Ctx): Column = {
     def isVariant(c: Column): Boolean =
       ctx.typeOf(c).typeName == "variant"
+    def isNullLit(c: Column): Boolean = ctx.typeOf(c) == NullType
     lazy val rawArgs = argList(n, ctx)
     // both sides dynamically typed → Mongo's cross-type total order
     // (Null < Number < String < Object < Array < Boolean) via the native
-    // mongo_cmp comparator over the JSON texts
+    // mongo_cmp comparator over the JSON texts. A `null` literal against
+    // a variant goes the same way: it has no type to cast the variant to
     lazy val variantCmp: Option[Column] =
       if (comparisonOps(op) && rawArgs.size == 2 &&
-          isVariant(rawArgs(0)) && isVariant(rawArgs(1)))
+          rawArgs.exists(isVariant) &&
+          rawArgs.forall(c => isVariant(c) || isNullLit(c)))
         // a MISSING field (SQL-null variant) sits in Mongo's Null
         // bracket, same as an explicit JSON null — don't let the null
         // propagate and silently drop the comparison
-        Some(call_function("mongo_cmp",
-          coalesce(to_json(rawArgs(0)), lit("null")),
-          coalesce(to_json(rawArgs(1)), lit("null"))))
+        Some(call_function("mongo_cmp", rawArgs.map(c =>
+          if (isNullLit(c)) lit("null")
+          else coalesce(to_json(c), lit("null"))): _*))
       else None
     lazy val as = {
       val raw = rawArgs

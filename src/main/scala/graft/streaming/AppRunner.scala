@@ -108,10 +108,10 @@ final class AppRunner(spark: SparkSession, io: Io, env0: Env,
     metricSink.map(new Telemetry.BatchMetricsListener(_))
 
   def run(yamlOrJson: String): Map[String, DataFrame] = {
-    // one state-store provider for the WHOLE run, fixed before any part
-    // compiles — not flipped mid-run by the first timer-using part
-    // (see StatefulOps.ensureRocksDb)
-    StatefulOps.ensureRocksDb(spark)
+    // one state-store provider and checkpoint file system for the WHOLE
+    // run, fixed before any part compiles — not flipped mid-run by the
+    // first timer-using part (see StatefulOps.streamingDefaults)
+    StatefulOps.streamingDefaults(spark)
     // the reference's `plugins` config entry (docs/plugins.md): a directory
     // of per-plugin subdirectories/jars, each its own classloader
     config.get("plugins").foreach(p =>

@@ -44,7 +44,8 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     *    already-exists ⇒ poll (the peer's swap is file moves — fast)
     *  - crash safety: a lock whose mtime is older than `lockStaleMs` is
     *    deleted and re-contended, so a dead writer never wedges the
-    *    collection
+    *    collection; the writer that then wins the lock removes the dead
+    *    token's staging directory, which nobody else would
     *  - steal detection: before the final swap the writer re-reads the
     *    lock; a foreign token means a peer declared us stale mid-write
     *    (e.g. a long GC pause) — abort THIS batch's swap and retry the
@@ -60,6 +61,7 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     Files.createDirectories(p.getParent)
     val deadline = System.currentTimeMillis() + lockWaitMs
     var held = false
+    var stolen = Set.empty[String]
     while (!held) {
       try {
         Files.write(p, lockToken.getBytes("UTF-8"),
@@ -71,15 +73,25 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
             try Files.getLastModifiedTime(p).toMillis <
               System.currentTimeMillis() - lockStaleMs
             catch { case _: java.io.IOException => false } // gone: recontend
-          if (stale) Files.deleteIfExists(p) // steal; CREATE_NEW re-races
-          else if (System.currentTimeMillis() > deadline)
+          if (stale) { // steal; CREATE_NEW re-races
+            try stolen += new String(Files.readAllBytes(p), "UTF-8")
+            catch { case _: java.io.IOException => () } // gone: recontend
+            Files.deleteIfExists(p)
+          } else if (System.currentTimeMillis() > deadline)
             throw new IllegalStateException(
               s"collection $name: writer lock held past ${lockWaitMs}ms " +
                 s"by a live peer (${p})")
           else Thread.sleep(50)
       }
     }
+    // a stale lock's writer is dead or will find its lock gone before it
+    // commits, so its staged batch is debris only the stealer knows of
+    (stolen - lockToken).foreach(t => deleteRecursively(stagingPath(name, t)))
   }
+
+  /** A writer's per-token staging directory (see `swapBuckets`). */
+  private def stagingPath(name: String, token: String) =
+    Paths.get(dir(name) + s".__tmp-$token")
 
   // ---- snapshot manifest -------------------------------------------------
   //
@@ -561,18 +573,24 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
       touched: Set[Int]): Boolean = {
     // per-instance staging dir: a peer that stole the lock must never
     // overwrite OUR staging output mid-write
-    val tmp = dir(name) + s".__tmp-$lockToken"
-    latest.write.mode(SaveMode.Overwrite)
-      .partitionBy("__bucket").parquet(tmp)
-    killPoint(1)
+    val tmp = stagingPath(name, lockToken)
     // the staging write is the long pole: if a peer declared us stale
     // during it, the stored state is no longer what we merged against —
-    // abandon the staging output and let the caller retry
-    if (!ownsLock(name)) { deleteRecursively(Paths.get(tmp)); return false }
+    // abandon the staging output and let the caller retry. The peer
+    // removes our staging dir, so the write itself may fail then: that
+    // is the same lost lock, not an error
+    try latest.write.mode(SaveMode.Overwrite)
+      .partitionBy("__bucket").parquet(tmp.toString)
+    catch {
+      case _: Exception if !ownsLock(name) =>
+        deleteRecursively(tmp); return false
+    }
+    killPoint(1)
+    if (!ownsLock(name)) { deleteRecursively(tmp); return false }
     val target = Paths.get(dir(name))
     Files.createDirectories(target)
     val moved: Map[Int, Seq[String]] = touched.toSeq.map { b =>
-      val src = Paths.get(tmp, s"__bucket=$b")
+      val src = tmp.resolve(s"__bucket=$b")
       // a touched bucket can end empty (all its rows were later deleted
       // upstream) — no staged dir just empties its live list
       if (!Files.exists(src)) b -> Seq.empty[String]
@@ -593,7 +611,7 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     // manifest swap below assume exclusive ownership — if a peer stole
     // the lock during the moves, abandon (our moved files are unreferenced
     // debris the peer's next commit GCs) and retry against their result
-    if (!ownsLock(name)) { deleteRecursively(Paths.get(tmp)); return false }
+    if (!ownsLock(name)) { deleteRecursively(tmp); return false }
     // the generation CAS inside commit() is the real fence: even a writer
     // that passes the ownsLock look above but is beaten to the manifest
     // slot backs off with nothing destroyed (its moved files are
@@ -602,7 +620,7 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
       live = (m.live -- touched) ++ moved.filter(_._2.nonEmpty),
       nowRetired = touched.toSeq.flatMap(b => m.live.getOrElse(b, Nil)),
       schemaJson = storedSchemaJson(latest))
-    deleteRecursively(Paths.get(tmp))
+    deleteRecursively(tmp)
     committed
   }
 
@@ -654,11 +672,19 @@ final class ParquetCollectionIo(spark: SparkSession, root: String, inner: Io,
     true
   }
 
+  /** Tolerates a peer deleting the same tree concurrently. */
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
+    if (Files.isDirectory(p)) {
+      val children =
+        try {
+          val stream = Files.list(p)
+          try stream.iterator().asScala.toVector finally stream.close()
+        } catch { case _: java.nio.file.NoSuchFileException => Vector.empty }
+      children.foreach(deleteRecursively)
+    }
+    try Files.deleteIfExists(p)
+    catch { case _: java.nio.file.DirectoryNotEmptyException => () }
   }
 }
 

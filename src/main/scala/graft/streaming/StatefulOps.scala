@@ -33,27 +33,48 @@ object StatefulOps {
     */
   val DefaultMaxPerBand: Int = 4096
 
-  /** `transformWithState` needs a multi-column-family store — RocksDB
-    * (also the right call at 100 TB: off-heap state, incremental
-    * checkpoints). Set as the session's streaming state backend when the
-    * user hasn't configured one EXPLICITLY — an explicit choice is
-    * respected (an incompatible one fails the transformWithState query
-    * with Spark's own error, rather than us silently flipping the
-    * backend under checkpoints that were written with it).
+  /** The streaming session defaults, each set only where the user has
+    * not set the key EXPLICITLY — an explicit choice is respected (an
+    * incompatible one fails with Spark's own error, rather than us
+    * silently flipping a setting under checkpoints written with it):
+    *
+    *  - state store provider: RocksDB. `transformWithState` needs a
+    *    multi-column-family store (also the right call at 100 TB:
+    *    off-heap state, incremental checkpoints);
+    *  - RocksDB changelog checkpointing: a state commit uploads one
+    *    changelog file instead of the store's new SST files, which a
+    *    background snapshot uploads later;
+    *  - `fs.AbstractFileSystem.file.impl`: [[NioLocalFs]], but only in
+    *    place of Hadoop's stock `LocalFs`. A `file:` checkpoint's offset,
+    *    commit and source logs and state commits then create and rename
+    *    without forking a `chmod` or `readlink` per file. A value in the
+    *    session or in the context's Hadoop configuration (`spark.hadoop.*`)
+    *    is the user's and is kept.
     *
     * `AppRunner.run` calls this once at entry, so every query of a run
     * uses ONE provider regardless of which parts use timers and in what
     * order they compile — a mid-run flip would strand earlier queries'
     * checkpoints on a different state format than a restart would pick.
     */
-  def ensureRocksDb(spark: SparkSession): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // RuntimeConfig.get with a fallback returns the EXPLICIT value only
-    // (the registered default doesn't shadow the fallback)
-    if (spark.conf.get(key, "").isEmpty)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
+  def streamingDefaults(spark: SparkSession): Unit = {
+    // getAll holds the explicitly set entries only
+    val explicit = spark.conf.getAll
+    def setUnlessExplicit(key: String, value: String): Unit =
+      if (!explicit.contains(key)) spark.conf.set(key, value)
+    setUnlessExplicit("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
+    setUnlessExplicit(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "true")
+    // the context's value counts as unset only while it is Hadoop's own
+    // default, read from core-default.xml
+    val fsKey = "fs.AbstractFileSystem.file.impl"
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    if (hadoop.get(fsKey) == NioLocalFs.StockImpl &&
+        Option(hadoop.getPropertySources(fsKey))
+          .forall(_.forall(_ == "core-default.xml")))
+      setUnlessExplicit(fsKey, classOf[NioLocalFs].getName)
   }
 
   /** Does this plan contain a processing-time transformWithState stage?
@@ -102,7 +123,7 @@ object StatefulOps {
   def deduplicate(df: DataFrame, key: Column,
       cacheWindowMs: Option[Long]): DataFrame = {
     val spark = df.sparkSession
-    ensureRocksDb(spark)
+    streamingDefaults(spark)
     import spark.implicits._
     val schema = df.schema
     val ord =
@@ -143,7 +164,7 @@ object StatefulOps {
   def windowJoin(left: DataFrame, right: DataFrame,
       windowMs: Option[Long]): DataFrame = {
     val spark = left.sparkSession
-    ensureRocksDb(spark)
+    streamingDefaults(spark)
     val types = Seq(left, right).map(_.schema(1).dataType)
     def packed(df: DataFrame, side: Int): DataFrame = {
       val Array(k, p, ts) = df.columns
@@ -250,7 +271,7 @@ object StatefulOps {
     require(maxDist >= 0 && maxDist < 64,
       s"deduplicateNear: maxDist must be in [0, 64), got $maxDist")
     val spark = df.sparkSession
-    ensureRocksDb(spark)
+    streamingDefaults(spark)
     import spark.implicits._
     val schema = df.schema
     val ord =
@@ -382,7 +403,7 @@ object StatefulOps {
   def per(payload: DataFrame, amount: Int, as: String,
       timeoutMs: Option[Long]): DataFrame = {
     val spark = payload.sparkSession
-    ensureRocksDb(spark)
+    streamingDefaults(spark)
     import spark.implicits._
     payload.as[String]
       .groupByKey(_ => 0)
@@ -430,7 +451,7 @@ object StatefulOps {
     */
   def delayViaTimers(packed: DataFrame): DataFrame = {
     val spark = packed.sparkSession
-    ensureRocksDb(spark)
+    streamingDefaults(spark)
     import spark.implicits._
     packed
       .select(col("topic"), col("delayMs"), col("key"), col("json"),
@@ -474,7 +495,7 @@ object StatefulOps {
   def delayViaEventTimers(packed: DataFrame, latenessMs: Long,
       deadLetterTopic: Option[String] = None): DataFrame = {
     val spark = packed.sparkSession
-    ensureRocksDb(spark)
+    streamingDefaults(spark)
     import spark.implicits._
     val stamped = packed
       .select(col("topic"),

@@ -243,7 +243,7 @@ final class FileStreamIo(root: String, schemas: Map[String, StructType],
   /** `FileStreamSource.getBatch` re-lists with `min(files, parallelism)`
     * tasks past the 32-path threshold (default parallelism 10000). Set
     * before each query starts, so the query's cloned session copies it;
-    * a user's value is kept, as `StatefulOps.ensureRocksDb` keeps an
+    * a user's value is kept, as `StatefulOps.streamingDefaults` keeps an
     * explicit state store.
     */
   private def capListingParallelism(spark: SparkSession): Unit = {

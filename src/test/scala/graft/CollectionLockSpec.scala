@@ -18,6 +18,30 @@ class CollectionLockSpec extends AnyFunSuite {
   import scala.concurrent.duration._
   import scala.concurrent.ExecutionContext.Implicits.global
 
+  /** Staging directories (`c.__tmp-<writer token>`) under `root`. */
+  private def stagingDirs(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val stream = Files.list(Paths.get(root))
+    try stream.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("c.__tmp-")).toVector
+    finally stream.close()
+  }
+
+  /** A thrown kill point releases the victim's lock on its way out; a
+    * killed process would leave it behind. Put it back under the
+    * victim's token (its staging dir's suffix), aged past lockStaleMs,
+    * so the successor steals it as it would in production.
+    */
+  private def leaveDeadLock(root: String): Unit = {
+    val staged = stagingDirs(root)
+    assert(staged.size == 1, s"the victim's staging dir: $staged")
+    val lock = Paths.get(s"$root/c.__lock")
+    Files.writeString(lock, staged.head.stripPrefix("c.__tmp-"))
+    Files.setLastModifiedTime(lock,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 3600_000))
+  }
+
   test("two writer instances interleave without losing updates") {
     val root = Files.createTempDirectory("graft-lock").toString
     val a = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
@@ -94,6 +118,27 @@ class CollectionLockSpec extends AnyFunSuite {
     assert(!Files.exists(lock))
   }
 
+  test("a staging write that fails after a steal backs off and retries") {
+    val root = Files.createTempDirectory("graft-preempt").toString
+    val io = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
+    import spark.implicits._
+    import org.apache.spark.sql.functions.udf
+    io.upsert("c", Seq(("a", 1)).toDF("_id", "v"))
+    // inside the staging write a peer steals the lock (and would remove
+    // the staging dir), so the write fails; the peer's lock is aged so
+    // the retry may steal it back at once
+    CollectionLockSpec.stealOnce(Paths.get(s"$root/c.__lock").toString)
+    val stealing = udf((i: Int) => { CollectionLockSpec.stealIfArmed(); i })
+    // a range, not a local relation: the optimizer folds a UDF over
+    // local rows at planning time, before the staging write
+    io.upsert("c", spark.range(1).select(org.apache.spark.sql.functions
+      .lit("b").as("_id"), stealing(col("id").cast("int") + 2).as("v")))
+    assert(!CollectionLockSpec.armed.get, "the staging write never ran")
+    assert(io.source(spark, "collection", "c").select("_id").as[String]
+      .collect().toSet == Set("a", "b"))
+    assert(stagingDirs(root).isEmpty, stagingDirs(root).toString)
+  }
+
   test("a live peer's lock is honored until lockWaitMs, then fails loudly") {
     val root = Files.createTempDirectory("graft-held").toString
     val lock = Paths.get(s"$root/c.__lock")
@@ -142,10 +187,7 @@ class CollectionLockSpec extends AnyFunSuite {
       intercept[Boom] {
         victim.upsert("c", Seq(("mid", 1)).toDF("_id", "v"))
       }
-      // crash debris may hold the dead victim's lock: a later writer
-      // steals it after lockStaleMs; for the test, clear it like a
-      // supervisor would
-      Files.deleteIfExists(Paths.get(s"$root/c.__lock"))
+      leaveDeadLock(root)
       // a concurrent reader sees EXACTLY one committed generation:
       // before the CAS (kill 1, 2) the old snapshot, after it (kill 3)
       // the new one — never an error, never a mix
@@ -164,6 +206,8 @@ class CollectionLockSpec extends AnyFunSuite {
       // at most two generation files survive (N and N-1): unbounded
       // growth would re-introduce the listing cost the manifest avoids
       assert(w2.genManifests("c").size <= 2)
+      // the stealer removed the dead victim's staged batch
+      assert(stagingDirs(root).isEmpty, s"kill@$kill: ${stagingDirs(root)}")
     }
   }
 
@@ -183,7 +227,7 @@ class CollectionLockSpec extends AnyFunSuite {
       intercept[Boom] {
         victim.upsert("c", Seq(("mid", 1)).toDF("_id", "v"))
       }
-      Files.deleteIfExists(Paths.get(s"$root/c.__lock"))
+      leaveDeadLock(root)
       val reader = new ParquetCollectionIo(spark, root, new TestIo(Map.empty))
       if (kill < 3) {
         val e = intercept[IllegalStateException](ids(reader))
@@ -209,6 +253,22 @@ class CollectionLockSpec extends AnyFunSuite {
       }
       assert(onDisk.subsetOf(listed),
         s"kill@$kill unlisted files: ${onDisk -- listed}")
+      assert(stagingDirs(root).isEmpty, s"kill@$kill: ${stagingDirs(root)}")
     }
   }
+}
+
+object CollectionLockSpec {
+  /** The lock a staging-write task steals once, from inside the task. */
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile private var lock = ""
+  def stealOnce(lockFile: String): Unit = { lock = lockFile; armed.set(true) }
+  def stealIfArmed(): Unit =
+    if (armed.compareAndSet(true, false)) {
+      val p = Paths.get(lock)
+      Files.writeString(p, "peer-token")
+      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - 3600_000))
+      throw new IllegalStateException("staging dir removed by the stealer")
+    }
 }

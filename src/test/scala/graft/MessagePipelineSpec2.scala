@@ -272,6 +272,24 @@ class VariantTypeSpec extends AnyFunSuite {
     assert(out("d").get("t").asText() == "object")
   }
 
+  test("schemaless comparison with a null literal answers as on typed frames") {
+    // the variant side used to be cast to the literal's NullType, which
+    // failed analysis (CAST_WITHOUT_SUGGESTION: VARIANT to VOID)
+    val pipeline = Js.parse(
+      """[{"$set":{"eq":{"$eq":["$n",null]},"ne":{"$ne":["$n",null]},
+           "gt":{"$gt":["$n",null]}}}]""")
+    val message = Seq("""{"_id":"a","n":5}""").toDF("value")
+      .select(get_json_object(col("value"), "$._id").as("key"), col("value"))
+    val m = Pipeline.compile(pipeline, Env(spark))(message)
+      .select("value").as[String].collect().map(Js.parse).head
+    val typed = Pipeline.compile(pipeline, Env(spark))(
+      Seq(("a", 5L)).toDF("_id", "n")).select("eq", "ne", "gt").head()
+    assert(Seq(typed.getBoolean(0), typed.getBoolean(1), typed.getBoolean(2))
+      == Seq(false, true, true))
+    assert(Seq("eq", "ne", "gt").map(f => m.get(f).asBoolean()) ==
+      Seq(false, true, true))
+  }
+
   test("schemaless $in: Mongo equality over variant arrays, null bracket") {
     val df = Seq(
       """{"_id":"a","arr":[1,2,"b"],"withNull":[1,null],"x":2}""")

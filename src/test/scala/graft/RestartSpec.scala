@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.json.Js
 import graft.op.Env
-import graft.streaming.{AppRunner, GoldenTest, Io}
+import graft.streaming.{AppRunner, GoldenTest, Io, NioLocalFs}
 import scala.jdk.CollectionConverters._
 
 /** Crash/resume soak (reference resume tokens, App.java:1056-1081 →
@@ -99,53 +99,102 @@ class RestartSpec extends AnyFunSuite {
     io.drainAndStop()
   }
 
-  test("app35 aggregate resumes mid-stream from checkpoints") {
-    val work = Files.createTempDirectory("graft-restart")
-    val srcRoot = work.resolve("in")
-    val outRoot = work.resolve("out")
-    val ckptRoot = work.resolve("ckpt")
-    val srcDir = srcRoot.resolve(commandTopic)
+  private lazy val inputs = Files.list(
+    appDir.resolve(s"test/topics/from/$commandTopic"))
+    .iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+  private lazy val expectedTopics = Files.list(appDir.resolve("test/topics/to"))
+    .iterator().asScala.toSeq.filter(Files.isDirectory(_))
+    .map(_.getFileName.toString)
 
-    val inputs = Files.list(
-      appDir.resolve(s"test/topics/from/$commandTopic"))
-      .iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+  /** Every message a run wrote to `topic` under `outRoot`. */
+  private def written(outRoot: Path, topic: String) = {
+    val outDir = outRoot.resolve(topic)
+    if (!Files.exists(outDir)) Nil
+    else spark.read.schema("key string, value string").json(outDir.toString)
+      .select("value").collect().map(r => Js.parse(r.getString(0))).toSeq
+  }
+
+  /** Half the command stream, the "crash" (all queries stopped; state
+    * lives only in the checkpoints), then a NEW runner over the same
+    * dirs with the rest; `beforePhase(n, checkpointRoot)` runs ahead of
+    * phase n. Returns the work dir (`out/`, `ckpt/`).
+    */
+  private def splitRun(name: String,
+      beforePhase: (Int, Path) => Unit = (_, _) => ()): Path = {
+    val work = Files.createTempDirectory(name)
+    val (srcRoot, outRoot, ckptRoot) =
+      (work.resolve("in"), work.resolve("out"), work.resolve("ckpt"))
+    val srcDir = srcRoot.resolve(commandTopic)
     assert(inputs.size >= 4, "fixture must have enough commands to split")
     val (phase1, phase2) = inputs.splitAt(inputs.size / 2)
-
-    val expectedTopics = Files.list(appDir.resolve("test/topics/to"))
-      .iterator().asScala.toSeq.filter(Files.isDirectory(_))
-      .map(_.getFileName.toString)
-
-    // phase 1: half the command stream, then the "crash" (all queries
-    // stopped; state lives only in the checkpoints)
+    beforePhase(1, ckptRoot)
     stage(phase1, srcDir, from = 0)
     runPhase(new ResumableIo(srcRoot, outRoot, ckptRoot), expectedTopics)
-
-    // phase 2: the rest of the stream, a NEW runner over the same dirs
+    beforePhase(2, ckptRoot)
     stage(phase2, srcDir, from = phase1.size)
     runPhase(new ResumableIo(srcRoot, outRoot, ckptRoot), expectedTopics)
+    work
+  }
+
+  private def changelogs(ckptRoot: Path): Long = Files.walk(ckptRoot)
+    .filter(_.getFileName.toString.endsWith(".changelog")).count()
+
+  test("app35 aggregate resumes mid-stream from checkpoints") {
+    val outRoot = splitRun("graft-restart").resolve("out")
 
     // union of both phases must equal the golden expectations exactly
     val results = expectedTopics.map { t =>
       val expected = Files.list(appDir.resolve(s"test/topics/to/$t"))
         .iterator().asScala.toSeq.sortBy(_.getFileName.toString)
         .map(Files.readString(_))
-      val outDir = outRoot.resolve(t)
-      val actual =
-        if (!Files.exists(outDir)) Nil
-        else spark.read.schema("key string, value string").json(outDir.toString)
-          .select("value").collect().map(r => Js.parse(r.getString(0))).toSeq
-      GoldenTest.compare(t, expected, actual, strict = false)
+      GoldenTest.compare(t, expected, written(outRoot, t), strict = false)
     }
     results.foreach(r => assert(r.ok, s"${r.topic}: ${r.detail}"))
 
     // resume really resumed: phase-1 files were not reprocessed (no
     // duplicate replies) and _seq continued across the restart
-    val replies = spark.read.schema("key string, value string")
-      .json(outRoot.resolve("plusminus2-counter-reply").toString)
-      .select("value").collect().map(r => Js.parse(r.getString(0)))
+    val replies = written(outRoot, "plusminus2-counter-reply")
     val seqs = replies.flatMap(v => Option(v.get("_seq")).map(_.asLong()))
     assert(seqs.distinct.length == seqs.length,
       s"duplicate _seq after resume: ${seqs.mkString(",")}")
+  }
+
+  test("a checkpoint written under stock settings resumes under the " +
+      "streaming defaults") {
+    val fsKey = "fs.AbstractFileSystem.file.impl"
+    val changelogKey =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    // phase 1: Hadoop's forking LocalFs and snapshot-per-commit state, as
+    // a checkpoint written before the defaults; phase 2: the defaults
+    val work =
+      try {
+        val w = splitRun("graft-restart-compat", {
+          case (1, _) =>
+            spark.conf.set(fsKey, NioLocalFs.StockImpl)
+            spark.conf.set(changelogKey, "false")
+          case (_, ckptRoot) =>
+            assert(changelogs(ckptRoot) == 0, "phase 1 ran with changelogs")
+            spark.conf.unset(fsKey)
+            spark.conf.unset(changelogKey)
+        })
+        assert(spark.conf.get(fsKey) == classOf[NioLocalFs].getName)
+        assert(spark.conf.get(changelogKey) == "true")
+        w
+      } finally { // the session is shared: never leave phase 1's values
+        spark.conf.unset(fsKey)
+        spark.conf.unset(changelogKey)
+      }
+    assert(changelogs(work.resolve("ckpt")) > 0, "phase 2 wrote no changelog")
+    val whole = Files.createTempDirectory("graft-restart-whole")
+    val srcDir = whole.resolve("in").resolve(commandTopic)
+    stage(inputs, srcDir, from = 0)
+    runPhase(new ResumableIo(whole.resolve("in"), whole.resolve("out"),
+      whole.resolve("ckpt")), expectedTopics)
+    expectedTopics.foreach { t =>
+      val r = GoldenTest.compare(t,
+        written(whole.resolve("out"), t).map(Js.render),
+        written(work.resolve("out"), t), strict = true)
+      assert(r.ok, s"${r.topic}: ${r.detail}")
+    }
   }
 }
